@@ -478,13 +478,14 @@ def _bench_skew(spark, qs, src_dir: str) -> dict | None:
             print(f"# t15 hot-chunk bench failed: {e}", file=sys.stderr)
         # cpus/attempt ride along so a retry at reduced threads is
         # compared like-for-like against the 32-thread headline instead
-        # of misreading as a ~2x skew regression.
+        # of misreading as a ~2x skew regression.  cpus is the session's
+        # measured defaultParallelism, not the requested thread count.
         return {
             "queries": times,
             "spread": spreads,
             "tmean": tmeans,
             "input": skew_input,
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": spark.sparkContext.defaultParallelism,
             "attempt": int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPT", "0")),
             **cc_stats,
         }
@@ -1220,7 +1221,7 @@ def _run_block(block: str, sf_dir: str) -> int:
                     "spread": s1,
                     "tmean": tm1,
                     "sf": 1.0,
-                    "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                    "cpus": spark.sparkContext.defaultParallelism,
                     "attempt": int(
                         os.environ.get("SPARK_GRAFT_BENCH_ATTEMPT", "0")
                     ),
@@ -1284,7 +1285,7 @@ def _run_block(block: str, sf_dir: str) -> int:
         out = _bench_etl(spark, target_mb=77.0 * sf / 0.1)
         # cpus/attempt ride along (cf. the sf1 block) so a reduced-
         # thread last-resort retry is visible next to its numbers.
-        out["etl_cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        out["etl_cpus"] = spark.sparkContext.defaultParallelism
         out["etl_attempt"] = int(
             os.environ.get("SPARK_GRAFT_BENCH_ATTEMPT", "0")
         )

@@ -337,24 +337,27 @@ def isin_map_value(k: Column) -> Column:
 
 
 def to_int_value(k: Column, v: Column) -> Column:
-    """int(float(v)) for TO_INT_LST keys, null otherwise/on garbage."""
+    """int(float(v)) for TO_INT_LST keys, null otherwise/on garbage.
+    ``try_cast``, not ``cast``: under ANSI mode (Spark 4's default) a
+    non-numeric value such as ``lanes=v1`` would abort the job."""
     return F.when(
-        k.isin(*TO_INT_LST), v.cast("double").cast("long")
+        k.isin(*TO_INT_LST), v.try_cast("double").try_cast("long")
     ).otherwise(F.lit(None).cast("long"))
 
 
 def to_float_value(k: Column, v: Column) -> Column:
     """float(v) for TO_FLOAT_LST keys with the reference's guards:
     '3s' -> 3.0 for building:levels; skip values containing quotes
-    (feet/inch notation) for maxheight."""
+    (feet/inch notation) for maxheight.  Garbage gives null
+    (``try_cast``, as in :func:`to_int_value`)."""
     guarded = (
         F.when((k == "building:levels") & (v == "3s"), F.lit(3.0))
         .when(
             (k == "maxheight") & ~(v.contains('"') | v.contains("'")),
-            v.cast("double"),
+            v.try_cast("double"),
         )
         .when(k == "maxheight", F.lit(None).cast("double"))
-        .otherwise(v.cast("double"))
+        .otherwise(v.try_cast("double"))
     )
     return F.when(k.isin(*TO_FLOAT_LST), guarded).otherwise(F.lit(None).cast("double"))
 

@@ -191,10 +191,10 @@ def _auto_prune(
         return False
     stats = doc.get("file_stats", {})
     rows = sum(int(s.get("rows", 0)) for s in stats.values())
-    conf = doc.get("bloom_conf") or {}
-    bpk = conf.get("bpk")
-    cap = float(conf.get("mcap") or _BLOOM_BITS_MAX)
-    if bpk and rows / n_files * float(bpk) > cap:
+    conf = doc.get("bloom_conf")
+    if conf and rows / n_files * float(conf["bpk"]) > float(
+        conf.get("mcap") or _BLOOM_BITS_MAX
+    ):
         return False  # capped filters cannot refute a batch probe
     eff = _eff_cal(doc, cal)
     scan_s = rows * eff["us_per_row"] / 1e6
@@ -518,9 +518,9 @@ class LshBucketStore:
             counts, "bk", touch_envelope=(pre + "|", pre + "}")
         )
         if doc["files_rewritten"]:
-            # backstop only (e.g. stats-less legacy files made the
-            # pre-check inconclusive) -- the pre-commit check above is
-            # the real guard.
+            # backstop only (e.g. files without bk footer bounds made
+            # the pre-check inconclusive) -- the pre-commit check above
+            # is the real guard.
             raise AssertionError(
                 "LSH index append rewrote a delta -- ingest ids must "
                 "be unique and monotone (key prefix collision)"

@@ -57,6 +57,15 @@ so the engine's upsert path runs end-to-end in any environment:
   writers' not-yet-committed files; commit metadata is never
   rewritten, so history stays auditable past the horizon.
 
+On-disk format: every commit doc is written by :meth:`CowTable._commit`
+and carries ``format_version`` (:data:`FORMAT_VERSION`), the snapshot's
+``files``, their footer ``file_stats``, the table ``schema`` and the
+cumulative per-app ``txn`` high-water map, so any one doc answers
+snapshot, schema and idempotence questions on its own.  A doc without
+the current ``format_version`` raises
+:class:`UnsupportedTableFormatError`; there is no migration -- re-create
+the table.
+
 This is the at-scale form of the reference's in-place
 ``update_many``/``find_one_and_update`` writes
 (mongo_audit.py:33-35,235-268) for environments without a
@@ -70,6 +79,7 @@ import contextlib
 import json
 import os
 import re as _re
+import threading
 import time
 import uuid
 
@@ -89,6 +99,30 @@ class ConcurrentMergeConflictError(ConcurrentWriteError):
     conflict is surfaced instead (Delta's ConcurrentDeleteReadException
     analogue).  Raised by the ``retries=`` rebase loop; disjoint
     concurrent commits rebase transparently and never see this."""
+
+
+#: The commit-doc format every writer stamps (see the module docstring).
+FORMAT_VERSION = 1
+
+
+class UnsupportedTableFormatError(RuntimeError):
+    """A commit doc was not written in :data:`FORMAT_VERSION` (an older
+    log, or a newer writer).  Deliberately not a ValueError: callers
+    that treat a corrupt doc as "absent" must not swallow this.  The
+    only migration is re-creating the table."""
+
+    def __init__(self, path: str, version: int, found):
+        self.path, self.version, self.found = path, version, found
+        super().__init__(
+            f"commit v{version} of CowTable {path} has format_version "
+            f"{found!r}; this reader supports only {FORMAT_VERSION} -- "
+            "re-create the table to read it"
+        )
+
+
+class ChangesVacuumedError(ValueError):
+    """``read_changes`` over a range whose change or data files
+    ``vacuum`` already removed; names the first unreadable version."""
 
 
 # Commits at or below this many files harvest footer stats in-process;
@@ -145,12 +179,10 @@ _MERGE_BROADCAST_MAX_KEYS = 1_000_000
 _MERGE_BROADCAST_MAX_BYTES = 64 << 20
 
 # A checkpoint manifest is written every this-many commits (Delta's
-# _last_checkpoint analogue), bounding every metadata walk -- vacuum's
-# ever-referenced set, legacy schema backfill, txn high-water lookups
-# on pre-txn logs -- to O(interval) commit reads instead of
-# O(versions).  At one commit per streaming micro-batch a table
-# accrues versions forever; without this, every snapshot resolution
-# would creep linearly with table age.
+# _last_checkpoint analogue), bounding vacuum's ever-referenced walk
+# to O(interval) commit reads instead of O(versions).  At one commit
+# per streaming micro-batch a table accrues versions forever; every
+# other metadata question is one commit-doc read.
 _CHECKPOINT_INTERVAL = 10
 
 
@@ -253,13 +285,12 @@ def _file_footer_stats(path: str) -> dict:
 # filter index; same mechanism here: at commit time each NEW data file
 # gets a small Bloom filter over the key column (executor-side,
 # column-pruned read), stored in its OWN ``.bf.json`` sidecar the
-# commit doc references by name (r17; pre-r17 commits stored all
-# filters in one monolith, still readable -- see _bloom_index).
-# ``read_point`` then skips every file whose filter proves the key
-# absent -- no false negatives by construction, false positives only
-# cost a scan.  Sidecars are derived metadata like checkpoints:
-# losing-writer orphans and expired ones are GC'd by vacuum, and a
-# missing sidecar just means no skipping.
+# commit doc references by name.  ``read_point`` then skips every file
+# whose filter proves the key absent -- no false negatives by
+# construction, false positives only cost a scan.  Sidecars are
+# derived metadata like checkpoints: losing-writer orphans and expired
+# ones are GC'd by vacuum, and a missing sidecar just means no
+# skipping.
 
 _BLOOM_BITS_DEFAULT = 8192  # FLOOR bits per file; fpp ~1% at ~850 keys
 _BLOOM_K_DEFAULT = 5
@@ -416,16 +447,10 @@ def _file_bloom(path: str, col: str, conf: dict) -> dict:
     sidecar hex format at the end."""
     import pyarrow.parquet as pq
 
-    k = int(conf.get("k", _BLOOM_K_DEFAULT))
-    bpk = int(conf.get("bpk", _BLOOM_BITS_PER_KEY))
+    k, bpk = int(conf["k"]), int(conf["bpk"])
     cap = int(conf.get("mcap") or _BLOOM_BITS_MAX)
     table = pq.read_table(path, columns=[col])
-    m = _bloom_size(
-        table.num_rows,
-        bpk,
-        int(conf.get("m", _BLOOM_BITS_DEFAULT)),
-        cap,
-    )
+    m = _bloom_size(table.num_rows, bpk, int(conf["m"]), cap)
     if table.num_rows > 0 and table.num_rows * bpk > cap:
         # The 1 MiB cap bit: this file gets fewer effective bits/key
         # than the conf requested, and the conf's k -- tuned for the
@@ -449,18 +474,8 @@ def _file_bloom(path: str, col: str, conf: dict) -> dict:
     return {"h": f"{int.from_bytes(buf, 'little'):x}", "m": m, "k": k}
 
 
-def _bloom_entry(e, doc: dict) -> tuple[str, int, int]:
-    """Normalize a sidecar file entry to ``(hex_bits, m, k)``.  New
-    sidecars store per-file dicts; legacy entries were bare hex
-    strings sized by the sidecar-wide conf -- both stay readable (a
-    carried file keeps its original entry verbatim forever)."""
-    if isinstance(e, str):
-        return e, int(doc["m"]), int(doc["k"])
-    return e["h"], int(e["m"]), int(e["k"])
-
-
 #: Process-level cache of DECODED sidecar bitmaps, keyed by
-#: (log_dir, sidecar name[, basename for legacy-monolith entries]).
+#: (log_dir, sidecar name).
 #: Safe by construction: sidecars are immutable once written
 #: (token-named, atomic tmp+rename, never rewritten), so a decoded
 #: buffer can never go stale.  Bounded by total buffer BYTES
@@ -489,22 +504,17 @@ class _BloomIndex:
     (:meth:`CowTable._bloom_index`).  ``entry(basename)`` returns the
     DECODED ``(buf, m, k)`` or None, loading per-file ``.bf.json``
     sidecars on first access (memoized per instance + the process-
-    level ``_BLOOM_BUF_CACHE`` across instances) and falling back to
-    the legacy monolith's map for files written before the per-file
-    switch.  A corrupt entry -- unreadable JSON, non-hex payload, or
-    a payload wider than its recorded m -- decodes to None here, in
-    ONE place, so every probe path uniformly treats it as "no
-    skipping" instead of crashing (ADVICE r17).  Probe cost is
-    O(candidates consulted), never O(index): a range-refuted file's
-    sidecar is never opened."""
+    level ``_BLOOM_BUF_CACHE`` across instances).  A corrupt entry --
+    unreadable JSON, non-hex payload, or a payload wider than its
+    recorded m -- decodes to None here, in ONE place, so every probe
+    path uniformly treats it as "no skipping" instead of crashing
+    (ADVICE r17).  Probe cost is O(candidates consulted), never
+    O(index): a range-refuted file's sidecar is never opened."""
 
-    def __init__(
-        self, log_dir: str, col: str, legacy: dict | None, names: dict
-    ):
+    def __init__(self, log_dir: str, col: str, names: dict):
         self.col = col
         self._log_dir = log_dir
-        self._legacy = legacy or {}
-        self._names = names or {}
+        self._names = names
         self._cache: dict = {}
 
     def entry(self, basename: str):
@@ -525,18 +535,6 @@ class _BloomIndex:
                         _bloom_buf_cache_put(ck, out)
                 except (OSError, ValueError, KeyError):
                     out = None  # corrupt/unreadable: no skip, no error
-        if out is None:
-            e = self._legacy.get("files", {}).get(basename)
-            if e is not None:
-                ck = (self._log_dir, "#legacy", basename)
-                out = _BLOOM_BUF_CACHE.get(ck)
-                if out is None:
-                    try:
-                        hx, m, k = _bloom_entry(e, self._legacy)
-                        out = (_bloom_buf(hx, m), m, k)
-                        _bloom_buf_cache_put(ck, out)
-                    except (ValueError, KeyError, TypeError):
-                        out = None
         self._cache[basename] = out
         return out
 
@@ -696,8 +694,8 @@ def _dv_or(a: bytes, b: bytes) -> bytes:
 def _dv_entry(buf: bytes) -> dict:
     """Encode a byte bitmap as a sidecar entry: ``{"dead": n, "pos":
     [...]}`` for small vectors, ``{"dead": n, "bits": hex}`` past
-    ``_DV_POS_LIST_MAX`` dead rows (hex stays the legacy big-int
-    format so old and new writers/readers interoperate)."""
+    ``_DV_POS_LIST_MAX`` dead rows (the big-int hex form
+    ``f"{bits:x}"`` that :func:`_dv_bits` decodes)."""
     as_int = int.from_bytes(buf, "little")
     n = as_int.bit_count()
     if n <= _DV_POS_LIST_MAX:
@@ -852,10 +850,14 @@ def _release_pinned(df) -> None:
 #: carry per-file stats -- at 1e5-1e6 files a doc is tens of MB of
 #: JSON, and one mutation used to re-parse the head doc 6-10 times
 #: (version/files/schema/dv/bloom walks).  The stat() per hit is the
-#: whole validation cost.  Bounded; eviction is always safe.
+#: whole validation cost.  Bounded; eviction is always safe.  Only
+#: docs that pass the format check are cached; lookup, format check,
+#: evict and insert run under ``_DOC_CACHE_LOCK`` (parsing does not,
+#: so concurrent readers of different docs never serialize on JSON).
 #: CONSUMERS MUST NOT MUTATE returned docs (audited: none do).
 _DOC_CACHE: dict = {}
 _DOC_CACHE_MAX = 8
+_DOC_CACHE_LOCK = threading.Lock()
 
 
 def _log_dir(path: str) -> str:
@@ -896,13 +898,22 @@ class CowTable:
         return max((int(n[:8]) for n in names), default=-1)
 
     def _commit_doc(self, version: int) -> dict:
+        """The parsed commit doc of ``version``, memoized process-wide
+        (``_DOC_CACHE``).  Raises :class:`UnsupportedTableFormatError`
+        for a doc not written in :data:`FORMAT_VERSION`."""
         p = _commit_path(self.path, version)
         st = os.stat(p)  # FileNotFoundError = OSError, as open() raised
         key = (p, st.st_mtime_ns, st.st_size)
-        doc = _DOC_CACHE.get(key)
-        if doc is None:
-            with open(p) as f:
-                doc = json.load(f)
+        with _DOC_CACHE_LOCK:
+            doc = _DOC_CACHE.get(key)
+        if doc is not None:
+            return doc
+        with open(p) as f:
+            doc = json.load(f)
+        with _DOC_CACHE_LOCK:
+            found = doc.get("format_version")
+            if found != FORMAT_VERSION:
+                raise UnsupportedTableFormatError(self.path, version, found)
             while len(_DOC_CACHE) >= _DOC_CACHE_MAX:
                 _DOC_CACHE.pop(next(iter(_DOC_CACHE)))
             _DOC_CACHE[key] = doc
@@ -917,41 +928,14 @@ class CowTable:
             raise FileNotFoundError(f"no CowTable at {self.path}")
         return self._commit_doc(v)["files"]
 
-    def _bloom_doc(self, doc: dict) -> dict | None:
-        """The LEGACY whole-index bloom sidecar a commit doc
-        references, or None.  Pre-r17 writers stored every file's
-        filter in one monolithic JSON; current commits reference one
-        small sidecar PER FILE (``bloom_files``) and only keep this
-        pointer alive while legacy-covered files remain in the
-        snapshot.  Derived metadata: unreadable/absent just means no
-        bloom skipping."""
-        name = doc.get("bloom_sidecar")
-        if not name:
-            return None
-        try:
-            with open(os.path.join(_log_dir(self.path), name)) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
     def _bloom_index(self, doc: dict, col: str) -> "_BloomIndex | None":
         """Lazy per-file access to the snapshot's bloom entries for
-        ``col``, or None when the snapshot has no index on that
-        column.  Spans both sidecar generations: per-file ``.bf.json``
-        names in the commit doc (current) and the legacy monolith
-        (``bloom_sidecar``) for files written before the switch --
-        a hybrid table migrates naturally as rewrites re-index files."""
-        names = doc.get("bloom_files") or {}
-        legacy = self._bloom_doc(doc) if doc.get("bloom_sidecar") else None
-        if not names and not legacy:
+        ``col`` (the per-file ``.bf.json`` names in the commit doc), or
+        None when the snapshot has no index on that column."""
+        names = doc.get("bloom_files")
+        if not names or (doc.get("bloom_conf") or {}).get("col") != col:
             return None
-        conf = doc.get("bloom_conf") or {}
-        icol = conf.get("col") or (legacy or {}).get("col")
-        if icol != col:
-            return None
-        if legacy is not None and legacy.get("col") != col:
-            legacy = None
-        return _BloomIndex(_log_dir(self.path), col, legacy, names)
+        return _BloomIndex(_log_dir(self.path), col, names)
 
     def _harvest_bloom_files(
         self, version: int, files: list[str], conf: dict,
@@ -963,11 +947,8 @@ class CowTable:
         Returns {basename: sidecar name} for the commit doc.
 
         This is the structure that keeps bloom maintenance O(delta) at
-        100 TB: the pre-r17 monolithic sidecar was REWRITTEN whole on
-        any file-set change -- a 1-file append on a 1e5-file,
-        1-MiB-filter index re-serialized ~everything -- and every
-        probe re-parsed it whole.  Per-file sidecars write only the
-        new files' filters and are loaded per-candidate at probe time.
+        100 TB: a commit writes only the new files' filters, and probes
+        load them per candidate, never the whole index.
         Same driver/executor split as :meth:`_harvest_file_stats`
         (column-pruned read; large commits fan out, and the WRITE
         happens executor-side too, so neither compute nor filter bytes
@@ -1025,31 +1006,24 @@ class CowTable:
         pairs = sc.parallelize(sorted(files), slices).map(build_one).collect()
         return dict(pairs)
 
-    def _maintain_bloom(self, version: int, files: list[str], stats: dict) -> dict:
+    def _maintain_bloom(
+        self, version: int, files: list[str], stats: dict, pdoc: dict
+    ) -> dict:
         """Carry the table's bloom index through a commit: inherit the
-        config from the parent commit (or take it from ``stats`` on
-        create), compute-and-write per-file sidecars ONLY for files no
-        existing sidecar covers (immutable files never recompute --
-        same carry-by-reference economics as file_stats; a carried
-        file keeps its sidecar NAME verbatim), and keep the legacy
-        monolith pointer alive only while it still covers a snapshot
-        file.  Commit cost is O(new files), never O(index).  Losing
-        racers' sidecars become grace-windowed orphans vacuum GCs."""
-        conf = stats.pop("bloom_conf", None)
-        pdoc: dict = {}
-        if version > 0:
-            try:
-                pdoc = self._commit_doc(version - 1)
-            except (OSError, ValueError):
-                pdoc = {}
-            conf = conf or pdoc.get("bloom_conf")
+        config from the parent commit ``pdoc`` (or take it from
+        ``stats`` on create), compute-and-write per-file sidecars ONLY
+        for files no parent sidecar covers (immutable files never
+        recompute -- same carry-by-reference economics as file_stats; a
+        carried file keeps its sidecar NAME verbatim).  Commit cost is
+        O(new files), never O(index).  Losing racers' sidecars become
+        grace-windowed orphans vacuum GCs."""
+        conf = stats.pop("bloom_conf", None) or pdoc.get("bloom_conf")
         if not conf:
             return stats
         col = conf["col"]
         base = {os.path.basename(f): f for f in files}
-        # A parent index on a DIFFERENT column is useless -- per-file
-        # names and the legacy monolith alike (ADVICE r17: carrying
-        # parent names without the col check left wrong-column
+        # A parent index on a DIFFERENT column is useless (ADVICE r17:
+        # carrying parent names without the col check left wrong-column
         # sidecars attached forever; entry() rejected them at probe
         # time, so those files silently lost pruning instead of being
         # re-indexed as "missing" here).  Each entry records its own
@@ -1058,32 +1032,16 @@ class CowTable:
         parent_names = (
             pdoc.get("bloom_files") or {} if parent_col == col else {}
         )
-        legacy = self._bloom_doc(pdoc) if pdoc.get("bloom_sidecar") else None
-        legacy_files = (
-            (legacy or {}).get("files", {})
-            if (legacy or {}).get("col") == col
-            else {}
-        )
-        missing = [
-            p
-            for b, p in base.items()
-            if b not in parent_names and b not in legacy_files
-        ]
-        fresh = (
-            self._harvest_bloom_files(
+        missing = [p for b, p in base.items() if b not in parent_names]
+        names = {b: parent_names[b] for b in base if b in parent_names}
+        if missing:
+            names.update(self._harvest_bloom_files(
                 version, missing, conf,
                 rows_hint=stats.get("file_stats"),
-            )
-            if missing
-            else {}
-        )
-        names = {b: parent_names[b] for b in base if b in parent_names}
-        names.update(fresh)
+            ))
         out = {**stats, "bloom_conf": conf}
         if names:
             out["bloom_files"] = names
-        if any(b in legacy_files and b not in names for b in base):
-            out["bloom_sidecar"] = pdoc["bloom_sidecar"]
         return out
 
     def _dv_doc(self, doc: dict) -> dict | None:
@@ -1113,7 +1071,9 @@ class CowTable:
             if int(e.get("dead", 0)) > 0
         }
 
-    def _maintain_dv(self, version: int, files: list[str], stats: dict) -> dict:
+    def _maintain_dv(
+        self, version: int, files: list[str], stats: dict, pdoc: dict
+    ) -> dict:
         """Carry the table's deletion vectors through a commit: carried
         files keep their parent entries (files are immutable, so a
         dead position stays dead until the file itself is rewritten),
@@ -1125,12 +1085,6 @@ class CowTable:
         ``NNNNNNNN-<token>.dv.json`` written before the commit link,
         reused by pointer when nothing changed, vacuum-GC'd."""
         updates: dict = stats.pop("dv_updates", None) or {}
-        pdoc: dict = {}
-        if version > 0:
-            try:
-                pdoc = self._commit_doc(version - 1)
-            except (OSError, ValueError):
-                pdoc = {}
         parent = self._dv_map(pdoc)
         base = {os.path.basename(f) for f in files}
         filemap: dict = {}
@@ -1242,27 +1196,44 @@ class CowTable:
         ]
 
     def _commit(self, version: int, files: list[str], op: str, stats: dict) -> dict:
+        """Link commit ``version``: the ONE writer of the commit-doc
+        format (module docstring).  ``stats`` must carry ``schema`` and
+        a ``file_stats`` entry for every file; the ``format_version``
+        stamp, the cumulative ``txn`` map (parent's, advanced by
+        ``stats["app_meta"]``), and the change-feed flag, DV cap, bloom
+        index and deletion vectors carried from the parent are derived
+        here."""
+        if "schema" not in stats or "file_stats" not in stats:
+            raise ValueError("a commit needs 'schema' and 'file_stats'")
+        unstated = {os.path.basename(f) for f in files}.difference(
+            stats["file_stats"]
+        )
+        if unstated:
+            raise ValueError(
+                f"file_stats missing for {len(unstated)} file(s) of "
+                f"commit v{version}, e.g. {sorted(unstated)[0]}"
+            )
+        pdoc = self._commit_doc(version - 1) if version > 0 else {}
+        txn = dict(pdoc.get("txn", {}))
+        meta = stats.get("app_meta") or {}
+        if "app_id" in meta and "batch_id" in meta:
+            k = str(meta["app_id"])
+            txn[k] = max(int(meta["batch_id"]), int(txn.get(k, -1)))
         # Carry the change-feed flag and the per-table DV cap forward
         # (txn-map style) so one head read answers at any age.
-        if version > 0 and (
-            "change_feed" not in stats or "dv_max_dead" not in stats
-        ):
-            try:
-                p = self._commit_doc(version - 1)
-                if "change_feed" not in stats and p.get("change_feed"):
-                    stats["change_feed"] = True
-                if "dv_max_dead" not in stats and p.get("dv_max_dead"):
-                    stats["dv_max_dead"] = int(p["dv_max_dead"])
-            except (OSError, ValueError):
-                pass
-        stats = self._maintain_bloom(version, files, stats)
-        stats = self._maintain_dv(version, files, stats)
+        for flag in ("change_feed", "dv_max_dead"):
+            if flag not in stats and pdoc.get(flag):
+                stats[flag] = pdoc[flag]
+        stats = self._maintain_bloom(version, files, stats, pdoc)
+        stats = self._maintain_dv(version, files, stats, pdoc)
         doc = {
+            "format_version": FORMAT_VERSION,
             "version": version,
             "op": op,
             "files": sorted(files),
             "ts": time.time(),
             **stats,
+            "txn": txn,
         }
         os.makedirs(_log_dir(self.path), exist_ok=True)
         tmp = os.path.join(_log_dir(self.path), f"_tmp_{uuid.uuid4().hex}")
@@ -1330,15 +1301,13 @@ class CowTable:
 
     def checkpoint(self, version: int | None = None) -> dict:
         """Write a checkpoint manifest at ``version`` (default: head):
-        the snapshot's files/file_stats/schema, the cumulative ``txn``
-        high-water map, and ``all_files`` -- every data file ANY commit
-        up to ``version`` ever referenced (what vacuum needs).  Built
-        incrementally from the previous checkpoint plus the commits
-        after it, so writing one costs O(interval) metadata reads, and
-        every consumer that anchors on it (vacuum, legacy-schema
-        backfill, pre-txn high-water walks) drops from O(versions) to
-        O(interval).  Commit docs are never rewritten -- history stays
-        auditable; the checkpoint is derived metadata."""
+        ``all_files``, every data file ANY commit up to ``version`` ever
+        referenced -- what vacuum needs.  Built incrementally from the
+        previous checkpoint plus the commits after it, so writing one
+        costs O(interval) metadata reads and vacuum's ever-referenced
+        walk drops from O(versions) to O(interval).  Commit docs are
+        never rewritten -- history stays auditable; the checkpoint is
+        derived metadata."""
         v = self.version() if version is None else version
         if v < 0:
             raise FileNotFoundError(f"no CowTable at {self.path}")
@@ -1347,41 +1316,18 @@ class CowTable:
             return prev  # never regress the pointer
         start = prev["version"] + 1 if prev is not None else 0
         all_files = set(prev["all_files"]) if prev is not None else set()
-        txn = dict(prev.get("txn", {})) if prev is not None else {}
-        schema = prev.get("schema") if prev is not None else None
         for cv in range(start, v + 1):
-            doc = self._commit_doc(cv)
-            all_files.update(doc["files"])
-            m = doc.get("app_meta") or {}
-            if "app_id" in m and "batch_id" in m:
-                txn[str(m["app_id"])] = max(
-                    int(m["batch_id"]), int(txn.get(str(m["app_id"]), -1))
-                )
-            if "txn" in doc:  # post-txn-tracking commits carry the map
-                for k, b in doc["txn"].items():
-                    txn[k] = max(int(b), int(txn.get(k, -1)))
-            if "schema" in doc:
-                schema = doc["schema"]
-        head = self._commit_doc(v)
-        ck = {
-            "version": v,
-            "files": head["files"],
-            "file_stats": head.get("file_stats", {}),
-            "txn": txn,
-            "all_files": sorted(all_files),
-            "ts": time.time(),
-            **({"schema": schema} if schema is not None else {}),
-        }
+            all_files.update(self._commit_doc(cv)["files"])
+        ck = {"version": v, "all_files": sorted(all_files)}
         tmp = os.path.join(_log_dir(self.path), f"_tmp_ck_{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             json.dump(ck, f)
             f.flush()
             os.fsync(f.fileno())
-        # Atomic-replace safety does NOT rest on byte determinism (the
-        # manifest embeds a wall-clock ts, and vacuum later rewrites the
-        # same version's file with a pruned all_files): it rests on every
-        # racing writer of this version producing a semantically valid
-        # manifest for it -- same snapshot files/txn/schema, all_files
+        # Atomic-replace safety does NOT rest on byte determinism (vacuum
+        # later rewrites the same version's file with a pruned
+        # all_files): it rests on every racing writer of this version
+        # producing a semantically valid manifest for it -- all_files
         # differing only by files every variant agrees are deleted -- and
         # os.replace swapping whole files atomically, so readers see one
         # valid variant, never a splice.
@@ -1396,142 +1342,19 @@ class CowTable:
 
     def txn_version(self, app_id: str) -> int:
         """Largest batch/txn id committed for ``app_id``; -1 if none.
-        O(1): every post-txn-tracking commit carries the cumulative
-        ``txn`` high-water map forward (Delta's txnAppId/txnVersion
-        analogue), so ONE head-commit read answers the streaming
-        sink's idempotence check no matter how old the table is or
-        what compact/vacuum-era commits interleaved.  Legacy logs
-        (commits without ``txn``) fall back to a newest-first walk of
-        per-commit ``app_meta``, bounded by the last checkpoint."""
+        O(1): every commit carries the cumulative ``txn`` high-water
+        map forward (Delta's txnAppId/txnVersion analogue), so ONE
+        head-commit read answers the streaming sink's idempotence check
+        no matter how old the table is."""
         head = self.version()
-        if head < 0:
-            return -1
-        ckpt_floor, ckpt_txn, ckpt_loaded = -1, None, False
-        for v in range(head, -1, -1):
-            if v == ckpt_floor and ckpt_txn is not None:
-                return int(ckpt_txn.get(app_id, -1))
-            doc = self._commit_doc(v)
-            if "txn" in doc:
-                return int(doc["txn"].get(app_id, -1))
-            m = doc.get("app_meta") or {}
-            if m.get("app_id") == app_id:
-                return int(m["batch_id"])
-            if not ckpt_loaded:
-                ckpt_loaded = True
-                ck = self._read_last_checkpoint()
-                if ck is not None and ck["version"] <= v:
-                    ckpt_floor, ckpt_txn = ck["version"], ck.get("txn", {})
-                    # The checkpoint may sit exactly at the commit just
-                    # inspected (e.g. a head checkpoint written by vacuum
-                    # on a legacy log): its txn map already covers
-                    # commits 0..v, so answer now -- the loop's top-of-
-                    # iteration floor check can never see v again.
-                    if ckpt_floor == v:
-                        return int(ckpt_txn.get(app_id, -1))
-        return -1
+        return -1 if head < 0 else self.txn_version_at(head, app_id)
 
-    def _checkpoint_at_or_below(self, version: int) -> dict | None:
-        """Newest checkpoint manifest whose version is <= ``version``,
-        or None.  Unlike :meth:`_read_last_checkpoint` this never
-        returns a manifest that already includes later commits, so it
-        can anchor reconstructions pinned AT ``version`` (time-travel
-        txn resolution)."""
-        ck = self._read_last_checkpoint()
-        if ck is not None and ck["version"] <= version:
-            return ck
-        try:
-            vs = [
-                int(n[:8])
-                for n in os.listdir(_log_dir(self.path))
-                if n.endswith(".checkpoint.json") and int(n[:8]) <= version
-            ]
-        except FileNotFoundError:
-            return None
-        if not vs:
-            return None
-        try:
-            with open(_checkpoint_path(self.path, max(vs))) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def txn_version_at(
-        self, version: int, app_id: str, _cache: dict | None = None
-    ) -> int:
+    def txn_version_at(self, version: int, app_id: str) -> int:
         """Cumulative txn high-water for ``app_id`` as of ``version``
-        (largest batch id any commit <= version applied; -1 if none).
-        One commit-doc read when the commit carries the cumulative
-        ``txn`` map; legacy commits (no ``txn`` -- e.g. a pre-upgrade
-        compact) reconstruct it from the newest checkpoint at-or-below
-        ``version`` plus the app_meta of the commits above it, the same
-        bounded walk :meth:`_next_txn` uses.  This is what time-travel
-        consumers (streaming pre-image resolution) must call: assuming
-        a txn-less commit applied nothing would mis-date any legacy
-        commit that POSTDATES the batch.
-
-        ``_cache``: caller-scoped memo (commit docs + the checkpoint
-        anchor) for loops that resolve MANY versions against one
-        immutable log snapshot -- e.g. the streaming pre-image walk.
-        Without it, an all-legacy, checkpoint-less log costs O(version)
-        commit-doc READS per call, O(n^2) across a descending walk;
-        with it, each doc is read once (reads O(n) total; the CPU-side
-        rescan of the memo stays O(n^2) worst-case but touches no
-        storage).  Safe because committed docs are immutable -- the log
-        is append-only and vacuum never rewrites commit metadata."""
-        if _cache is None:
-            _cache = {}
-
-        def doc_at(v: int) -> dict:
-            key = ("doc", v)
-            if key not in _cache:
-                _cache[key] = self._commit_doc(v)
-            return _cache[key]
-
-        doc = doc_at(version)
-        if "txn" in doc:
-            return int(doc["txn"].get(app_id, -1))
-        best, start = -1, 0
-        ck_key = ("ckpt_at_or_below", version)
-        if ck_key not in _cache:
-            _cache[ck_key] = self._checkpoint_at_or_below(version)
-        ck = _cache[ck_key]
-        if ck is not None:
-            best = int(ck.get("txn", {}).get(app_id, -1))
-            start = ck["version"] + 1
-        for v in range(start, version + 1):
-            m = doc_at(v).get("app_meta") or {}
-            if m.get("app_id") == app_id:
-                best = max(best, int(m["batch_id"]))
-        return best
-
-    def _next_txn(self, parent_version: int, meta: dict | None) -> dict:
-        """The cumulative txn map for a child commit of
-        ``parent_version``: the parent's map (reconstructed via
-        :meth:`checkpoint`-bounded walk for legacy logs) merged with
-        this commit's own (app_id, batch_id) if ``meta`` carries one."""
-        txn: dict = {}
-        if parent_version >= 0:
-            doc = self._commit_doc(parent_version)
-            if "txn" in doc:
-                txn = dict(doc["txn"])
-            else:
-                # Legacy parent: fold the checkpoint map (if any) with
-                # the commits above it -- one-time cost; every commit
-                # from here on carries the map.
-                ck = self._read_last_checkpoint()
-                start = 0
-                if ck is not None and ck["version"] <= parent_version:
-                    txn = dict(ck.get("txn", {}))
-                    start = ck["version"] + 1
-                for v in range(start, parent_version + 1):
-                    m = self._commit_doc(v).get("app_meta") or {}
-                    if "app_id" in m and "batch_id" in m:
-                        k = str(m["app_id"])
-                        txn[k] = max(int(m["batch_id"]), int(txn.get(k, -1)))
-        if meta and "app_id" in meta and "batch_id" in meta:
-            k = str(meta["app_id"])
-            txn[k] = max(int(meta["batch_id"]), int(txn.get(k, -1)))
-        return txn
+        (largest batch id any commit <= version applied; -1 if none):
+        one read of that version's commit doc.  This is what
+        time-travel consumers (streaming pre-image resolution) call."""
+        return int(self._commit_doc(version)["txn"].get(app_id, -1))
 
     def _write_data_files(
         self, df: DataFrame, version: int
@@ -1581,23 +1404,16 @@ class CowTable:
         snapshot's footer stats: string-ish keys take the longest
         observed min/max literal (doubled, plus framing), fixed-width
         keys a flat 16.  Conservative where stats are absent."""
-        width = 16
-        try:
-            stats = self._commit_doc(version).get("file_stats", {})
-            lens = [
-                len(b)
-                for s in stats.values()
-                for b in (
-                    s.get("cols", {}).get(key, {}).get("min"),
-                    s.get("cols", {}).get(key, {}).get("max"),
-                )
-                if isinstance(b, str)
-            ]
-            if lens:
-                width = max(width, 2 * max(lens) + 16)
-        except (OSError, ValueError):
-            pass
-        return width
+        lens = [
+            len(b)
+            for s in self._commit_doc(version)["file_stats"].values()
+            for b in (
+                s.get("cols", {}).get(key, {}).get("min"),
+                s.get("cols", {}).get(key, {}).get("max"),
+            )
+            if isinstance(b, str)
+        ]
+        return max([16] + [2 * n + 16 for n in lens])
 
     def _write_fused_cdc_files(
         self, fused: DataFrame, ct: str, version: int
@@ -1691,20 +1507,6 @@ class CowTable:
         )
         return dict(pairs)
 
-    def _carried_stats(self, parent_version: int, kept: list[str]) -> dict:
-        """file_stats entries for files carried by reference: copied
-        from the parent commit (the files are immutable, so the stats
-        are too); recomputed (executor-side when many) if the parent
-        predates stats tracking."""
-        parent = self._commit_doc(parent_version).get("file_stats", {})
-        missing = [f for f in kept if os.path.basename(f) not in parent]
-        fresh = self._harvest_file_stats(missing) if missing else {}
-        return {
-            os.path.basename(f): parent.get(os.path.basename(f))
-            or fresh[os.path.basename(f)]
-            for f in kept
-        }
-
     # -- operations --------------------------------------------------
 
     @classmethod
@@ -1749,11 +1551,7 @@ class CowTable:
         t = cls(spark, path)
         if t.version() >= 0:
             raise FileExistsError(f"CowTable already exists at {path}")
-        stats: dict = {
-            "files_written": 0,
-            "schema": df.schema.jsonValue(),
-            "txn": {},
-        }
+        stats: dict = {"files_written": 0, "schema": df.schema.jsonValue()}
         if change_feed:
             # Row-level change tracking (Delta's enableChangeDataFeed):
             # every subsequent mutation commit writes its change set;
@@ -1791,35 +1589,12 @@ class CowTable:
         return t
 
     def _snapshot_schema(self, version: int):
-        """StructType of a snapshot: from the commit doc's recorded
-        schema (any commit carries it -- the table schema is stable),
-        falling back to a data-file footer for pre-schema-tracking
-        logs.  Lets an all-files-skipped or zero-file snapshot return
-        a correctly-typed empty frame instead of raising."""
+        """StructType of a snapshot, from its commit doc's recorded
+        schema: an all-files-skipped or zero-file snapshot still returns
+        a correctly-typed empty frame."""
         from pyspark.sql.types import StructType
 
-        # Checkpoint-bounded: the manifest carries the newest schema at
-        # or below its version, so the legacy backfill walk never reads
-        # more than checkpoint_interval commit docs.
-        ck = self._read_last_checkpoint()
-        floor = (
-            ck["version"]
-            if ck is not None and "schema" in ck and ck["version"] <= version
-            else 0
-        )
-        for v in range(version, floor - 1, -1):
-            doc = self._commit_doc(v)
-            if "schema" in doc:
-                return StructType.fromJson(doc["schema"])
-        if ck is not None and "schema" in ck and ck["version"] <= version:
-            return StructType.fromJson(ck["schema"])
-        files = self.files(version)
-        if not files:
-            raise FileNotFoundError(
-                f"snapshot v{version} of {self.path} has no data files and "
-                "no recorded schema (pre-schema-tracking empty commit)"
-            )
-        return self.spark.read.parquet(files[0]).schema
+        return StructType.fromJson(self._commit_doc(version)["schema"])
 
     def _read_files(
         self,
@@ -2250,7 +2025,6 @@ class CowTable:
         target_rows: int,
         cluster_by: str | list[str] | None = None,
         retries: int = 0,
-        refresh_stats: bool = False,
         zorder_boundaries: str = "linear",
     ) -> dict:
         """``OPTIMIZE``-style bin-packing: rewrite every file holding
@@ -2292,40 +2066,26 @@ class CowTable:
         ``retries``: on losing a commit race, re-plan against the new
         head and retry (compaction is a pure layout rewrite -- the
         recompute picks up whatever the winner committed, so rebase is
-        always semantics-safe, unlike :meth:`merge`).
-
-        ``refresh_stats``: re-harvest footer stats for CARRIED files
-        too (footer-only reads, executor-side when many) instead of
-        copying the parent commit's entries.  The repair path for logs
-        whose recorded stats predate an encoding fix -- e.g. naive-
-        encoded timestamps from a legacy writer, which
-        :func:`_stat_cmp_ok` permanently refuses to compare against
-        tz-aware bounds: one ``compact(refresh_stats=True)`` restores
-        skipping without rewriting data that is already well-packed
-        (the files' own footers were never wrong, only the log's
-        encoding of them)."""
+        always semantics-safe, unlike :meth:`merge`)."""
         for _ in range(max(0, retries)):
             try:
                 return self._compact_attempt(
-                    target_rows, cluster_by, refresh_stats, zorder_boundaries
+                    target_rows, cluster_by, zorder_boundaries
                 )
             except ConcurrentWriteError:
                 continue
         return self._compact_attempt(
-            target_rows, cluster_by, refresh_stats, zorder_boundaries
+            target_rows, cluster_by, zorder_boundaries
         )
 
     def _compact_attempt(
         self, target_rows: int, cluster_by: str | list[str] | None = None,
-        refresh_stats: bool = False, zorder_boundaries: str = "linear",
+        zorder_boundaries: str = "linear",
     ) -> dict:
         base_version = self.version()
         files = self.files(base_version)
         base_doc = self._commit_doc(base_version)
-        fstats = base_doc.get("file_stats", {})
-        missing = [f for f in files if os.path.basename(f) not in fstats]
-        if missing:  # pre-stats-tracking commit: harvest in bulk
-            fstats = {**fstats, **self._harvest_file_stats(missing)}
+        fstats = base_doc["file_stats"]
         dvm = self._dv_map(base_doc)
 
         def _rows(f: str) -> int:
@@ -2347,27 +2107,10 @@ class CowTable:
             if os.path.basename(f) in dvm
         )
         if len(small) < 2 and not dv_materialized:
-            if not (refresh_stats and files):
-                return {
-                    "op": "compact", "noop": True, "version": base_version,
-                    "files_compacted": 0,
-                }
-            # Nothing to bin-pack but stats need refreshing: commit a
-            # metadata-only version -- same files, footer-fresh stats.
-            return self._commit(
-                base_version + 1,
-                files,
-                "compact",
-                {
-                    "parent": base_version,
-                    "files_compacted": 0,
-                    "files_kept": len(files),
-                    "files_written": 0,
-                    "txn": self._next_txn(base_version, None),
-                    "file_stats": self._harvest_file_stats(files),
-                    "schema": self._snapshot_schema(base_version).jsonValue(),
-                },
-            )
+            return {
+                "op": "compact", "noop": True, "version": base_version,
+                "files_compacted": 0,
+            }
         kept = [f for f in files if f not in small]
         # Gross rows (dead included): sizing only -- a slight
         # overcount of nout costs one extra small file, never rows.
@@ -2427,13 +2170,10 @@ class CowTable:
                         if dv_materialized
                         else {}
                     ),
-                    "txn": self._next_txn(base_version, None),
                     "file_stats": {
-                        **(
-                            self._harvest_file_stats(kept)
-                            if refresh_stats
-                            else self._carried_stats(base_version, kept)
-                        ),
+                        **{
+                            b: fstats[b] for b in map(os.path.basename, kept)
+                        },
                         **new_stats,
                     },
                     "schema": merged.schema.jsonValue(),
@@ -2576,15 +2316,10 @@ class CowTable:
         # maintained table otherwise accrues one NNNNNNNN.checkpoint
         # .json per interval FOREVER -- the last unbounded metadata
         # file series).  Retention anchor: the newest checkpoint
-        # at-or-below the retained-snapshot floor ``lo`` -- every
-        # _checkpoint_at_or_below(v) for a version in the retained
-        # window [lo, head] resolves to a checkpoint >= anchor, so
-        # deleting the ones strictly below it cannot change any
-        # reconstruction a reader of retained data performs.  Versions
-        # below ``lo`` already raise on data read (vacuumed); their
-        # txn reconstructions just fall back to full walks --
-        # checkpoints are an optimization, never load-bearing for
-        # correctness.  Best-effort like every metadata-plane op.
+        # at-or-below the retained-snapshot floor ``lo``; everything
+        # strictly below it goes.  Checkpoints are an optimization of
+        # vacuum's own walk, never load-bearing for correctness.
+        # Best-effort like every metadata-plane op.
         ckpts_deleted = 0
         try:
             ld = _log_dir(self.path)
@@ -2677,13 +2412,10 @@ class CowTable:
             keep = set()
             for v in range(lo, latest + 1):
                 doc = self._commit_doc(v)
-                keep.add(doc.get("bloom_sidecar"))
                 keep.add(doc.get("dv_sidecar"))
                 keep.update((doc.get("bloom_files") or {}).values())
             for n in os.listdir(ld):
-                is_bloom = n.endswith(".bloom.json") or n.endswith(
-                    ".bf.json"
-                )
+                is_bloom = n.endswith(".bf.json")
                 is_dv = n.endswith(".dv.json")
                 if not (is_bloom or is_dv) or n in keep:
                     continue
@@ -3220,7 +2952,8 @@ class CowTable:
         hidden all-NULL ``_change_type`` column; snapshot reads
         project to the recorded schema, which omits it."""
         snap_schema = self._snapshot_schema(base_version)
-        dv_map = self._dv_map(self._commit_doc(base_version))
+        base_doc = self._commit_doc(base_version)
+        dv_map = self._dv_map(base_doc)
         mk_all: list | None = []  # matched touch keys (source + delete)
         mk_src: list | None = []  # matched SOURCE keys only
         mk_df: DataFrame | None = None  # >cap fallback: pinned (key, _s)
@@ -3568,9 +3301,11 @@ class CowTable:
                         )
                     ),
                     **({"app_meta": meta} if meta is not None else {}),
-                    "txn": self._next_txn(base_version, meta),
                     "file_stats": {
-                        **self._carried_stats(base_version, kept),
+                        **{
+                            b: base_doc["file_stats"][b]
+                            for b in map(os.path.basename, kept)
+                        },
                         **new_stats,
                     },
                     "schema": data_schema_json,
@@ -3695,12 +3430,9 @@ class CowTable:
         wide and the change pre-image reads from the pinned frame --
         one candidate scan per CDF mor merge, not two (r19)."""
         snap_schema = self._snapshot_schema(base_version)
-        dv_map = self._dv_map(self._commit_doc(base_version))
+        base_doc = self._commit_doc(base_version)
+        dv_map = self._dv_map(base_doc)
         feed = self._change_feed_enabled(base_version)
-        dv_updates, rows_matched, pre_pinned = self._dv_positions_for(
-            candidates, snap_schema, dv_map, key, touch_keys,
-            want_rows=feed,
-        )
         # Same projection contract as cow: strict mode demands every
         # table column (deterministic error, names included); evolve
         # mode NULL-fills both directions and appends source-only
@@ -3733,6 +3465,10 @@ class CowTable:
                 if f.name not in snap_names
             ]
         out_df = src_proj.select(*out_cols)
+        dv_updates, rows_matched, pre_pinned = self._dv_positions_for(
+            candidates, snap_schema, dv_map, key, touch_keys,
+            want_rows=feed,
+        )
         new_version = base_version + 1
         chg_files: list[str] = []
         if feed:
@@ -3743,16 +3479,20 @@ class CowTable:
                 if pre_pinned is not None
                 else self._read_files([], snap_schema, None)
             )
-            chg_files = self._write_change_files(
-                self._change_set(
-                    pre, out_df, key, dk_vals, dk_df,
-                    small_keys=(
-                        n_touch is not None
-                        and n_touch <= _MERGE_BROADCAST_MAX_KEYS
+            try:
+                chg_files = self._write_change_files(
+                    self._change_set(
+                        pre, out_df, key, dk_vals, dk_df,
+                        small_keys=(
+                            n_touch is not None
+                            and n_touch <= _MERGE_BROADCAST_MAX_KEYS
+                        ),
                     ),
-                ),
-                new_version,
-            )
+                    new_version,
+                )
+            finally:
+                if pre_pinned is not None:
+                    _release_pinned(pre_pinned)
         new_files, new_stats, out_dir = self._write_data_files(
             out_df, new_version
         )
@@ -3788,9 +3528,8 @@ class CowTable:
                         )
                     ),
                     **({"app_meta": meta} if meta is not None else {}),
-                    "txn": self._next_txn(base_version, meta),
                     "file_stats": {
-                        **self._carried_stats(base_version, snapshot_files),
+                        **base_doc["file_stats"],
                         **new_stats,
                     },
                     "schema": out_df.schema.jsonValue(),
@@ -3996,7 +3735,11 @@ class CowTable:
         separate change files -- Delta's own optimization).
         Compaction/vacuum are layout ops: no logical change, nothing
         in the feed.  A mutation commit in range from BEFORE the feed
-        was enabled raises -- the changes cannot be reconstructed."""
+        was enabled raises -- the changes cannot be reconstructed.  So
+        does a range whose change (or create-commit data) files
+        :meth:`vacuum` removed: :class:`ChangesVacuumedError` names the
+        first unreadable version (one stat per referenced file --
+        delta-sized)."""
         head = self.version()
         to_v = head if to_version is None else to_version
         if from_version < 0 or to_v > head or from_version > to_v:
@@ -4008,6 +3751,14 @@ class CowTable:
         for v in range(from_version, to_v + 1):
             doc = self._commit_doc(v)
             cf = doc.get("change_files")
+            refs = cf or (doc["files"] if doc["op"] == "create" else [])
+            gone = [f for f in refs if not os.path.exists(f)]
+            if gone:
+                raise ChangesVacuumedError(
+                    f"changes of version {v} of {self.path} are no longer "
+                    f"readable ({gone[0]} was vacuumed); read from a "
+                    "version inside the retained window"
+                )
             if cf:
                 parts.append(
                     self.spark.read.parquet(*cf)
@@ -4171,7 +3922,8 @@ class CowTable:
                     StructField("_mk", snap_schema[key].dataType),
                 ]),
             ))
-        dv_map = self._dv_map(self._commit_doc(base_version))
+        base_doc = self._commit_doc(base_version)
+        dv_map = self._dv_map(base_doc)
         feed = self._change_feed_enabled(base_version)
         dv_updates, rows_deleted, pre_pinned = self._dv_positions_for(
             candidates, snap_schema, dv_map, key, touch_keys,
@@ -4186,10 +3938,14 @@ class CowTable:
                 if pre_pinned is not None
                 else self._read_files([], snap_schema, None)
             )
-            chg_files = self._write_change_files(
-                self._change_set(pre, None, key, [], None),
-                base_version + 1,
-            )
+            try:
+                chg_files = self._write_change_files(
+                    self._change_set(pre, None, key, [], None),
+                    base_version + 1,
+                )
+            finally:
+                if pre_pinned is not None:
+                    _release_pinned(pre_pinned)
         try:
             return self._commit(
                 base_version + 1,
@@ -4213,10 +3969,7 @@ class CowTable:
                         else {}
                     ),
                     **({"app_meta": meta} if meta is not None else {}),
-                    "txn": self._next_txn(base_version, meta),
-                    "file_stats": self._carried_stats(
-                        base_version, snapshot_files
-                    ),
+                    "file_stats": base_doc["file_stats"],
                     "schema": snap_schema.jsonValue(),
                     "dv_updates": dv_updates,
                 },

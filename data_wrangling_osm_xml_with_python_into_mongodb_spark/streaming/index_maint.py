@@ -62,8 +62,8 @@ def last_applied_batch(table: CowTable, app_id: str) -> int:
     none.  O(1): every commit carries the cumulative per-app txn
     high-water map forward (CowTable.txn_version), so one head-commit
     read answers the idempotence check regardless of table age or
-    interleaved compact/vacuum-era commits -- the check can never
-    creep as a long-lived stream accrues versions."""
+    interleaved compact commits -- the check can never creep as a
+    long-lived stream accrues versions."""
     return table.txn_version(app_id)
 
 
@@ -73,23 +73,13 @@ def _version_before_batch(table: CowTable, app_id: str, batch_id: int) -> int:
     diff against.  In the normal flow this is the head (one commit-doc
     read: the head's high-water is batch_id - 1); on replay after a
     crash between the corpus and index merges it is the head's parent.
-    The walk is bounded by the replay horizon, never the log length,
-    WHEN commits carry txn maps (every post-upgrade commit does: one
-    head read answers each step).  Each step resolves the CUMULATIVE
-    high-water at that version (CowTable.txn_version_at): a commit
-    without its own txn map -- e.g. a pre-upgrade compact landing
-    AFTER the batch on a mixed legacy/new log -- still contains the
-    batch's data, so treating it as applied=-1 would hand replay a
-    post-image as the pre-image.  A shared memo caps the ALL-legacy
-    worst case (checkpoint-less log of txn-less commits, where each
-    step reconstructs from commit 0) at one READ per commit doc total
-    -- O(n) storage reads, not the O(n^2) a memo-less descending walk
-    would pay; the in-memory rescan of cached docs remains O(n^2)
-    worst-case, acceptable for a shape that cannot persist past the
-    first post-upgrade commit or checkpoint."""
-    memo: dict = {}
+    Each step reads the CUMULATIVE high-water every commit carries
+    (CowTable.txn_version_at), so a commit that landed after the batch
+    without its own app_meta (e.g. a compact) still counts as
+    containing it, and the walk is bounded by the replay horizon,
+    never the log length."""
     for v in range(table.version(), -1, -1):
-        if table.txn_version_at(v, app_id, _cache=memo) < batch_id:
+        if table.txn_version_at(v, app_id) < batch_id:
             return v
     raise RuntimeError(
         f"no snapshot of {table.path} predates batch {batch_id} for "

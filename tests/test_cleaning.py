@@ -127,6 +127,21 @@ def test_numeric_promotion(spark):
     assert outs == [3.0, 4.5, None, 1.5, None]
 
 
+def test_numeric_promotion_garbage_is_null_under_ansi(spark):
+    """A non-numeric value for a numeric key gives null, as the
+    docstrings promise, instead of CAST_INVALID_INPUT under ANSI mode
+    (Spark 4's default)."""
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        ints = [("lanes", "v1"), ("ele", "1e30"), ("lanes", "2")]
+        assert _apply2(spark, C.to_int_value, ints) == [None, None, 2]
+        floats = [("level", "abc"), ("maxheight", "tall"), ("level", "3.5")]
+        assert _apply2(spark, C.to_float_value, floats) == [None, None, 3.5]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_rewrite_key(spark):
     cases = {
         "contact:phone": "phone",

@@ -28,6 +28,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.cow_table import (  # noqa: E402
+    ChangesVacuumedError,
     CowTable,
 )
 
@@ -185,3 +186,42 @@ def test_cdf_vacuum_gc(spark, tmp_path):
     # expired feed fails cleanly on action (files gone)
     with pytest.raises(Exception):
         t.read_changes(1, 1).collect()
+
+
+def test_cdf_vacuumed_range_raises_named_error(spark, tmp_path):
+    """A range whose change files vacuum removed raises a named error
+    naming the first unreadable version, at call time (not a raw
+    PATH_NOT_FOUND on the first action); the retained head still
+    reads."""
+    t = _mk(spark, tmp_path, "vac")
+    for i in range(3):
+        t.merge(spark.createDataFrame([(i, -i)], "k long, v long"), "k")
+    t.vacuum(retain_last=1, orphan_grace_s=0)
+    head = t.version()
+    with pytest.raises(ChangesVacuumedError, match="version 1 "):
+        t.read_changes(1)
+    assert t.read_changes(head).count() > 0
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_cdf_preimage_pin_released(spark, tmp_path):
+    """The change-feed dv delete and mor merge read their pre-image
+    from the pinned position harvest; the pin is released once the
+    change files are written, so a long-lived session holds no
+    persisted RDD per mutation."""
+    t = _mk(spark, tmp_path, "pin")
+    before = _persistent_rdds(spark)
+    t.delete("k", values=[3])
+    assert _persistent_rdds(spark) == before
+    t.merge(
+        spark.createDataFrame([(6, 66), (200, 2000)], "k long, v long"),
+        "k",
+        strategy="mor",
+    )
+    assert _persistent_rdds(spark) == before
+    assert {r["_change_type"] for r in t.read_changes(1).collect()} == {
+        "delete", "update_preimage", "update_postimage", "insert",
+    }

@@ -6,7 +6,6 @@ the same transform merge_statement carries to a real catalog."""
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -105,7 +104,14 @@ def test_concurrent_commit_conflict(spark, table):
     # Simulate the race: someone else commits version 1 after this
     # writer read its snapshot (pin the stale read by freezing
     # version(), exactly what a slow writer sees).
-    winner = table._commit(1, table.files(0), "merge", {"parent": 0})
+    doc0 = table._commit_doc(0)
+    winner = table._commit(
+        1, table.files(0), "merge",
+        {
+            "parent": 0, "schema": doc0["schema"],
+            "file_stats": doc0["file_stats"],
+        },
+    )
     table.version = lambda: 0  # type: ignore[method-assign]
     with pytest.raises(ConcurrentWriteError):
         table.merge(spark.createDataFrame([(0, -1)], "k long, v long"), "k")
@@ -402,7 +408,10 @@ def test_empty_snapshot_reads_typed_empty(spark, table):
     v = table.version()
     table._commit(
         v + 1, [], "merge",
-        {"parent": v, "schema": table._snapshot_schema(v).jsonValue()},
+        {
+            "parent": v, "file_stats": {},
+            "schema": table._snapshot_schema(v).jsonValue(),
+        },
     )
     assert table.read().count() == 0 and table.read().columns == ["k", "v"]
 
@@ -712,9 +721,9 @@ def test_commit_log_checkpointing(spark, tmp_path):
     every metadata walk to O(interval) commit reads.  ~300 commits are
     laid down (metadata-plane: the commit docs reference the create's
     real files -- exactly what a long-lived stream-maintained table
-    accrues), then checkpoint-anchored reads are pinned EQUAL to full
-    log walks for: snapshot files, schema resolution, vacuum's
-    ever-referenced set, and the per-app txn high-water -- with the
+    accrues), then the checkpoint-anchored ever-referenced set is
+    pinned EQUAL to a full log walk, and the per-app txn high-water
+    and schema resolution to ONE commit-doc read each -- with the
     read counts measured, not assumed."""
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources import (
         cow_table as ct,
@@ -726,8 +735,8 @@ def test_commit_log_checkpointing(spark, tmp_path):
     assert t._commit_doc(0)["txn"] == {}
 
     # ~300 synthetic merge commits: rotate which files stay referenced
-    # and which app committed, via the same _commit/_next_txn path a
-    # real merge takes (auto-checkpoint fires inside _commit).
+    # and which app committed, via the same _commit path a real merge
+    # takes (txn derivation and auto-checkpoint fire inside _commit).
     n = 300
     for v in range(1, n + 1):
         refd = files[v % 3:]  # drop 0-2 files from this snapshot
@@ -737,7 +746,6 @@ def test_commit_log_checkpointing(spark, tmp_path):
             {
                 "parent": v - 1,
                 "app_meta": meta,
-                "txn": t._next_txn(v - 1, meta),
                 "file_stats": {
                     os.path.basename(f): t._commit_doc(0)["file_stats"][
                         os.path.basename(f)
@@ -784,10 +792,10 @@ def test_commit_log_checkpointing(spark, tmp_path):
         CowTable._commit_doc = lambda self, v: (reads.append(v), orig(self, v))[1]
         assert t.txn_version("app0") == n if n % 2 == 0 else n - 1
         assert len(reads) == 1
-        # schema resolution reads at most O(interval) docs
+        # and so is schema resolution: the snapshot's own doc
         reads.clear()
         t._snapshot_schema(n)
-        assert len(reads) <= interval + 1
+        assert len(reads) == 1
         # vacuum's log walk is checkpoint-anchored: O(interval +
         # retain_last), nowhere near the 301-doc full walk
         reads.clear()
@@ -814,62 +822,6 @@ def test_commit_log_checkpointing(spark, tmp_path):
         for f in t.files(n)
         for r in spark.read.parquet(f).collect()
     )
-
-
-def test_txn_lookup_on_legacy_log_is_checkpoint_bounded(spark, tmp_path):
-    """Pre-txn-tracking logs (commits without the cumulative map) fall
-    back to a newest-first app_meta walk -- bounded by the checkpoint,
-    which summarizes everything at or below it."""
-    df = spark.range(8).selectExpr("id AS k", "id AS v").coalesce(1)
-    t = CowTable.create(spark, str(tmp_path / "legacy"), df)
-    files, schema = t.files(), t._commit_doc(0)["schema"]
-    # 40 legacy commits: app_meta only, NO txn field
-    for v in range(1, 41):
-        t._commit(
-            v, files, "merge",
-            {
-                "parent": v - 1,
-                "app_meta": {"app_id": "legacy_app", "batch_id": v},
-                "schema": schema,
-            },
-        )
-    # strip the create's txn to make the WHOLE log legacy
-    p = _commit_path(t.path, 0)
-    with open(p) as f:
-        doc = json.load(f)
-    doc.pop("txn", None)
-    os.remove(p)
-    with open(p, "w") as f:
-        json.dump(doc, f)
-
-    t.checkpoint()  # manifest folds app_meta into its txn map
-    ck = t._read_last_checkpoint()
-    assert ck["version"] == 40 and ck["txn"] == {"legacy_app": 40}
-
-    # lay 5 more legacy commits above the checkpoint for another app
-    for v in range(41, 46):
-        t._commit(
-            v, files, "merge",
-            {
-                "parent": v - 1,
-                "app_meta": {"app_id": "other_app", "batch_id": v},
-                "schema": schema,
-            },
-        )
-    reads = []
-    orig = CowTable._commit_doc
-    try:
-        CowTable._commit_doc = lambda self, v: (reads.append(v), orig(self, v))[1]
-        assert t.txn_version("legacy_app") == 40   # answered BY the ckpt
-        assert len(reads) <= 6                     # head..ckpt, not 46
-        reads.clear()
-        assert t.txn_version("other_app") == 45    # newest commit wins
-        assert len(reads) == 1
-        reads.clear()
-        assert t.txn_version("ghost") == -1
-        assert len(reads) <= 6
-    finally:
-        CowTable._commit_doc = orig
 
 
 def test_large_delete_batch_uses_join_path(spark, tmp_path, monkeypatch):
@@ -977,59 +929,6 @@ def test_merge_source_missing_column_errors_deterministically(spark, table):
     assert dict(_rows(table.read()))[5] is None
 
 
-def test_compact_refresh_stats_restores_skipping(spark, tmp_path):
-    """VERDICT r11 #6: a log whose recorded timestamp stats are NAIVE
-    (legacy writer, pre-UTC-normalization) can never skip against
-    aware bounds -- _stat_cmp_ok refuses the comparison forever.  One
-    compact(refresh_stats=True) re-harvests the (correct) footers into
-    the log and restores skipping WITHOUT rewriting well-packed data."""
-    import datetime
-
-    ts0 = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    try:
-        spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        df = spark.range(48).selectExpr(
-            "TIMESTAMP '2024-01-02 00:00:00' + "
-            "make_interval(0,0,0,0,CAST(id AS INT),0,0) AS ts",
-            "id AS v",
-        ).repartitionByRange(4, "ts")
-        t = CowTable.create(spark, str(tmp_path / "naive"), df)
-
-        # Simulate the legacy log: strip tz offsets from the recorded
-        # ts stats (what a pre-normalization writer recorded).
-        p = _commit_path(t.path, 0)
-        with open(p) as f:
-            doc = json.load(f)
-        for st in doc["file_stats"].values():
-            c = st["cols"].get("ts")
-            if c:
-                c["min"] = c["min"].replace("+00:00", "")
-                c["max"] = c["max"].replace("+00:00", "")
-        os.remove(p)
-        with open(p, "w") as f:
-            json.dump(doc, f)
-
-        utc = datetime.timezone.utc
-        lo = datetime.datetime(2024, 1, 2, 3, 0, tzinfo=utc)
-        hi = datetime.datetime(2024, 1, 2, 5, 0, tzinfo=utc)
-        got = t.read_range("ts", lo, hi)
-        assert got.count() == 3
-        assert t.last_scan["files_skipped"] == 0  # naive stats: scan all
-
-        # target_rows=1: nothing to bin-pack -> metadata-only commit
-        # that refreshes every carried file's stats from its footer
-        doc2 = t.compact(target_rows=1, refresh_stats=True)
-        assert doc2["files_written"] == 0 and doc2["files_kept"] == 4
-        assert set(t.files()) == set(t.files(0))  # no data rewritten
-        got2 = t.read_range("ts", lo, hi)
-        assert got2.count() == 3
-        assert t.last_scan["files_skipped"] >= 2  # skipping restored
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", ts0)
-
-
 def test_vacuum_prunes_checkpoint_all_files(spark, tmp_path):
     """The checkpoint's ever-referenced list must not grow O(files
     ever) as a maintained table ages: vacuum prunes the entries whose
@@ -1058,137 +957,6 @@ def test_vacuum_prunes_checkpoint_all_files(spark, tmp_path):
     assert dict(_rows(t.read()))[99] == 99
     ck2 = t._read_last_checkpoint()
     assert all(os.path.exists(f) for f in ck2["all_files"])
-
-
-def test_txn_lookup_checkpoint_at_head_is_one_read(spark, tmp_path):
-    """Round-12 ADVICE #3: when the newest checkpoint sits exactly at
-    the head of a legacy log (e.g. written by vacuum or an operator
-    checkpoint() on a pre-txn table), txn_version must answer from the
-    manifest immediately -- the loop's top-of-iteration floor check
-    can never revisit the version it was loaded at, so without the
-    load-time short-circuit the walk degrades to O(versions)."""
-    df = spark.range(4).selectExpr("id AS k", "id AS v").coalesce(1)
-    t = CowTable.create(spark, str(tmp_path / "legacy_head_ck"), df)
-    files, schema = t.files(), t._commit_doc(0)["schema"]
-    p = _commit_path(t.path, 0)
-    with open(p) as f:
-        doc = json.load(f)
-    doc.pop("txn", None)
-    os.remove(p)
-    with open(p, "w") as f:
-        json.dump(doc, f)
-    # 30 legacy commits; the one for buried_app sits deep in the log
-    for v in range(1, 31):
-        app = "buried_app" if v == 5 else "noise_app"
-        t._commit(
-            v, files, "merge",
-            {
-                "parent": v - 1,
-                "app_meta": {"app_id": app, "batch_id": v},
-                "schema": schema,
-            },
-        )
-    t.checkpoint()  # head checkpoint on an all-legacy log
-    assert t._read_last_checkpoint()["version"] == 30
-    reads = []
-    orig = CowTable._commit_doc
-    try:
-        CowTable._commit_doc = (
-            lambda self, v: (reads.append(v), orig(self, v))[1]
-        )
-        # head commit is noise_app's; buried_app must come from the
-        # manifest after ONE commit-doc read, not a 26-doc walk
-        assert t.txn_version("buried_app") == 5
-        assert len(reads) == 1
-        reads.clear()
-        assert t.txn_version("ghost") == -1
-        assert len(reads) == 1
-    finally:
-        CowTable._commit_doc = orig
-
-
-def test_txn_version_at_reconstructs_legacy_commits(spark, tmp_path):
-    """txn_version_at (round-12 ADVICE #2 support) resolves the
-    CUMULATIVE high-water at any version: txn-carrying commits answer
-    from their map; a txn-less commit reconstructs from the newest
-    checkpoint at-or-below it plus the app_meta above -- never from a
-    LATER checkpoint, which would time-travel future batches in."""
-    df = spark.range(4).selectExpr("id AS k", "id AS v").coalesce(1)
-    t = CowTable.create(spark, str(tmp_path / "txn_at"), df)
-    files, schema = t.files(), t._commit_doc(0)["schema"]
-    t._commit(
-        1, files, "merge",
-        {
-            "parent": 0, "schema": schema,
-            "app_meta": {"app_id": "app", "batch_id": 7},
-            "txn": {"app": 7},
-        },
-    )
-    # v2: legacy compact (no txn, no app_meta) -- contains batch 7
-    t._commit(2, files, "compact", {"parent": 1, "schema": schema})
-    # v3: a later txn commit advancing the app
-    t._commit(
-        3, files, "merge",
-        {
-            "parent": 2, "schema": schema,
-            "app_meta": {"app_id": "app", "batch_id": 8},
-            "txn": {"app": 8},
-        },
-    )
-    t.checkpoint(3)  # newest manifest sits ABOVE the legacy commit
-    assert t.txn_version_at(0, "app") == -1
-    assert t.txn_version_at(1, "app") == 7
-    assert t.txn_version_at(2, "app") == 7   # not -1, not 8
-    assert t.txn_version_at(3, "app") == 8
-    assert t.txn_version_at(2, "ghost") == -1
-
-
-def test_preimage_walk_all_legacy_reads_each_doc_once(spark, tmp_path):
-    """Round-13 ADVICE #3: on an ALL-legacy, checkpoint-less log the
-    descending pre-image walk calls txn_version_at per step, and each
-    step's reconstruction spans commits 0..v -- O(n^2) commit-doc
-    READS without memoization.  _version_before_batch shares one memo
-    across the walk, so every commit doc is read from storage at most
-    once: total reads stay O(n) no matter how deep the walk goes."""
-    from data_wrangling_osm_xml_with_python_into_mongodb_spark.streaming.index_maint import (
-        _version_before_batch,
-    )
-
-    df = spark.range(4).selectExpr("id AS k", "id AS v").coalesce(1)
-    t = CowTable.create(spark, str(tmp_path / "legacy_walk"), df)
-    t.checkpoint_interval = 0  # never auto-checkpoint: worst case
-    p = _commit_path(t.path, 0)
-    with open(p) as f:
-        doc = json.load(f)
-    doc.pop("txn", None)
-    os.remove(p)
-    with open(p, "w") as f:
-        json.dump(doc, f)
-    files, schema = t.files(), doc["schema"]
-    n = 12
-    for v in range(1, n + 1):
-        # batch 0's app_meta sits at v=1; everything above is txn-less
-        # noise, so the walk must descend all the way to the create.
-        extra = {"parent": v - 1, "schema": schema}
-        if v == 1:
-            extra["app_meta"] = {"app_id": "maint", "batch_id": 0}
-        t._commit(v, files, "merge", extra)
-    assert t._read_last_checkpoint() is None
-    reads = []
-    orig = CowTable._commit_doc
-    try:
-        CowTable._commit_doc = (
-            lambda self, v: (reads.append(v), orig(self, v))[1]
-        )
-        assert _version_before_batch(t, "maint", 0) == 0
-        # one read per distinct doc (n+1 commits), never the ~n^2/2 an
-        # unmemoized descending walk would pay
-        assert len(reads) == len(set(reads)) <= n + 1
-    finally:
-        CowTable._commit_doc = orig
-    # and the memo changes no answers: spot-check against fresh calls
-    assert t.txn_version_at(n, "maint") == 0
-    assert t.txn_version_at(0, "maint") == -1
 
 
 def test_vacuum_gc_prunes_old_checkpoint_files(spark, tmp_path):
@@ -1450,19 +1218,20 @@ def test_bloom_compact_reindexes_output(spark, bloom_table):
 
 
 def test_bloom_sidecars_reused_when_files_unchanged(spark, bloom_table):
-    """A commit that carries the exact file set forward carries every
-    per-file sidecar NAME verbatim and writes zero new ones
-    (metadata-only commits on a bloom table stay O(1), not O(index))."""
+    """A commit that carries the exact file set forward (a dv delete)
+    carries every per-file sidecar NAME verbatim and writes zero new
+    ones (metadata-only commits on a bloom table stay O(1), not
+    O(index))."""
     import os as _os
 
-    t, _ = bloom_table
+    t, df = bloom_table
 
     def bf_files():
         ld = _os.path.join(t.path, "_log")
         return {n for n in _os.listdir(ld) if n.endswith(".bf.json")}
 
     before = bf_files()
-    t.compact(target_rows=1, refresh_stats=True)  # stats-refresh commit
+    t.delete("k", df.first()["k"])  # dv delete: same file set committed
     head = t._commit_doc(t.version())
     parent = t._commit_doc(t.version() - 1)
     assert head["files"] == parent["files"]
@@ -1742,78 +1511,6 @@ def test_bloom_sized_from_file_rowcount(spark, tmp_path):
         assert t.read_point("k", r["k"]).count() == 1
 
 
-def test_bloom_legacy_monolith_sidecar_reads_and_migrates(spark, tmp_path):
-    """Pre-r17 tables stored ALL filters in one monolithic
-    ``.bloom.json``.  New code must (a) prune from that legacy
-    sidecar unchanged, (b) on the next mutation keep the legacy
-    pointer alive for carried files while giving rewritten/new files
-    per-file sidecars (hybrid), and (c) drop the legacy pointer once
-    a full rewrite leaves no legacy-covered file -- the natural
-    migration path, no offline conversion."""
-    import json as _json
-
-    df = spark.range(4000).selectExpr(
-        "printf('%08d', id) AS k", "id AS v"
-    )
-    t = CowTable.create(
-        spark,
-        str(tmp_path / "leg"),
-        df.repartitionByRange(8, "k"),
-        bloom_col="k",
-    )
-    ld = os.path.join(t.path, "_log")
-    doc0 = t._commit_doc(0)
-    # forge the legacy state: fold the per-file sidecars into one
-    # monolith exactly as the pre-r17 writer laid it out
-    filemap = {}
-    for b, name in doc0["bloom_files"].items():
-        with open(os.path.join(ld, name)) as fh:
-            e = _json.load(fh)
-        filemap[b] = {"h": e["h"], "m": e["m"], "k": e["k"]}
-        os.unlink(os.path.join(ld, name))
-    conf = doc0["bloom_conf"]
-    mono = "00000000-deadbeef.bloom.json"
-    with open(os.path.join(ld, mono), "w") as fh:
-        _json.dump(
-            {
-                "col": "k", "m": conf["m"], "k": conf["k"],
-                "bpk": conf["bpk"], "files": filemap,
-            },
-            fh,
-        )
-    doc0.pop("bloom_files")
-    doc0["bloom_sidecar"] = mono
-    with open(os.path.join(ld, "00000000.json"), "w") as fh:
-        _json.dump(doc0, fh)
-
-    # (a) legacy-only: point lookup prunes through the monolith
-    assert t.read_point("k", "00000042").collect()[0]["v"] == 42
-    assert t.last_scan["files_scanned"] < t.last_scan["files_total"]
-
-    # (b) hybrid: a narrow merge rewrites a few files; carried files
-    # stay covered by the legacy pointer, rewritten ones get .bf.json
-    upd = df.filter(F.col("v") < 200).withColumn(
-        "v", F.col("v") + 1_000_000
-    )
-    t.merge(upd, "k")
-    doc1 = t._commit_doc(1)
-    assert doc1.get("bloom_sidecar") == mono  # legacy kept alive
-    assert doc1.get("bloom_files")  # new files per-file indexed
-    assert t.read_point("k", "00000007").collect()[0]["v"] == 1_000_007
-    assert t.last_scan["files_scanned"] < t.last_scan["files_total"]
-    assert t.read_point("k", "00003210").collect()[0]["v"] == 3210
-    assert t.last_scan["files_scanned"] < t.last_scan["files_total"]
-
-    # (c) full rewrite: no legacy-covered file remains -> pointer gone
-    t.compact(target_rows=10**9)
-    doc2 = t._commit_doc(t.version())
-    assert "bloom_sidecar" not in doc2
-    assert set(doc2["bloom_files"]) == {
-        os.path.basename(f) for f in doc2["files"]
-    }
-    assert t.read_point("k", "00000007").collect()[0]["v"] == 1_000_007
-
-
 def test_bloom_merge_distributed_probe_large_batch(spark, tmp_path):
     """VERDICT r14 #1: a merge batch past _BLOOM_PRUNE_MAX_KEYS (the
     normal delta size at 100 TB) no longer abandons bloom pruning --
@@ -2078,7 +1775,7 @@ def test_maintain_bloom_drops_wrong_column_parent_names(spark, tmp_path):
     # SAME files under a conf indexing column v
     out = t._maintain_bloom(1, files, {"bloom_conf": {
         "col": "v", "m": 8192, "k": 5, "bpk": 10,
-    }})
+    }}, doc0)
     assert out["bloom_conf"]["col"] == "v"
     fresh = out["bloom_files"]
     assert set(fresh) == {os.path.basename(f) for f in files}

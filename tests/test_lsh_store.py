@@ -509,12 +509,6 @@ def test_auto_prune_skips_saturated_blooms():
     assert not _auto_prune(doc(cap_rows * 4, 10), 10)
     # same shape just under the cap: prune
     assert _auto_prune(doc(cap_rows - 1, 40), 40)
-    # a conf without bpk (legacy doc) never triggers the term
-    big = {
-        "file_stats": {f"f{i}": {"rows": 2_000_000} for i in range(10)},
-        "bloom_conf": {"col": "bk2"},
-    }
-    assert _auto_prune(big, 10)
 
 
 def test_auto_prune_prefers_measured_calibration():

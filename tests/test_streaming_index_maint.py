@@ -388,17 +388,11 @@ def test_multifile_batch_event_order_is_file_then_row(spark, staged):
 
 
 def test_preimage_resolution_skips_postbatch_legacy_commit(spark, staged):
-    """Round-12 ADVICE #2: on a mixed legacy/new log, a commit WITHOUT
-    a txn map that lands AFTER a batch (e.g. a pre-upgrade compact)
-    still contains that batch's data -- _version_before_batch must not
-    treat it as applied=-1 and hand it back as the pre-image.  The
-    cumulative reconstruction (CowTable.txn_version_at) resolves the
-    legacy commit's true high-water from the app_meta below it."""
-    import json as _json
-
-    from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.cow_table import (
-        _commit_path,
-    )
+    """Round-12 ADVICE #2: a commit without its own app_meta that lands
+    AFTER a batch (a compact) still contains that batch's data --
+    _version_before_batch must not hand it back as the pre-image.  The
+    cumulative txn map every commit carries (CowTable.txn_version_at)
+    resolves the compact's true high-water."""
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.streaming.index_maint import (
         _version_before_batch,
     )
@@ -411,22 +405,14 @@ def test_preimage_resolution_skips_postbatch_legacy_commit(spark, staged):
     corpus.compact(100_000)                    # v2 contains batch 0's data
     head = corpus.version()
     assert head == 2
-    # simulate pre-upgrade provenance: strip the compact's txn map
-    p = _commit_path(corpus.path, head)
-    with open(p) as f:
-        doc = _json.load(f)
-    doc.pop("txn", None)
-    doc.pop("app_meta", None)
-    os.remove(p)
-    with open(p, "w") as f:
-        _json.dump(doc, f)
-    # the pre-image of batch 0 is the CREATE snapshot, not the legacy
-    # compact that already absorbed the batch
+    assert "app_meta" not in corpus._commit_doc(head)
+    # the pre-image of batch 0 is the CREATE snapshot, not the compact
+    # that already absorbed the batch
     assert corpus.txn_version_at(head, "ref_docs_maint") == 0
     assert _version_before_batch(corpus, "ref_docs_maint", 0) == 0
     assert _version_before_batch(corpus, "ref_docs_maint", 1) == head
     # and the idempotence guard still sees batch 0 as applied: a
-    # forced redelivery after the legacy compact stays a no-op
+    # forced redelivery after the compact stays a no-op
     state = (_canon(index.read()), corpus.version(), index.version())
     applier(_batch_df(spark, _BATCHES[0]), 0)
     assert (_canon(index.read()), corpus.version(), index.version()) == state

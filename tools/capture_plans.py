@@ -1,8 +1,9 @@
 """Capture .explain('formatted') output for named queries into
-plans/r19/<query>_<tag>.txt -- the optimization round's before/after
-plan evidence (the judge checks plan claims against these files).
+plans/<round>/<query>_<tag>.txt -- an optimization round's before/after
+plan evidence, checked against the plan claims made for that round.
 
-Usage: python tools/capture_plans_r19.py <before|after> [query ...]
+Usage: python tools/capture_plans.py <round> <before|after> [query ...]
+e.g. ``python tools/capture_plans.py r19 after m22_cow_change_feed``.
 Defaults to the bench HEADLINE set when no query names are given.
 """
 
@@ -21,10 +22,14 @@ def main() -> int:
     from bench import HEADLINE
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.session import get_spark
 
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(HEADLINE)
+    if len(sys.argv) < 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(REPO, "plans", "r19")
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark(app_name="capture_plans", master="local[4]",
