@@ -252,8 +252,10 @@ def _prune_files(
     ``last_probe["prune_fallbacks"]`` for callers that prefer to
     hard-fail."""
     try:
-        files, got_mode, _, _ = store.table._candidate_files(
-            keys, col, version, mode, probe_rows=probe_rows
+        files, got_mode, _ = store.table._candidate_files(
+            keys, col, version,
+            "distributed" if mode == "distributed" else None,
+            probe_rows=probe_rows,
         )
         store._probe_fallbacks = 0
         return files, got_mode
@@ -611,7 +613,7 @@ class LshBucketStore:
             )
             .coalesce(max(1, int(target_files)))
         )
-        new_files, new_stats, out_dir = t._write_data_files(
+        new_files, new_stats, _, written = t._write_data_files(
             folded, base_version + 1
         )
         meta = {
@@ -637,7 +639,8 @@ class LshBucketStore:
         except Exception:
             import shutil
 
-            shutil.rmtree(out_dir, ignore_errors=True)
+            for d in written:
+                shutil.rmtree(d, ignore_errors=True)
             raise
 
     # -- probe ---------------------------------------------------------

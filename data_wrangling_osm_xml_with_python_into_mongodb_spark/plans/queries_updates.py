@@ -874,9 +874,10 @@ def q_cow_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cow_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The staging (md5-keyed orders) is test scaffolding; the
-    operators under test are the change-set builder
-    (CowTable._change_set), the per-path feed writers (cow merge, dv
-    delete), and read_changes (sources/cow_table.py)."""
+    operators under test are the mutation layer's change classifier
+    and writer (CowTable._classify, CowTable._write_data_files) on a
+    cow merge and a dv delete, and read_changes
+    (sources/cow_table.py)."""
     import tempfile
 
     from ..sources.cow_table import CowTable

@@ -21,13 +21,18 @@ so the engine's upsert path runs end-to-end in any environment:
   :class:`ConcurrentWriteError` and leaves no partial state (its
   orphaned data dir is invisible to readers, Delta-style);
 * :meth:`CowTable.merge` is ``MERGE INTO`` semantics (matched keys
-  update wholesale, unmatched source rows insert) touching ONLY the
-  files that contain matched keys: a semi-join against the source
-  keys identifies affected files (driver-sized: file names), those
-  rows are re-merged and rewritten, every other file is carried into
-  the new commit by reference.  At 100 TB that is the difference
-  between rewriting gigabytes and rewriting everything -- the same
-  copy-on-write contract as Delta, minus the jar;
+  update wholesale, unmatched source rows insert, optional deletes)
+  touching ONLY the files that contain matched keys.  Every keyed
+  mutation -- cow and mor merge, cow and dv delete -- shares one back
+  half: candidate files (pruned by the commit log's key ranges and
+  bloom filters) -> the matched keys, each flagged by whether the
+  source carries it -> one classifier that labels every written row
+  (data, or a change-feed row) -> one writer that emits data and
+  change files in a single write -> one commit-and-cleanup.  Every
+  other file is carried into the new commit by reference.  At 100 TB
+  that is the difference between rewriting gigabytes and rewriting
+  everything -- the same copy-on-write contract as Delta, minus the
+  jar;
 * :meth:`read` accepts ``version=`` -- time travel over the log;
 * every commit records per-file column min/max/null-count harvested
   from the parquet FOOTERS at write time (metadata-only, no data
@@ -146,11 +151,11 @@ _BLOOM_BUILD_DRIVER_MAX_BYTES = 64 << 20
 # margin so tiny commits never pay the job.
 _BLOOM_BUILD_DRIVER_MAX_ROWS = 50_000
 
-# Above this many distinct delete keys, merge() stops inlining them as
-# an isin() literal list (a Catalyst-plan / driver-memory hazard) and
-# switches to a join against the delete-key frame.  The inline path is
-# faster for the delta-sized batches incremental maintenance sends;
-# the join path scales to arbitrarily large delete sets.
+# Above this many distinct delete keys, an oversized mutation batch
+# stops holding them as driver rows (a driver-memory hazard) and pins
+# the delete-key frame once instead.  Driver rows are faster for the
+# delta-sized batches incremental maintenance sends; the pinned frame
+# scales to arbitrarily large delete sets.
 _DELETE_INLINE_MAX = 10_000
 
 # Above this many matched (file, key, flag) rows, the merge's
@@ -159,10 +164,10 @@ _DELETE_INLINE_MAX = 10_000
 # one delta-sized localCheckpoint the joins build from instead.
 _MATCHED_INLINE_MAX = 10_000
 
-# Merge ships the source's distinct keys to every executor as the
-# anti-join build side (the affected slice then streams through with
-# no exchange -- see _finish_merge_attempt).  The explicit broadcast
-# hint is only safe when the key count is KNOWN bounded; this cap
+# A mutation ships its matched keys to every executor as the
+# classifier's join build side (the affected slice then streams
+# through with no exchange -- see CowTable._classify).  The explicit
+# broadcast hint is only safe when the key count is KNOWN bounded; this cap
 # keeps the built relation well under Spark's 8 GB / 512M-row
 # broadcast limits (1M keys x ~32-64 B of typical key bytes is
 # 32-64 MB framed) while covering every delta-sized maintenance
@@ -844,6 +849,37 @@ def _release_pinned(df) -> None:
         pass
 
 
+def _key_frame(spark: SparkSession, rows, fields) -> DataFrame:
+    """Driver-held key rows as a broadcast LocalRelation with columns
+    ``fields`` (``(name, dataType)`` pairs): data, not an ``isin()``
+    literal -- a multi-thousand-literal In costs seconds of driver
+    planning per action -- and a join build side that evaluates no
+    subtree."""
+    from pyspark.sql.types import StructField, StructType
+
+    return F.broadcast(spark.createDataFrame(
+        list(rows), StructType([StructField(n, t) for n, t in fields])
+    ))
+
+
+def _touch_rows(rows) -> list[dict] | None:
+    """``(key, source flag, delete flag)`` rows grouped by key on the
+    driver -- a key's flags OR together, as ``groupBy(key).agg(max)``
+    would -- as ``{"_mk", "_s", "_d"}`` dicts, one per key.  NaN keys
+    group together (Spark's key equality).  None when a key type has
+    no Python hash; the caller then treats the batch as oversized."""
+    out: dict = {}
+    try:
+        for k, s, d in rows:
+            g = ("nan",) if isinstance(k, float) and k != k else k
+            r = out.setdefault(g, {"_mk": k, "_s": False, "_d": False})
+            r["_s"] = r["_s"] or bool(s)
+            r["_d"] = r["_d"] or bool(d)
+    except TypeError:
+        return None
+    return list(out.values())
+
+
 #: process-wide memo of PARSED commit docs, keyed by (path, mtime_ns,
 #: size) so a re-created table at the same path can never serve a
 #: stale doc (r19).  Commit docs are immutable once linked, but they
@@ -1140,61 +1176,6 @@ class CowTable:
         os.replace(tmp, os.path.join(_log_dir(self.path), name))
         return {**stats, "dv_sidecar": name}
 
-    def _change_feed_enabled(self, version: int) -> bool:
-        """Whether the change feed is on as of ``version``: the flag is
-        set at create (or by a later commit) and carried forward by
-        every commit like the txn map -- one head read answers."""
-        if version < 0:
-            return False
-        try:
-            return bool(self._commit_doc(version).get("change_feed"))
-        except (OSError, ValueError):
-            return False
-
-    def _write_change_files(self, df: DataFrame, version: int) -> list[str]:
-        """Write a commit's row-level change set (table columns +
-        ``_change_type``) under ``<path>/changes/v<N>-<token>/`` --
-        same racing-writer token discipline as data files; readers
-        only open the paths the commit doc lists.
-
-        The change set is delta-sized by contract, but its plan
-        inherits its inputs' partitioning (a 200-partition merge
-        source would scatter a 1k-row change set over 200 near-empty
-        files, taxing every read_changes/stream poll with file-open
-        overhead) -- so the write bounds itself to 8 output files.
-
-        REBALANCE, not coalesce (r18 opt round): the cow change plan
-        is exchange-free since the broadcast-marker rewrite, and a
-        coalesce on a shuffle-less plan does not just cap the WRITE
-        tasks -- it pulls the whole upstream scan (the rewritten
-        files' live rows, table-scale) into those few tasks.  The
-        rebalance exchange moves only the delta-sized change rows
-        (the scan keeps full parallelism) and AQE coalesces the
-        output to advisory-sized partitions, so a tiny change set
-        lands as ONE file (a tailing consumer's per-poll open cost)
-        while a bulk one keeps parallel right-sized writers (guide
-        §6)."""
-        out = os.path.join(
-            self.path, "changes", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
-        # REBALANCE is an AQE feature: with adaptive execution off in
-        # a caller-built session the hint no-ops and the change set
-        # would scatter over spark.sql.shuffle.partitions near-empty
-        # files (ADVICE r18 #4) -- fall back to the pre-r18
-        # coalesce(8) there.
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        sized = (
-            df.hint("rebalance")
-            if str(aqe).lower() == "true"
-            else df.coalesce(8)
-        )
-        sized.write.mode("error").parquet(out)
-        return [
-            os.path.join(out, n)
-            for n in os.listdir(out)
-            if n.endswith(".parquet")
-        ]
-
     def _commit(self, version: int, files: list[str], op: str, stats: dict) -> dict:
         """Link commit ``version``: the ONE writer of the commit-doc
         format (module docstring).  ``stats`` must carry ``schema`` and
@@ -1358,46 +1339,93 @@ class CowTable:
 
     def _write_data_files(
         self, df: DataFrame, version: int
-    ) -> tuple[list[str], dict, str]:
-        """Write the files of a prospective version N and harvest their
-        footer stats (keyed by basename, for the commit doc).  The data
-        dir carries a per-attempt random token: two writers racing to
-        the same version number must not collide on the DIRECTORY
-        before the commit race is even decided (Delta writes uniquely
-        named files for the same reason); readers only ever open the
-        explicit paths a commit lists, never a directory.  Returns
-        (files, stats, out_dir) -- out_dir so a losing writer can
-        remove exactly what it wrote."""
-        out = os.path.join(
-            self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
-        df.write.mode("error").parquet(out)
-        files = [
-            os.path.join(out, n)
-            for n in os.listdir(out)
-            if n.endswith(".parquet")
-        ]
+    ) -> tuple[list[str], dict, list[str], list[str]]:
+        """The one writer of every commit: write the files of a
+        prospective version N and harvest their footer stats (keyed by
+        basename, for the commit doc).  The dirs carry a per-attempt
+        random token: two writers racing to the same version number
+        must not collide on a DIRECTORY before the commit race is even
+        decided (Delta writes uniquely named files for the same
+        reason); readers only ever open the explicit paths a commit
+        lists, never a directory.
+
+        A frame carrying ``_change_type`` (a change-feed mutation, see
+        :meth:`_classify`) is ONE partitioned staging write that splits
+        data rows (``_change_type`` NULL) from change rows, so both
+        come from a single evaluation.  The staging dir lives OUTSIDE
+        ``data/`` (vacuum walks data/ version dirs flat); the files
+        then RENAME into the flat per-version token dirs under
+        ``data/`` and ``changes/`` that readers, vacuum and losers
+        expect.  Renames are same-filesystem metadata ops and happen
+        BEFORE the commit links (the change-feed stream's ordering
+        contract).  Those data files keep the all-NULL
+        ``_change_type`` column; snapshot reads project to the
+        recorded schema, which omits it.  Any other frame is a plain
+        write.
+
+        Returns ``(data files, their stats, change files, dirs
+        written)`` -- the dirs so a refused commit removes exactly what
+        it wrote."""
+        import shutil
+
+        token = uuid.uuid4().hex[:8]
+        out = os.path.join(self.path, "data", f"v{version}-{token}")
+        chg = os.path.join(self.path, "changes", f"v{version}-{token}")
+        files: list[str] = []
+        chg_files: list[str] = []
+        if "_change_type" in df.columns:
+            disp = "_cdc_disp"
+            stage = os.path.join(self.path, "_stage", f"v{version}-{token}")
+            (
+                df.withColumn(
+                    disp,
+                    F.when(F.col("_change_type").isNull(), F.lit("d"))
+                    .otherwise(F.lit("c")),
+                )
+                .write.mode("error")
+                .partitionBy(disp)
+                .parquet(stage)
+            )
+            for sub, dst, acc in (
+                (f"{disp}=d", out, files),
+                (f"{disp}=c", chg, chg_files),
+            ):
+                sdir = os.path.join(stage, sub)
+                if not os.path.isdir(sdir):
+                    continue
+                os.makedirs(dst, exist_ok=True)
+                for n in sorted(os.listdir(sdir)):
+                    if n.endswith(".parquet"):
+                        os.replace(
+                            os.path.join(sdir, n), os.path.join(dst, n)
+                        )
+                        acc.append(os.path.join(dst, n))
+            shutil.rmtree(stage, ignore_errors=True)
+        else:
+            df.write.mode("error").parquet(out)
+            files = [
+                os.path.join(out, n)
+                for n in os.listdir(out)
+                if n.endswith(".parquet")
+            ]
         stats = self._harvest_file_stats(files)
         # Zero-row files carry no column stats, so they would survive
         # every range/bloom prune as permanent candidates (and cost a
         # file open per read) while contributing nothing.  Exchange-
-        # free merge plans (anti-join + union, r18) emit one output
-        # partition per input partition, empties included -- drop them
-        # at the source instead of referencing them forever.
-        empty = [
-            f for f in files
+        # free plans (an anti-join + union) emit one output file per
+        # input partition, empties included -- drop them at the source
+        # instead of referencing them forever.
+        empty = {
+            os.path.basename(f)
+            for f in files
             if stats.get(os.path.basename(f), {}).get("rows") == 0
-        ]
-        if empty:
-            for f in empty:
-                with contextlib.suppress(OSError):
-                    os.remove(f)
-            files = [f for f in files if f not in set(empty)]
-            stats = {
-                b: s for b, s in stats.items()
-                if os.path.join(out, b) not in set(empty)
-            }
-        return files, stats, out
+        }
+        for b in empty:
+            with contextlib.suppress(OSError):
+                os.remove(os.path.join(out, b))
+        files = [f for f in files if os.path.basename(f) not in empty]
+        stats = {b: s for b, s in stats.items() if b not in empty}
+        return files, stats, chg_files, [out, chg]
 
     def _key_width_estimate(self, version: int, key: str) -> int:
         """Framed per-key bytes for broadcast sizing, from the
@@ -1414,75 +1442,6 @@ class CowTable:
             if isinstance(b, str)
         ]
         return max([16] + [2 * n + 16 for n in lens])
-
-    def _write_fused_cdc_files(
-        self, fused: DataFrame, ct: str, version: int
-    ) -> tuple[list[str], dict, str, list[str]]:
-        """ONE partitioned staging write that emits a merge's data
-        files AND its change files from a single evaluation of
-        ``fused`` (every row pre-classified: ``ct`` NULL = data row,
-        else change row) -- the r19 fusion that halves the wide I/O of
-        a change-feed cow merge.  The staging dir lives OUTSIDE
-        ``data/`` (vacuum walks data/ version dirs flat); files then
-        RENAME into the same flat per-version token dirs every other
-        writer uses, so vacuum/readers/losers see exactly the layout
-        they always did.  Renames are same-filesystem metadata ops and
-        happen BEFORE the commit links (the change-feed stream's
-        ordering contract).  Returns ``(data_files, data_stats,
-        data_dir, change_files)``."""
-        import shutil
-
-        disp = "_cdc_disp"
-        token = uuid.uuid4().hex[:8]
-        stage = os.path.join(self.path, "_stage", f"v{version}-{token}")
-        out = os.path.join(self.path, "data", f"v{version}-{token}")
-        chg = os.path.join(self.path, "changes", f"v{version}-{token}")
-        (
-            fused.withColumn(
-                disp,
-                F.when(F.col(ct).isNull(), F.lit("d")).otherwise(
-                    F.lit("c")
-                ),
-            )
-            .write.mode("error")
-            .partitionBy(disp)
-            .parquet(stage)
-        )
-        data_files: list[str] = []
-        chg_files: list[str] = []
-        for sub, dst, acc in (
-            (f"{disp}=d", out, data_files),
-            (f"{disp}=c", chg, chg_files),
-        ):
-            sdir = os.path.join(stage, sub)
-            if not os.path.isdir(sdir):
-                continue
-            os.makedirs(dst, exist_ok=True)
-            for n in sorted(os.listdir(sdir)):
-                if n.endswith(".parquet"):
-                    os.replace(
-                        os.path.join(sdir, n), os.path.join(dst, n)
-                    )
-                    acc.append(os.path.join(dst, n))
-        shutil.rmtree(stage, ignore_errors=True)
-        stats = self._harvest_file_stats(data_files)
-        # partitionBy never writes an empty per-partition file, but
-        # keep _write_data_files' zero-row guard for parity
-        empty = {
-            f for f in data_files
-            if stats.get(os.path.basename(f), {}).get("rows") == 0
-        }
-        if empty:
-            for f in empty:
-                with contextlib.suppress(OSError):
-                    os.remove(f)
-            data_files = [f for f in data_files if f not in empty]
-            stats = {
-                b: s
-                for b, s in stats.items()
-                if os.path.join(out, b) not in empty
-            }
-        return data_files, stats, out, chg_files
 
     def _harvest_file_stats(self, files: list[str]) -> dict:
         """Per-file footer stats keyed by basename.  Harvested
@@ -1582,7 +1541,7 @@ class CowTable:
                         "per-file floor)"
                     )
                 stats["bloom_conf"]["mcap"] = int(bloom_bits_max)
-        files, fstats, _ = t._write_data_files(df, 0)
+        files, fstats, _, _ = t._write_data_files(df, 0)
         stats["files_written"] = len(files)
         stats["file_stats"] = fstats
         t._commit(0, files, "create", stats)
@@ -1889,8 +1848,6 @@ class CowTable:
         left-semi join -- the same shape :meth:`merge` uses for large
         key batches, so a 100k-value IN-list costs O(files) driver
         work, not O(files x probes)."""
-        from pyspark.sql.types import StructField, StructType
-
         enc = []
         for x in vals:
             e = _enc_stat(x)
@@ -1915,10 +1872,7 @@ class CowTable:
             scan0 = list(files)
         schema = self._snapshot_schema(v)
         ktype = schema[col].dataType
-        probe_df = self.spark.createDataFrame(
-            [(x,) for x in vals],
-            StructType([StructField("_mk", ktype)]),
-        )
+        probe_df = _key_frame(self.spark, [(x,) for x in vals], [("_mk", ktype)])
         scan = self._bloom_prune_distributed(probe_df, scan0, bidx)
         self.last_scan = {
             "files_total": len(files),
@@ -1928,7 +1882,7 @@ class CowTable:
         }
         df = self._read_files(scan, schema, dv_map)
         return df.join(
-            F.broadcast(probe_df.withColumnRenamed("_mk", "__probe_k")),
+            probe_df.withColumnRenamed("_mk", "__probe_k"),
             df[col] == F.col("__probe_k"),
             "left_semi",
         )
@@ -2150,40 +2104,34 @@ class CowTable:
             # coalesce, not repartition: bin-packing needs no shuffle.
             merged = merged.coalesce(nout)
         new_version = base_version + 1
-        new_files, new_stats, out_dir = self._write_data_files(
+        new_files, new_stats, _, written = self._write_data_files(
             merged, new_version
         )
-        try:
-            return self._commit(
-                new_version,
-                kept + new_files,
-                "compact",
-                {
-                    "parent": base_version,
-                    "cluster_by": cluster_by,
-                    "files_compacted": len(small),
-                    "files_kept": len(kept),
-                    "files_written": len(new_files),
-                    "rows_compacted": total,
-                    **(
-                        {"dv_materialized": dv_materialized}
-                        if dv_materialized
-                        else {}
-                    ),
-                    "file_stats": {
-                        **{
-                            b: fstats[b] for b in map(os.path.basename, kept)
-                        },
-                        **new_stats,
-                    },
-                    "schema": merged.schema.jsonValue(),
+        return self._commit_attempt(
+            base_doc,
+            kept + new_files,
+            "compact",
+            {
+                "parent": base_version,
+                "cluster_by": cluster_by,
+                "files_compacted": len(small),
+                "files_kept": len(kept),
+                "files_written": len(new_files),
+                "rows_compacted": total,
+                **(
+                    {"dv_materialized": dv_materialized}
+                    if dv_materialized
+                    else {}
+                ),
+                "file_stats": {
+                    **{b: fstats[b] for b in map(os.path.basename, kept)},
+                    **new_stats,
                 },
-            )
-        except ConcurrentWriteError:
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
+                "schema": merged.schema.jsonValue(),
+            },
+            written,
+            set(),
+        )
 
     def vacuum(
         self, retain_last: int = 1, orphan_grace_s: float = 86400.0
@@ -2381,8 +2329,8 @@ class CowTable:
                         pass
                 if live == 0:
                     shutil.rmtree(vdir, ignore_errors=True)
-        # Fused-write staging GC (r19): _write_fused_cdc_files renames
-        # its output out of <path>/_stage/ before committing, so any
+        # Staging GC: _write_data_files renames a change-feed write's
+        # output out of <path>/_stage/ before committing, so any
         # dir still there belongs to a dead or in-flight writer --
         # remove it once past the same grace window that shields
         # in-flight data files.  Committed files are never under
@@ -2443,6 +2391,7 @@ class CowTable:
             "changes_deleted": changes_deleted,
         }
 
+
     def merge(
         self,
         source: DataFrame,
@@ -2464,15 +2413,18 @@ class CowTable:
         analogue; incremental view maintenance needs it for postings
         that empty out).  Deletes apply to the TARGET before the
         upsert, so a key in both frames ends up with the source row.
-        Copy-on-write with file pruning: only files containing a
-        matched-or-deleted key are rewritten; the rest carry over by
-        reference.  The affected-file scan itself is pruned by the
-        commit log first (files whose key range cannot intersect the
-        batch's [min, max] key envelope are never READ -- Delta-style
-        data skipping applied to the MERGE condition, which makes
-        incremental merges on a range-clustered layout O(touched
-        range), not O(table)).  Returns the commit doc, which records
-        files_kept/files_rewritten/files_probed -- the pruning
+
+        Every keyed mutation -- both merge strategies and both
+        :meth:`delete` modes -- runs one back half
+        (:meth:`_mutate_attempt`): candidate files (range + bloom
+        pruned by the commit log, so files whose key range or filter
+        refutes the batch are never READ) -> matched keys, each with
+        its source flag -> one change classifier (:meth:`_classify`)
+        -> one writer (:meth:`_write_data_files`) -> one
+        commit-and-cleanup (:meth:`_commit_attempt`).  Only files
+        containing a matched-or-deleted key are touched; the rest
+        carry over by reference.  Returns the commit doc, which
+        records files_kept/files_rewritten/files_probed -- the pruning
         evidence.
 
         ``retries``: optimistic-concurrency rebase loop (Delta's
@@ -2503,12 +2455,10 @@ class CowTable:
 
         ``bloom_probe``: how the bloom candidate prune runs -- None
         (default) picks by batch size (driver-side at or below
-        ``_BLOOM_PRUNE_MAX_KEYS`` distinct keys, executor-side above),
+        ``_BLOOM_PRUNE_MAX_KEYS`` distinct keys, executor-side above);
         ``"distributed"`` forces the executor-side probe (skips the
-        sizing collect entirely), ``"driver"`` pins the driver path
-        and degrades to NO bloom prune past the cap rather than
-        collecting an unbounded key set.  The path taken is recorded
-        in the commit doc as ``bloom_probe``.
+        sizing collect entirely).  The path taken is recorded in the
+        commit doc as ``bloom_probe``.
 
         ``strategy``: ``"cow"`` (default) rewrites every file
         containing a matched-or-deleted key -- the read-optimized
@@ -2524,73 +2474,105 @@ class CowTable:
         index; :meth:`compact` materializes the vectors so read
         overhead never accrues unboundedly.  Duplicate-key edge: a
         DUPLICATE-key target row set collapses to the single source
-        row under BOTH strategies (mor kills all its positions; cow's
-        anti-join drops every matched copy and the union emits the
-        source row once per source row) -- merge-maintained tables
-        are unique-keyed by contract; the paths also agree on
-        duplicate keys since r18 (cow's pre-r18 full-outer join
-        fanned the source row out per matched target row instead).
-        Positions are driver-coordinated metadata bounded by
-        ``_DV_COLLECT_MAX`` dead rows per commit; bulk mutations past
-        that must use cow (the same guidance Delta gives)."""
-        # Delete keys: the common (incremental-maintenance) batch is
-        # delta-sized, so collect it ONCE and inline as an isin()
-        # literal -- reused for the touch set, the filter predicate,
-        # and the commit metadata without re-evaluating the plan.
-        # NULL keys never match a join, so dropping them changes
-        # nothing and keeps the isin() predicate three-valued-logic-
-        # safe.  Above _DELETE_INLINE_MAX distinct keys the literal
-        # list would bloat the Catalyst plan and driver heap, so the
-        # batch stays a DataFrame (pinned once -- the attempts traverse
-        # it repeatedly) and the filter becomes an anti-join instead;
-        # the limit()+collect probe reads at most MAX+1 keys to decide.
+        row under BOTH strategies (mor kills all its positions, cow
+        drops every matched copy and emits the source row once per
+        source row) -- merge-maintained tables are unique-keyed by
+        contract.  Positions are driver-coordinated metadata bounded
+        by ``_DV_COLLECT_MAX`` dead rows per commit; bulk mutations
+        past that must use cow (the same guidance Delta gives)."""
         if strategy not in ("cow", "mor"):
             raise ValueError(
                 f"strategy must be 'cow' or 'mor', got {strategy!r}"
             )
+        return self._mutate(
+            source, key, deletes, strategy, retries, meta, evolve_schema,
+            bloom_probe, touch_envelope,
+        )
+
+    def _mutate(
+        self,
+        source: DataFrame | None,
+        key: str,
+        deletes: DataFrame | None,
+        strategy: str,
+        retries: int = 0,
+        meta: dict | None = None,
+        evolve_schema: bool = False,
+        bloom_probe: str | None = None,
+        touch_envelope: tuple | None = None,
+        touch_rows: list | None = None,
+    ) -> dict:
+        """The front half every keyed mutation shares: plan the touch
+        keys ONCE, then run optimistic attempts.  ``source`` None is a
+        deletion-vector delete (a mor mutation with no source).
+
+        Touch keys are the source keys (flag ``_s``) plus the non-null
+        delete keys (flag ``_d``).  A batch of at most
+        ``_BLOOM_PRUNE_MAX_KEYS`` of them is collected by one raw
+        ``limit`` probe and grouped on the driver
+        (:func:`_touch_rows`); the rows hand every attempt its touch
+        set as a broadcast LocalRelation, its range envelope and its
+        bloom probe, so no attempt re-evaluates the batch plans (touch
+        keys are snapshot-independent: reuse across rebase attempts is
+        exact).  A raw probe past the cap takes the oversized path
+        directly -- a duplicate-heavy batch with more rows than the cap
+        but fewer distinct keys just takes it too, which is correct
+        either way -- and its rows ride along as a SAMPLE of the touch
+        keys (see :meth:`_candidate_files`); its delete keys stay
+        inline up to ``_DELETE_INLINE_MAX``, else pin once (the
+        attempts traverse them repeatedly).  The probe is skipped when
+        the caller holds the rows already (``delete(values=)``),
+        supplied a covering ``touch_envelope`` (LSH appends: zero
+        planning jobs stays zero) or forced the distributed bloom
+        probe."""
+        if bloom_probe not in (None, "distributed"):
+            raise ValueError(
+                f"bloom_probe must be None or 'distributed', got "
+                f"{bloom_probe!r}"
+            )
+        if (
+            touch_rows is None
+            and touch_envelope is None
+            and bloom_probe != "distributed"
+        ):
+            sides = []
+            if source is not None:
+                sides.append(source.select(
+                    F.col(key).alias("_mk"),
+                    F.lit(True).alias("_s"),
+                    F.lit(False).alias("_d"),
+                ))
+            if deletes is not None:
+                sides.append(deletes.select(
+                    F.col(key).alias("_mk"),
+                    F.lit(False).alias("_s"),
+                    F.lit(True).alias("_d"),
+                ).filter(F.col("_mk").isNotNull()))
+            flagged = sides[0]
+            for s in sides[1:]:
+                flagged = flagged.unionByName(s)
+            # every partition stops at cap + 1 rows and one exchange
+            # gathers them: two jobs whatever the batch's partition
+            # count, the batch evaluated in parallel (a plain take()
+            # re-runs in rounds over more and more partitions)
+            touch_rows = (
+                flagged.limit(_BLOOM_PRUNE_MAX_KEYS + 1)
+                .coalesce(1)
+                .collect()
+            )
+            if len(touch_rows) <= _BLOOM_PRUNE_MAX_KEYS:
+                touch_rows = _touch_rows(touch_rows)
+        bounded = (
+            touch_rows is not None
+            and len(touch_rows) <= _BLOOM_PRUNE_MAX_KEYS
+        )
         dk_vals: list = []
         dk_df: DataFrame | None = None
-        n_dk = 0
-        touch_rows: list | None = None
-        # Fused touch/delete-key probe (r19): ONE bounded collect over
-        # source keys UNION delete keys (flagged per side) replaces
-        # the dk probe here AND the per-attempt envelope job in
-        # _candidate_files -- and the collected rows hand every
-        # attempt its touch set as a broadcast LocalRelation, so the
-        # batch plans are evaluated exactly once for all of planning
-        # (the detection scan used to re-evaluate the source per
-        # attempt).  Touch keys are snapshot-independent, so reuse
-        # across rebase attempts is exact, like the dk reuse before
-        # it.  Skipped when the caller supplied a covering envelope
-        # (LSH appends: zero planning jobs stays zero).  Oversized
-        # batches fall back to the pre-r19 two-probe flow.
-        if touch_envelope is None and bloom_probe != "distributed":
-            tk_flagged = source.select(
-                F.col(key).alias("_mk"),
-                F.lit(True).alias("_s"),
-                F.lit(False).alias("_d"),
-            )
-            if deletes is not None:
-                tk_flagged = tk_flagged.unionByName(
-                    deletes.select(
-                        F.col(key).alias("_mk"),
-                        F.lit(False).alias("_s"),
-                        F.lit(True).alias("_d"),
-                    ).filter(F.col("_mk").isNotNull())
-                )
-            tk_flagged = tk_flagged.groupBy("_mk").agg(
-                F.max("_s").alias("_s"), F.max("_d").alias("_d")
-            )
-            probe = tk_flagged.limit(_BLOOM_PRUNE_MAX_KEYS + 1).collect()
-            if len(probe) <= _BLOOM_PRUNE_MAX_KEYS:
-                touch_rows = probe
-                dk_vals = [
-                    r["_mk"]
-                    for r in probe
-                    if r["_d"] and r["_mk"] is not None
-                ]
-                n_dk = len(dk_vals)
-        if deletes is not None and touch_rows is None:
+        if bounded:
+            n_dk = sum(1 for r in touch_rows if r["_d"])
+        elif deletes is not None:
+            # NULL keys never match a join; dropping them keeps the
+            # count exact
             dk = (
                 deletes.select(F.col(key).alias("_dk"))
                 .filter(F.col("_dk").isNotNull())
@@ -2599,22 +2581,20 @@ class CowTable:
             probe = dk.limit(_DELETE_INLINE_MAX + 1).collect()
             if len(probe) > _DELETE_INLINE_MAX:
                 dk_df = dk.localCheckpoint(eager=True)
-                # count ONCE here (r18 VERDICT #6): the commit-doc
-                # delete_keys metadata used to re-count the pinned
-                # frame per attempt
                 n_dk = dk_df.count()
             else:
                 dk_vals = [r["_dk"] for r in probe]
                 n_dk = len(dk_vals)
-
+        else:
+            n_dk = 0
         attempt = 0
         try:
             while True:
                 try:
-                    return self._merge_attempt(
-                        source, key, dk_vals, dk_df, meta, evolve_schema,
-                        bloom_probe, strategy, touch_envelope,
-                        touch_rows=touch_rows, n_dk=n_dk,
+                    return self._mutate_attempt(
+                        source, key, strategy, dk_vals, dk_df, n_dk,
+                        touch_rows, meta, evolve_schema, bloom_probe,
+                        touch_envelope,
                     )
                 except ConcurrentMergeConflictError:
                     raise
@@ -2626,95 +2606,403 @@ class CowTable:
             if dk_df is not None:
                 _release_pinned(dk_df)
 
-    def _merge_attempt(
-        self, source: DataFrame, key: str, dk_vals: list,
-        dk_df: DataFrame | None = None,
-        meta: dict | None = None,
-        evolve_schema: bool = False,
-        bloom_probe: str | None = None,
-        strategy: str = "cow",
-        touch_envelope: tuple | None = None,
-        touch_rows: list | None = None,
-        n_dk: int | None = None,
+    def _mutate_attempt(
+        self,
+        source: DataFrame | None,
+        key: str,
+        strategy: str,
+        dk_vals: list,
+        dk_df: DataFrame | None,
+        n_dk: int,
+        touch_rows: list | None,
+        meta: dict | None,
+        evolve_schema: bool,
+        bloom_probe: str | None,
+        touch_envelope: tuple | None,
     ) -> dict:
-        """One optimistic attempt of :meth:`merge` against the current
-        head.  On a lost commit race, classifies the failure: if the
-        interleaved commit removed any file THIS attempt rewrote
-        (possible same-key write), raises
-        :class:`ConcurrentMergeConflictError`; otherwise re-raises the
-        plain retryable :class:`ConcurrentWriteError`."""
+        """One optimistic attempt of a keyed mutation against the
+        current head: the ONE back half of cow merge, mor merge and dv
+        delete.
+
+        1. Candidate files (:meth:`_candidate_files`).
+        2. Matched keys, each with its source flag ``_s`` -- the one
+           marker relation.  cow: the detection scan collects distinct
+           (file, key, ``_s``) triples (driver rows up to
+           ``_MATCHED_INLINE_MAX``, else one pinned frame) and picks
+           the files to rewrite.  mor/dv: the position harvest
+           (:meth:`_dv_positions_for`) marks the matched live rows
+           dead and, with the change feed on, pins them wide with
+           their ``_s`` as the pre-image.
+        3. :meth:`_classify` builds the rows this commit writes.
+        4. :meth:`_write_data_files` writes them: data files, plus the
+           change files when the feed is on, in one write.
+        5. :meth:`_commit_attempt` commits or cleans up.
+
+        ``touch_rows``: the front half's grouped touch rows, its
+        overflowed raw probe (more than ``_BLOOM_PRUNE_MAX_KEYS`` rows:
+        a sample only), or None.  A dv delete (``source`` None) writes
+        no data file at all."""
+        from pyspark.sql.types import BooleanType, StructType
+
         base_version = self.version()
-        snapshot_files = self.files(base_version)
+        if base_version < 0:
+            raise FileNotFoundError(f"no CowTable at {self.path}")
+        base_doc = self._commit_doc(base_version)
+        snapshot_files = base_doc["files"]
+        snap_schema = self._snapshot_schema(base_version)
+        dv_map = self._dv_map(base_doc)
+        feed = bool(base_doc.get("change_feed"))
 
-        # The touch-key set carries a source-membership flag ``_s``
-        # (r18 opt round): the affected-file detection scan joins
-        # against it anyway, so collecting (file, key, _s) instead of
-        # file names alone hands the back half the matched SOURCE keys
-        # and matched DELETE-only keys as driver literals at zero
-        # extra jobs -- which is what lets the rewrite and the change
-        # set classify against tiny broadcast LocalRelations (see
-        # _finish_merge_attempt).
-        #
-        # r19: when merge() collected the (bounded) touch rows, the
-        # touch set is rebuilt here as a LocalRelation -- data already
-        # in the driver's hands -- so NOTHING in planning or detection
-        # evaluates the source plan again (the detection scan used to
-        # re-run the full source subtree per attempt), and the
-        # detection join build side is a broadcast of local rows.
-        if touch_rows is not None:
-            from pyspark.sql.types import (
-                BooleanType, StructField, StructType,
+        # Source projection onto the (possibly evolved) table layout,
+        # BEFORE any scan: a strict-schema error costs no job and pins
+        # nothing.  Strict mode: a source missing a table column fails
+        # HERE, deterministically, with the columns named (also the
+        # outcome when a rebase finds a concurrently-widened schema:
+        # Delta's MetadataChanged analogue).  Evolve mode: table
+        # columns absent from the source NULL-fill, and source-only
+        # columns append to the layout.  A column whose type differs
+        # from the table's (nullability aside) casts to it.
+        src = None
+        if source is not None:
+            missing = [
+                f for f in snap_schema.fields if f.name not in source.columns
+            ]
+            if missing and not evolve_schema:
+                raise ValueError(
+                    f"merge source is missing table column(s) "
+                    f"{[f.name for f in missing]} of {self.path} (snapshot "
+                    f"v{base_version}); pass evolve_schema=True to "
+                    "NULL-fill, or align the source"
+                )
+            for fld in missing:
+                source = source.withColumn(
+                    fld.name, F.lit(None).cast(fld.dataType)
+                )
+            names = set(snap_schema.fieldNames())
+            have = {f.name: f.dataType for f in source.schema.fields}
+            src = source.select(
+                *[
+                    F.col(f.name)
+                    if have[f.name].simpleString() == f.dataType.simpleString()
+                    else F.col(f.name).cast(f.dataType).alias(f.name)
+                    for f in snap_schema.fields
+                ],
+                *[
+                    F.col(f.name)
+                    for f in source.schema.fields
+                    if evolve_schema and f.name not in names
+                ],
             )
 
-            ktype = source.schema[key].dataType
-            touch_keys = F.broadcast(self.spark.createDataFrame(
-                [(r["_mk"], bool(r["_s"])) for r in touch_rows],
-                StructType([
-                    StructField("_mk", ktype),
-                    StructField("_s", BooleanType()),
-                ]),
-            ))
+        # The touch set (_mk, _s): driver rows when the front half
+        # collected them, else the batch frames themselves.
+        ktype = (
+            source.schema if source is not None else snap_schema
+        )[key].dataType
+        flags = [("_mk", ktype), ("_s", BooleanType())]
+        if touch_rows is not None and len(touch_rows) <= (
+            _BLOOM_PRUNE_MAX_KEYS
+        ):
+            touch_keys = _key_frame(
+                self.spark, [(r["_mk"], r["_s"]) for r in touch_rows], flags
+            )
         else:
-            sk = source.select(
-                F.col(key).alias("_mk"), F.lit(True).alias("_s")
-            )
+            sides = []
+            if source is not None:
+                sides.append(source.select(
+                    F.col(key).alias("_mk"), F.lit(True).alias("_s")
+                ))
             if dk_vals:
-                touch_keys = sk.unionByName(
-                    self.spark.createDataFrame(
-                        [(v, False) for v in dk_vals], sk.schema
-                    )
-                ).groupBy("_mk").agg(F.max("_s").alias("_s"))
+                sides.append(_key_frame(
+                    self.spark, [(v, False) for v in dk_vals], flags
+                ))
             elif dk_df is not None:
-                touch_keys = sk.unionByName(
-                    dk_df.select(
-                        F.col("_dk").alias("_mk"), F.lit(False).alias("_s")
-                    )
-                ).groupBy("_mk").agg(F.max("_s").alias("_s"))
-            else:
-                touch_keys = sk.distinct()
+                sides.append(dk_df.select(
+                    F.col("_dk").alias("_mk"), F.lit(False).alias("_s")
+                ))
+            touch_keys = sides[0]
+            for s in sides[1:]:
+                touch_keys = touch_keys.unionByName(s)
+            if len(sides) > 1:
+                touch_keys = touch_keys.groupBy("_mk").agg(
+                    F.max("_s").alias("_s")
+                )
+            elif source is not None:
+                touch_keys = touch_keys.distinct()
 
-        candidates, bloom_mode, n_touch, _ = self._candidate_files(
+        candidates, bloom_mode, n_touch = self._candidate_files(
             touch_keys, key, base_version, bloom_probe,
             probe_rows=touch_rows, touch_envelope=touch_envelope,
-            # merge() already ran the bounded probe whenever it could;
-            # touch_rows=None there means it OVERFLOWED -- don't pay
-            # the doomed limit-collect again per attempt
-            skip_probe=(
-                touch_rows is None
-                and touch_envelope is None
-                and bloom_probe != "distributed"
+        )
+        # Broadcast gate for key sets that are frames, not driver rows:
+        # a count bound AND a byte estimate (wide string keys could
+        # push a count-gated build side past driver/broadcast limits);
+        # the width estimate comes from the snapshot's footer stats.
+        small_keys = (
+            n_touch is not None
+            and n_touch <= _MERGE_BROADCAST_MAX_KEYS
+            and n_touch * self._key_width_estimate(base_version, key)
+            <= _MERGE_BROADCAST_MAX_BYTES
+        )
+
+        pin: DataFrame | None = None  # released once the write ran
+        pre = marks = None
+        rewritten: list[str] = []
+        dv_updates: dict = {}
+        rows_dv = 0
+        if strategy == "cow":
+            if candidates:
+                # DV-aware detection scan: rows already dead by a
+                # merge-on-read commit can neither mark their file
+                # affected nor be resurrected by the rewrite.  ALWAYS
+                # limit-probed: a touch count past the cap does not
+                # bound the matched count, and a large batch with few
+                # matches stays on the driver-rows fast path.
+                tagged = self._read_files(
+                    candidates, snap_schema, dv_map, file_col="_file"
+                )
+                matched = (
+                    tagged.join(
+                        touch_keys, tagged[key] == F.col("_mk"), "inner"
+                    )
+                    .select("_file", F.col(key).alias("_k"), "_s")
+                    .distinct()
+                )
+                probe = matched.limit(_MATCHED_INLINE_MAX + 1).collect()
+                if len(probe) <= _MATCHED_INLINE_MAX:
+                    affected = {r["_file"] for r in probe}
+                    if probe:
+                        marks = _key_frame(
+                            self.spark,
+                            list(dict.fromkeys(
+                                (r["_k"], r["_s"]) for r in probe
+                            )),
+                            flags,
+                        )
+                else:
+                    pin = matched.localCheckpoint(eager=True)
+                    affected = {
+                        r["_file"]
+                        for r in pin.select("_file").distinct().collect()
+                    }
+                    marks = pin.select(
+                        F.col("_k").alias("_mk"), "_s"
+                    ).distinct()
+                    if small_keys:
+                        marks = F.broadcast(marks)
+                rewritten = [
+                    f for f in snapshot_files
+                    if os.path.basename(f) in affected
+                ]
+            if rewritten:
+                # the live rows of the rewritten files: their deletion
+                # vectors materialize here for free (the new files
+                # lack the dead rows; _maintain_dv drops the entries)
+                pre = self._read_files(rewritten, snap_schema, dv_map)
+        else:
+            dv_updates, rows_dv, pin = self._dv_positions_for(
+                candidates, snap_schema, dv_map, key, touch_keys,
+                want_rows=feed,
+            )
+            if pin is not None:
+                pre = pin.drop("__dvf", "__dvp")
+                if src is not None:
+                    marks = pre.select(
+                        F.col(key).alias("_mk"), "_s"
+                    ).distinct()
+                    if small_keys:
+                        marks = F.broadcast(marks)
+        gone = set(rewritten)
+        kept = [f for f in snapshot_files if f not in gone]
+
+        out = self._classify(pre, src, key, marks, feed)
+        if out is not None and rewritten:
+            # coalesce, no shuffle: caps the output file count at the
+            # rewritten-file count, FLOORED so an insert-heavy merge
+            # that touches one file keeps parallel writers
+            # (coalesce(n) past the input partition count is
+            # identity).  Insert-only and mor writes keep the source's
+            # own partitioning.
+            out = out.coalesce(max(
+                len(rewritten),
+                min(8, self.spark.sparkContext.defaultParallelism),
+            ))
+        new_files: list[str] = []
+        new_stats: dict = {}
+        chg_files: list[str] = []
+        written: list[str] = []
+        try:
+            if out is not None:
+                new_files, new_stats, chg_files, written = (
+                    self._write_data_files(out, base_version + 1)
+                )
+        finally:
+            if pin is not None:
+                _release_pinned(pin)
+        schema = (
+            snap_schema
+            if out is None
+            else StructType(
+                [f for f in out.schema.fields if f.name != "_change_type"]
+            )
+        )
+        op = "delete" if source is None else "merge"
+        stats = {
+            "parent": base_version,
+            **(
+                {"strategy": "dv" if source is None else "mor"}
+                if strategy == "mor"
+                else {}
             ),
+            "files_kept": len(kept),
+            "files_rewritten": len(rewritten),
+            "files_written": len(new_files),
+            **({"change_files": chg_files} if chg_files else {}),
+            # skipping evidence: candidate files the mutation actually
+            # READ (vs len(files) total), and which bloom path pruned
+            "files_probed": len(candidates),
+            **({"bloom_probe": bloom_mode} if bloom_mode else {}),
+            **({"delete_keys": n_dk} if op == "merge" else {}),
+            **({"app_meta": meta} if meta is not None else {}),
+            "file_stats": {
+                **{
+                    b: base_doc["file_stats"][b]
+                    for b in map(os.path.basename, kept)
+                },
+                **new_stats,
+            },
+            "schema": schema.jsonValue(),
+        }
+        if strategy == "mor":
+            stats.update(
+                dv_files_updated=len(dv_updates),
+                rows_dv_deleted=rows_dv,
+                dv_updates=dv_updates,
+            )
+        return self._commit_attempt(
+            base_doc, kept + new_files, op, stats, written,
+            {os.path.basename(f) for f in rewritten} | set(dv_updates),
         )
-        finish = (
-            self._finish_merge_mor
-            if strategy == "mor"
-            else self._finish_merge_attempt
-        )
-        return finish(
-            source, key, dk_vals, dk_df, meta, evolve_schema,
-            base_version, snapshot_files, touch_keys, candidates,
-            bloom_mode, n_touch, n_dk=n_dk,
-        )
+
+    def _classify(
+        self,
+        pre: DataFrame | None,
+        src: DataFrame | None,
+        key: str,
+        marks: DataFrame | None,
+        feed: bool,
+    ) -> DataFrame | None:
+        """The one change classifier of every keyed mutation: the rows
+        one commit writes, each tagged with its change type when the
+        change feed is on.
+
+        ``pre`` is the pre-image slice -- cow: the rewritten files'
+        live rows; mor/dv: the matched rows the position harvest
+        pinned, which carry their source flag ``_s`` already (the
+        harvest's join IS their join against the marker).  ``src`` is
+        the source projected onto the table layout (None for a
+        delete), ``marks`` the matched keys ``(_mk, _s)`` (None when
+        nothing matched).  One join per side against that single
+        marker:
+
+        * a pre row with ``_s`` true is ``update_preimage``, with
+          ``_s`` false ``delete``, with no match a carried data row;
+        * a matched source row is ``update_postimage``, any other
+          ``insert`` (NULL keys match nothing and always insert).
+
+        Feed on: every row carries ``_change_type`` (NULL = data row)
+        and each source row emits its data copy and its change copy
+        from ONE evaluation (an explode), so :meth:`_write_data_files`
+        splits data files from change files in one write.  Feed off:
+        matched pre rows drop (an anti-join, which streams the slice
+        scan -> filter -> write with zero exchange) and each source
+        row is emitted once; the mor/dv pre-image is then never
+        pinned, as none of it is written.  Returns None when the
+        commit writes no rows at all (a feed-less dv delete)."""
+        ct = "_change_type"
+        parts: list[DataFrame] = []
+        # source first: its layout (evolved columns included) leads
+        if src is not None and not feed:
+            parts.append(src)
+        elif src is not None:
+            cols = src.columns
+            change = F.lit("insert")
+            if marks is not None:
+                src = src.join(marks, src[key] == marks["_mk"], "left")
+                change = F.when(
+                    F.col("_s"), F.lit("update_postimage")
+                ).otherwise(change)
+            parts.append(src.select(
+                *cols,
+                F.explode(
+                    F.array(F.lit(None).cast("string"), change)
+                ).alias(ct),
+            ))
+        if pre is not None:
+            cols = [c for c in pre.columns if c != "_s"]
+            if "_s" not in pre.columns:
+                pre = pre.join(
+                    marks, pre[key] == marks["_mk"],
+                    "left" if feed else "left_anti",
+                )
+            if feed:
+                parts.append(pre.select(
+                    *cols,
+                    F.when(F.col("_s"), F.lit("update_preimage"))
+                    .when(~F.col("_s"), F.lit("delete"))
+                    .alias(ct),
+                ))
+            else:
+                parts.append(pre.select(*cols))
+        if not parts:
+            return None
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p, allowMissingColumns=True)
+        return out
+
+    def _commit_attempt(
+        self,
+        base_doc: dict,
+        files: list[str],
+        op: str,
+        stats: dict,
+        written: list[str],
+        targets: set,
+    ) -> dict:
+        """Commit an attempt's writes as ``base_doc``'s version + 1.
+        A refused commit removes the dirs the attempt wrote
+        (``written``: never referenced by any commit, so invisible to
+        readers) and re-raises: the DV accumulation cap's
+        ``ValueError`` as is, a lost race classified for the rebase
+        loop -- if a winner removed a file this attempt rewrote or
+        marked rows dead in (``targets``, basenames), the keys may
+        overlap and :class:`ConcurrentMergeConflictError` is raised;
+        otherwise the plain retryable :class:`ConcurrentWriteError`
+        (the retry recomputes everything from the new head)."""
+        import shutil
+
+        try:
+            return self._commit(base_doc["version"] + 1, files, op, stats)
+        except (ConcurrentWriteError, ValueError) as exc:
+            for d in written:
+                shutil.rmtree(d, ignore_errors=True)
+            if isinstance(exc, ValueError):
+                raise
+            removed = {
+                os.path.basename(f)
+                for f in set(base_doc["files"])
+                - set(self.files(self.version()))
+            }
+            clash = removed & targets
+            if clash:
+                raise ConcurrentMergeConflictError(
+                    f"concurrent commit rewrote {len(clash)} file(s) this "
+                    f"{op} also rewrites or marks rows dead in (e.g. "
+                    f"{sorted(clash)[0]}); possible write-write key "
+                    "overlap -- not rebasing"
+                ) from None
+            raise
 
     def _candidate_files(
         self,
@@ -2724,33 +3012,36 @@ class CowTable:
         bloom_probe: str | None = None,
         probe_rows: list | None = None,
         touch_envelope: tuple | None = None,
-        skip_probe: bool = False,
-    ) -> tuple[list[str], str | None, int | None, list | None]:
+    ) -> tuple[list[str], str | None, int | None]:
         """Files of snapshot ``base_version`` that MAY contain a key of
         ``touch_keys`` -- the shared skipping front-end of every keyed
-        mutation (:meth:`merge` both strategies, :meth:`delete`).
-        Returns ``(candidate files, bloom probe mode or None, distinct
-        non-null touch-key count or None when not cheaply known,
-        collected touch rows or None)`` --
-        the count falls out of work this planner does anyway (the
-        bounded key collect, or a count() column added to the envelope
-        agg at zero extra jobs) and lets the merge back half decide
-        whether the source keys are provably broadcast-sized.  The
-        collected rows (bounded batches only) let callers rebuild the
-        touch set as a driver-side LocalRelation, so no downstream
-        join re-evaluates the batch plan (r19).
+        mutation (:meth:`merge` both strategies, :meth:`delete`) and of
+        the LSH store probes.  Returns ``(candidate files, bloom probe
+        mode or None, distinct non-null touch-key count or None when
+        not cheaply known)`` -- the count falls out of work this
+        planner does anyway (the bounded key rows, or a count() column
+        added to the envelope agg at zero extra jobs) and lets the
+        mutation decide whether its key sets are provably
+        broadcast-sized.  ``probe_rows`` are touch rows the caller
+        collected (each has ``_mk``): all of them when at most
+        ``_BLOOM_PRUNE_MAX_KEYS``, else an overflowed probe's sample.
 
         File-level prune BEFORE any data scan (Delta-style skipping
         applied to the MERGE condition): every touch key lies inside
-        [min, max] of the batch's keys (one tiny agg over the
-        batch-sized key set), so a file whose commit-log key range
-        does not intersect that envelope provably contains no touch
-        key -- it is kept by reference WITHOUT being read.  On a
-        range-clustered layout (compact cluster_by) this turns the
-        per-mutation candidate scan from O(table) to O(touched
-        range); on a hash layout every file intersects and nothing is
-        lost but the tiny agg.  Files without usable stats are always
-        candidates -- pruning is never a semantics change.
+        [min, max] of the batch's keys, so a file whose commit-log key
+        range does not intersect that envelope provably contains no
+        touch key -- it is kept by reference WITHOUT being read.  A
+        bounded batch derives the envelope from its rows (Python
+        min/max, the same comparison _stat_cmp_ok applies later,
+        restricted to str/int keys so float-NaN ordering quirks can
+        never narrow it); otherwise one agg job computes it -- unless
+        an overflowed sample's own envelope already meets every file:
+        the batch's envelope contains the sample's, so the agg could
+        prune nothing.  On a range-clustered layout (compact
+        cluster_by) this turns the per-mutation candidate scan from
+        O(table) to O(touched range); on a hash layout every file
+        intersects and nothing is lost.  Files without usable stats
+        are always candidates -- pruning is never a semantics change.
 
         ``touch_envelope``: a caller-supplied ``(lo, hi)`` bound that
         COVERS every source and delete key (a superset range).  When
@@ -2761,50 +3052,54 @@ class CowTable:
         that holds a matched key.  Used by provably-disjoint appends
         (operators/lsh_store: the ingest prefix is checked monotone
         pre-commit, so the key range is known analytically) to save
-        one Spark job per commit (r18, guide §2.4)."""
+        one Spark job per commit (guide §2.4)."""
         snapshot_files = self.files(base_version)
-        candidates = snapshot_files
+        stats = self._commit_doc(base_version).get("file_stats", {})
+
+        def meeting(lo, hi) -> list[str]:
+            # files whose recorded key range may hold a key in [lo, hi]
+            if lo is None:
+                # no non-null touch key (empty, or all-null keys, which
+                # never join-match): nothing can be affected;
+                # null-keyed source rows still insert
+                return []
+            lo_e, hi_e = _enc_stat(lo), _enc_stat(hi)
+            if lo_e is None or hi_e is None:
+                return list(snapshot_files)
+            out = []
+            for f in snapshot_files:
+                s = stats.get(os.path.basename(f), {}).get("cols", {}).get(key)
+                skip = False
+                if s is not None:
+                    if _stat_cmp_ok(s["max"], lo_e):
+                        skip = skip or s["max"] < lo_e
+                    if _stat_cmp_ok(s["min"], hi_e):
+                        skip = skip or s["min"] > hi_e
+                if not skip:
+                    out.append(f)
+            return out
+
         n_touch: int | None = None
-        # Fused key probe (r18, ungated r19): a bounded batch's ONE
-        # limit-collect replaces the envelope agg job for EVERY keyed
-        # mutation (not just bloom-indexed tables -- the collected
-        # rows now also feed the affected-file detection join as a
-        # broadcast LocalRelation, so the batch plan is never
-        # re-evaluated downstream).  When the batch fits, the range
-        # envelope derives from the same rows instead of a separate
-        # agg job.  Python min/max is the same comparison
-        # _stat_cmp_ok applies later, restricted to str/int keys so
-        # float-NaN ordering quirks can never narrow the envelope.
-        # Oversized batches pay the failed probe (limit stops early --
-        # cheap) and fall back to the agg job, handing the collected
-        # rows to the distributed-probe sizing.
-        if (
-            touch_envelope is None
-            and probe_rows is None
-            and bloom_probe != "distributed"
-            and not skip_probe
-        ):
-            probe_rows = touch_keys.limit(
-                _BLOOM_PRUNE_MAX_KEYS + 1
-            ).collect()
-        if (
-            touch_envelope is None
-            and probe_rows is not None
+        bounded = (
+            probe_rows is not None
             and len(probe_rows) <= _BLOOM_PRUNE_MAX_KEYS
-        ):
-            nn = [r["_mk"] for r in probe_rows if r["_mk"] is not None]
-            n_touch = len(nn)
-            if not nn:
-                touch_envelope = (None, None)  # all-null: no match
-            elif all(isinstance(v, (str, int)) for v in nn):
-                touch_envelope = (min(nn), max(nn))
-        elif probe_rows is not None and len(probe_rows) <= _BLOOM_PRUNE_MAX_KEYS:
-            # caller-supplied envelope alongside a bounded batch
-            # (delete values=): count known for free
-            n_touch = sum(1 for r in probe_rows if r["_mk"] is not None)
+        )
+        candidates = None
         if touch_envelope is not None:
-            b = {"lo": touch_envelope[0], "hi": touch_envelope[1]}
-        else:
+            candidates = meeting(*touch_envelope)
+        if probe_rows is not None:
+            nn = [r["_mk"] for r in probe_rows if r["_mk"] is not None]
+            if bounded:
+                n_touch = len(nn)
+            if candidates is None and bounded and not nn:
+                candidates = []
+            elif candidates is None and nn and all(
+                isinstance(v, (str, int)) for v in nn
+            ):
+                candidates = meeting(min(nn), max(nn))
+                if not bounded and len(candidates) < len(snapshot_files):
+                    candidates = None  # the sample proves nothing here
+        if candidates is None:
             # count("_mk") counts the distinct non-null touch keys in
             # the SAME job as the envelope agg (touch_keys is already
             # distinct) -- no extra action for the broadcast decision.
@@ -2813,30 +3108,7 @@ class CowTable:
                 F.count("_mk").alias("n"),
             ).collect()[0]
             n_touch = int(b["n"])
-        if b["lo"] is not None:
-            lo_e, hi_e = _enc_stat(b["lo"]), _enc_stat(b["hi"])
-            if lo_e is not None and hi_e is not None:
-                stats = self._commit_doc(base_version).get("file_stats", {})
-                candidates = []
-                for f in snapshot_files:
-                    s = (
-                        stats.get(os.path.basename(f), {})
-                        .get("cols", {})
-                        .get(key)
-                    )
-                    skip = False
-                    if s is not None:
-                        if _stat_cmp_ok(s["max"], lo_e):
-                            skip = skip or s["max"] < lo_e
-                        if _stat_cmp_ok(s["min"], hi_e):
-                            skip = skip or s["min"] > hi_e
-                    if not skip:
-                        candidates.append(f)
-        else:
-            # min is NULL: the batch has no non-null key (empty, or
-            # all-null keys, which never join-match) -- nothing can be
-            # affected; null-keyed source rows still insert below.
-            candidates = []
+            candidates = meeting(b["lo"], b["hi"])
 
         # Second prune, where range stats go blind: on a
         # high-cardinality hash key every file's [min, max] spans the
@@ -2846,14 +3118,11 @@ class CowTable:
         # candidate's filter: a file none of the touch keys maybe-hits
         # provably contains no match (no false negatives) and is kept
         # by reference unread.  Driver-sized batches (at most
-        # _BLOOM_PRUNE_MAX_KEYS distinct keys, limit-probed like the
-        # delete-inline path) hash once per key and test per file --
-        # all metadata-plane.  BIGGER batches -- the normal delta size
-        # at 100 TB -- do NOT lose the prune: the probe goes
-        # executor-side (_bloom_prune_distributed), keeping the driver
-        # at O(files).  ``bloom_probe`` forces a path ("driver" past
-        # the cap degrades to no bloom prune rather than collecting an
-        # unbounded key set).  Any hiccup (unhashable key type,
+        # _BLOOM_PRUNE_MAX_KEYS distinct keys) hash once per key and
+        # test per file -- all metadata-plane.  BIGGER batches -- the
+        # normal delta size at 100 TB -- do NOT lose the prune: the
+        # probe goes executor-side (_bloom_prune_distributed), keeping
+        # the driver at O(files).  Any hiccup (unhashable key type,
         # missing entries) just leaves the candidate list as-is.
         bloom_mode = None
         if candidates:
@@ -2862,40 +3131,30 @@ class CowTable:
                     self._commit_doc(base_version), key
                 )
                 if bidx is not None:
-                    use_dist = bloom_probe == "distributed"
                     probe = None
-                    if not use_dist:
-                        # callers that already collected the (bounded)
-                        # key batch to plan their probe mode pass it in
-                        # -- saves one job per driver-mode probe; a
-                        # caller that probed and OVERFLOWED says so
-                        # (skip_probe) and the oversized sentinel
-                        # routes straight to the distributed path
+                    if bloom_probe != "distributed":
+                        # the caller's collected rows save one job; an
+                        # overflowed sample goes straight to the
+                        # distributed path
                         probe = (
                             probe_rows
                             if probe_rows is not None
-                            else (
-                                [None] * (_BLOOM_PRUNE_MAX_KEYS + 1)
-                                if skip_probe
-                                else touch_keys.limit(
-                                    _BLOOM_PRUNE_MAX_KEYS + 1
-                                ).collect()
-                            )
+                            else touch_keys.limit(
+                                _BLOOM_PRUNE_MAX_KEYS + 1
+                            ).collect()
                         )
-                        if len(probe) <= _BLOOM_PRUNE_MAX_KEYS:
-                            if n_touch is None:
-                                n_touch = sum(
-                                    1 for r in probe
-                                    if r["_mk"] is not None
-                                )
-                        elif bloom_probe != "driver":
-                            use_dist = True
-                    if use_dist:
+                        if len(probe) > _BLOOM_PRUNE_MAX_KEYS:
+                            probe = None
+                    if probe is None:
                         candidates = self._bloom_prune_distributed(
                             touch_keys, candidates, bidx
                         )
                         bloom_mode = "distributed"
-                    elif len(probe) <= _BLOOM_PRUNE_MAX_KEYS:
+                    else:
+                        if n_touch is None:
+                            n_touch = sum(
+                                1 for r in probe if r["_mk"] is not None
+                            )
                         hashes = []
                         hashable = True
                         for r in probe:
@@ -2922,424 +3181,7 @@ class CowTable:
                             bloom_mode = "driver"
             except TypeError:
                 pass
-        touch_rows = (
-            probe_rows
-            if probe_rows is not None
-            and len(probe_rows) <= _BLOOM_PRUNE_MAX_KEYS
-            else None
-        )
-        return candidates, bloom_mode, n_touch, touch_rows
-
-    def _finish_merge_attempt(
-        self, source: DataFrame, key: str, dk_vals: list,
-        dk_df: DataFrame | None, meta: dict | None, evolve_schema: bool,
-        base_version: int, snapshot_files: list[str],
-        touch_keys: DataFrame, candidates: list[str],
-        bloom_mode: str | None, n_touch: int | None = None,
-        n_dk: int | None = None,
-    ) -> dict:
-        """Copy-on-write back half of :meth:`_merge_attempt`: find the
-        affected files among ``candidates``, re-merge exactly their
-        live rows with the source, rewrite them, carry the rest.
-
-        Change-feed commits take the FUSED single-wide-pass write
-        (r19): the rewritten files' live rows and the source are read
-        ONCE, every row classified in-plan (data row / change row via
-        broadcast-LocalRelation markers), and one partitioned staging
-        write emits the data files and the change files together --
-        the pre-r19 shape scanned the rewritten slice wide twice
-        (data rewrite + change-set pre-image).  Data files carry a
-        hidden all-NULL ``_change_type`` column; snapshot reads
-        project to the recorded schema, which omits it."""
-        snap_schema = self._snapshot_schema(base_version)
-        base_doc = self._commit_doc(base_version)
-        dv_map = self._dv_map(base_doc)
-        mk_all: list | None = []  # matched touch keys (source + delete)
-        mk_src: list | None = []  # matched SOURCE keys only
-        mk_df: DataFrame | None = None  # >cap fallback: pinned (key, _s)
-        if candidates:
-            # DV-aware candidate scan: rows already dead by a
-            # merge-on-read commit are filtered BEFORE matching, so a
-            # deleted row can neither mark its file affected nor be
-            # resurrected by the rewrite below.
-            tagged = self._read_files(
-                candidates, snap_schema, dv_map, file_col="_file"
-            )
-            # ONE detection collect returns distinct (file, key,
-            # source-flag) triples -- the same scan+join that used to
-            # return file names alone (r18 opt round).  The matched
-            # keys are delta-sized (bounded by the touch-key count)
-            # and are exactly what the rewrite and the change set
-            # need, so collecting them here lets both classify
-            # against tiny broadcast LocalRelations with zero extra
-            # source evaluations.  Past _MATCHED_INLINE_MAX rows the triples
-            # pin as one localCheckpoint instead (driver never holds
-            # an unbounded key set) and the consumers join against it.
-            matched = (
-                tagged.join(
-                    touch_keys, tagged[key] == F.col("_mk"), "inner"
-                )
-                .select(
-                    "_file",
-                    F.col(key).alias("_k"),
-                    (
-                        F.col("_s") if "_s" in touch_keys.columns
-                        else F.lit(True)
-                    ).alias("_s"),
-                )
-                .distinct()
-            )
-            # ALWAYS limit-probe (ADVICE r18 #2): a touch count past
-            # the cap does NOT bound the matched count from below -- a
-            # large source with few actual matches still comes back
-            # inline, keeping the whole merge on the LocalRelation
-            # fast path.  When the probe does overflow, its cost was
-            # one key+file column-pruned scan of the candidates -- the
-            # bulk path's own pinning scan, paid once more.
-            probe = matched.limit(_MATCHED_INLINE_MAX + 1).collect()
-            if len(probe) <= _MATCHED_INLINE_MAX:
-                affected_base = {r["_file"] for r in probe}
-                mk_all = sorted({r["_k"] for r in probe})
-                mk_src = sorted({r["_k"] for r in probe if r["_s"]})
-            else:
-                mk_all = mk_src = None
-                mk_df = matched.localCheckpoint(eager=True)
-                affected_base = {
-                    r["_file"]
-                    for r in mk_df.select("_file").distinct().collect()
-                }
-        else:
-            affected_base = set()
-        kept = [
-            f
-            for f in snapshot_files
-            if os.path.basename(f) not in affected_base
-        ]
-        rewritten = [f for f in snapshot_files if f not in kept]
-
-        # Re-merge ONLY the affected slice; unmatched source rows (the
-        # inserts) can't live in any unaffected file, so emitting them
-        # here is exact and emits each exactly once.  Matched keys
-        # (source AND delete -- an unmatched delete key cannot appear
-        # in any file, so filtering on the matched set removes every
-        # copy the old per-delete-key filter did) drop below;
-        # NULL-keyed target rows pass: NULL never equals a touch key.
-        # DV-aware: a rewritten file's live rows are its physical rows
-        # MINUS its deletion vector -- materialized here for free (the
-        # new file simply lacks them, and _maintain_dv drops the entry
-        # with the file).
-        affected_df = self._read_files(rewritten, snap_schema, dv_map)
-        if evolve_schema:
-            have = set(affected_df.columns)
-            for fld in source.schema.fields:
-                if fld.name not in have:
-                    affected_df = affected_df.withColumn(
-                        fld.name, F.lit(None).cast(fld.dataType)
-                    )
-        pre_image = affected_df  # pre-delete-filter slice, for the feed
-        # Source projection onto the (possibly evolved) table layout.
-        # Strict mode: the schema is a contract -- a source missing a
-        # table column fails HERE, deterministically, with the columns
-        # named (also the deterministic outcome when a rebase finds a
-        # concurrently-widened schema: Delta's MetadataChanged
-        # analogue).  Evolve mode: table columns absent from the
-        # source NULL-fill, so two concurrent evolving merges rebase
-        # cleanly into the union schema.
-        missing = [
-            f for f in affected_df.schema.fields
-            if f.name not in set(source.columns)
-        ]
-        if missing and not evolve_schema:
-            raise ValueError(
-                f"merge source is missing table column(s) "
-                f"{[f.name for f in missing]} of {self.path} (snapshot "
-                f"v{base_version}); pass evolve_schema=True to NULL-fill, "
-                "or align the source"
-            )
-        src_proj = source
-        for fld in missing:
-            src_proj = src_proj.withColumn(
-                fld.name, F.lit(None).cast(fld.dataType)
-            )
-        # Matched keys take the source row WHOLESALE, so the merged
-        # output is exactly (affected live rows whose key matches no
-        # source key) + (every source row): an anti-join + union.  The
-        # pre-r18 merge_upsert form (full-outer join) shuffled AND
-        # sorted the whole affected slice by key -- table-scale on a
-        # spread-key delta -- to attach a delta-sized source; full
-        # outer is not broadcastable, so no planner could save it.
-        # With the anti-join the affected slice streams
-        # scan->filter->write with ZERO exchange (guide §2.4/§3.1).
-        # Row set: NULL-keyed target rows never equal a source key
-        # (anti keeps them, as full-outer did); NULL-keyed source rows
-        # always insert; a matched key emits the source row exactly
-        # once per source row.  On a DUPLICATE-key target this
-        # collapses the matched set to the source row -- the mor
-        # path's documented behaviour, and merge-maintained tables are
-        # unique-keyed by contract (see :meth:`merge`).
-        src_aligned = src_proj.select(affected_df.columns)
-        new_version = base_version + 1
-        feed = self._change_feed_enabled(base_version)
-        # Broadcast gate for the bulk-path key sets: count bound AND a
-        # byte estimate (ADVICE r18 #1 -- wide string keys could push
-        # a count-gated build side past driver/broadcast limits); the
-        # width estimate comes from the snapshot's own footer stats.
-        small_keys = (
-            n_touch is not None
-            and n_touch <= _MERGE_BROADCAST_MAX_KEYS
-            and n_touch * self._key_width_estimate(base_version, key)
-            <= _MERGE_BROADCAST_MAX_BYTES
-        )
-        # coalesce target: no shuffle, caps the per-merge output file
-        # count at the rewritten-file count -- FLOORED (ADVICE r18 #5)
-        # so an insert-heavy merge that touches one file does not
-        # collapse the whole source evaluation and write into a single
-        # task.  coalesce(n) with n >= input partitions is identity,
-        # so the floor only widens genuinely narrow plans.
-        n_out = max(
-            len(rewritten),
-            min(8, self.spark.sparkContext.defaultParallelism),
-        )
-        chg_files: list[str] = []
-
-        def _key_rel(vals: list, name: str) -> DataFrame:
-            # driver-held keys as a broadcast LocalRelation, NOT an
-            # isin() literal (a multi-thousand-literal In costs ~2 s
-            # of driver planning PER ACTION on this box)
-            from pyspark.sql.types import StructField, StructType
-
-            return F.broadcast(self.spark.createDataFrame(
-                [(v,) for v in vals],
-                StructType(
-                    [StructField(name, affected_df.schema[key].dataType)]
-                ),
-            ))
-
-        if not rewritten:
-            # Nothing matched (insert-only batch, or the range/bloom
-            # prune refuted every file): the merged output IS the
-            # source -- a single source evaluation, no join, exactly
-            # the pre-r18 cost.  LSH appends (files_probed == 0 by
-            # design) live entirely on this path.  With the feed on,
-            # the change set is source-only (all inserts) -- there is
-            # no wide slice to fuse with, so the separate delta-sized
-            # change write stays.
-            merged = src_aligned
-            if feed:
-                chg_files = self._write_change_files(
-                    self._change_set(
-                        pre_image, src_aligned, key, dk_vals, dk_df,
-                        small_keys=small_keys,
-                        sk_vals=mk_src,
-                        sk_df=(
-                            mk_df.filter(F.col("_s"))
-                            .select(F.col("_k").alias("_sk"))
-                            .distinct()
-                            if mk_df is not None
-                            else None
-                        ),
-                    ),
-                    new_version,
-                )
-            new_files, new_stats, out_dir = self._write_data_files(
-                merged, new_version
-            )
-            data_schema_json = merged.schema.jsonValue()
-        elif feed:
-            # FUSED single-wide-pass CDC write (r19, VERDICT r18 next
-            # #1; guide §1.2 "remove unnecessary passes"): the pre-r19
-            # shape read the rewritten files' live rows WIDE twice --
-            # once for the data rewrite (anti-join + union) and once
-            # for the change-set pre-image -- plus one source
-            # evaluation in each.  Here every pre row classifies in
-            # ONE pass against broadcast-LocalRelation markers:
-            #   key in matched-source set      -> update_preimage
-            #   key in delete set (not source) -> delete
-            #   otherwise                      -> carried data row
-            #     (_change_type NULL)
-            # and each source row emits its data copy and its change
-            # copy (update_postimage when matched, else insert) from
-            # ONE evaluation via an explode over the two change types.
-            # A single partitionBy-disposition staging write then
-            # splits data files from change files (same task writes
-            # both).  Row sets are exactly the old ones: for a live
-            # row of a rewritten file, "key matched" == "key in
-            # matched-source or delete set" (an unmatched delete key
-            # cannot appear in any candidate file), and NULL keys
-            # match no marker -- they stay data rows, as the anti-join
-            # kept them.  Data files carry _change_type all-NULL;
-            # snapshot reads project to the recorded schema (which
-            # omits it), so readers never see the column.
-            ct = "_change_type"
-            # ONE marker relation serves both sides (pre's _in_src and
-            # the source's matched test are the same key set), so the
-            # plan carries a single broadcast build the second join
-            # reuses (ReusedExchange) -- one fewer AQE broadcast job.
-            if mk_src is not None:
-                skm = _key_rel(mk_src, "_ck").withColumn(
-                    "_in_src", F.lit(True)
-                )
-            else:
-                skm = (
-                    mk_df.filter(F.col("_s"))
-                    .select(F.col("_k").alias("_ck"))
-                    .distinct()
-                    .withColumn("_in_src", F.lit(True))
-                )
-                if small_keys:
-                    skm = F.broadcast(skm)
-            tagged = affected_df.join(
-                skm, affected_df[key] == skm["_ck"], "left"
-            )
-            if dk_vals:
-                dkm = _key_rel(dk_vals, "_dck").withColumn(
-                    "_in_del", F.lit(True)
-                )
-                tagged = tagged.join(
-                    dkm, tagged[key] == F.col("_dck"), "left"
-                )
-                is_del = F.col("_in_del")
-            elif dk_df is not None:
-                dkm = dk_df.select(
-                    F.col("_dk").alias("_dck")
-                ).withColumn("_in_del", F.lit(True))
-                if small_keys:
-                    dkm = F.broadcast(dkm)
-                tagged = tagged.join(
-                    dkm, tagged[key] == F.col("_dck"), "left"
-                )
-                is_del = F.col("_in_del")
-            else:
-                is_del = F.lit(False)
-            cols = affected_df.columns
-            pre_branch = tagged.select(
-                *cols,
-                F.when(F.col("_in_src"), F.lit("update_preimage"))
-                .when(is_del, F.lit("delete"))
-                .alias(ct),
-            )
-            src_tagged = src_aligned.join(
-                skm, src_aligned[key] == skm["_ck"], "left"
-            )
-            src_branch = src_tagged.select(
-                *cols,
-                F.explode(F.array(
-                    F.lit(None).cast("string"),
-                    F.when(
-                        skm["_in_src"], F.lit("update_postimage")
-                    ).otherwise(F.lit("insert")),
-                )).alias(ct),
-            )
-            fused = pre_branch.unionByName(src_branch).coalesce(n_out)
-            new_files, new_stats, out_dir, chg_files = (
-                self._write_fused_cdc_files(fused, ct, new_version)
-            )
-            # recorded snapshot schema OMITS the hidden _change_type
-            # column the fused data files physically carry
-            from pyspark.sql.types import StructType
-
-            data_schema_json = StructType(
-                [f for f in fused.schema.fields if f.name != ct]
-            ).jsonValue()
-        else:
-            if mk_all is not None:
-                # Collected matched keys ride as a broadcast
-                # LocalRelation anti-join -- data, not expression (the
-                # isin() planning hazard above).  The LocalRelation
-                # build is driver rows already in hand, so the join
-                # re-evaluates no source subtree.  NULL-keyed target
-                # rows survive the anti (NULL never equals a key).
-                merged = affected_df.join(
-                    _key_rel(mk_all, "_mkk"),
-                    affected_df[key] == F.col("_mkk"),
-                    "left_anti",
-                ).unionByName(src_aligned).coalesce(n_out)
-            else:
-                # Bulk path (> _MATCHED_INLINE_MAX matched keys):
-                # anti-join against the pinned matched-key set;
-                # broadcast when the planner proved the touch keys
-                # bounded (count AND bytes), else AQE decides.
-                mk_keys = mk_df.select(F.col("_k").alias("_mkk")).distinct()
-                if small_keys:
-                    mk_keys = F.broadcast(mk_keys)
-                merged = affected_df.join(
-                    mk_keys, affected_df[key] == F.col("_mkk"), "left_anti"
-                ).unionByName(src_aligned).coalesce(n_out)
-            new_files, new_stats, out_dir = self._write_data_files(
-                merged, new_version
-            )
-            data_schema_json = merged.schema.jsonValue()
-        try:
-            return self._commit(
-                new_version,
-                kept + new_files,
-                "merge",
-                {
-                    "parent": base_version,
-                    "files_kept": len(kept),
-                    "files_rewritten": len(rewritten),
-                    "files_written": len(new_files),
-                    **(
-                        {"change_files": chg_files} if chg_files else {}
-                    ),
-                    # skipping-on-merge evidence: candidate files the
-                    # match scan actually READ (vs len(files) total),
-                    # and which bloom-probe path pruned them.
-                    "files_probed": len(candidates),
-                    **(
-                        {"bloom_probe": bloom_mode}
-                        if bloom_mode is not None
-                        else {}
-                    ),
-                    "delete_keys": (
-                        n_dk
-                        if n_dk is not None
-                        else (
-                            dk_df.count()
-                            if dk_df is not None
-                            else len(dk_vals)
-                        )
-                    ),
-                    **({"app_meta": meta} if meta is not None else {}),
-                    "file_stats": {
-                        **{
-                            b: base_doc["file_stats"][b]
-                            for b in map(os.path.basename, kept)
-                        },
-                        **new_stats,
-                    },
-                    "schema": data_schema_json,
-                },
-            )
-        except ConcurrentWriteError:
-            # Loser cleanup: its data/change dirs were never referenced
-            # by any commit, so removing them cannot affect readers.
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if chg_files:
-                shutil.rmtree(
-                    os.path.dirname(chg_files[0]), ignore_errors=True
-                )
-            # Classify for the rebase loop: overlap between what we
-            # meant to rewrite and what the winner(s) removed means
-            # possibly the same keys -- not safely rebasable.
-            head = self.version()
-            removed = set(self.files(base_version)) - set(self.files(head))
-            clash = removed & set(rewritten)
-            if clash:
-                raise ConcurrentMergeConflictError(
-                    f"concurrent commit rewrote {len(clash)} file(s) this "
-                    f"merge also targets (e.g. "
-                    f"{os.path.basename(sorted(clash)[0])}); possible "
-                    "write-write key overlap -- not rebasing"
-                ) from None
-            raise
-        finally:
-            # eager release of the bulk-path pinned matched keys
-            # (ADVICE r18 #3); every consumer ran in the writes above
-            if mk_df is not None:
-                _release_pinned(mk_df)
+        return candidates, bloom_mode, n_touch
 
     def _dv_positions_for(
         self,
@@ -3350,38 +3192,39 @@ class CowTable:
         touch_keys: DataFrame,
         want_rows: bool = False,
     ) -> tuple[dict, int, "DataFrame | None"]:
-        """Dead-position bitmaps for every LIVE row of ``candidates``
-        whose ``key`` appears in ``touch_keys``: ``({basename: int
-        bitmap}, rows matched, matched rows or None)``.  Already-dead
-        rows are filtered first (idempotent re-deletes mark nothing
-        and count nothing).  The per-file position lists aggregate
-        executor-side; only the O(files) grouped rows come back, each
-        sized by ITS dead-row count, guarded by ``_DV_COLLECT_MAX`` --
-        a mutation past that is bulk-sized and must use the
-        copy-on-write strategy, which this error says verbatim.
+        """The mor/dv position harvest: dead-position bitmaps for every
+        LIVE row of ``candidates`` whose ``key`` is a touch key --
+        ``({basename: bitmap}, rows matched, pinned matched rows or
+        None)``.  Already-dead rows are filtered first (idempotent
+        re-deletes mark nothing and count nothing).  The per-file
+        position lists aggregate executor-side; only the O(files)
+        grouped rows come back, each sized by ITS dead-row count,
+        guarded by ``_DV_COLLECT_MAX`` -- a mutation past that is
+        bulk-sized and must use the copy-on-write strategy, which this
+        error says verbatim.
 
-        ``want_rows`` (r19): pin the matched rows WIDE (all snapshot
-        columns) instead of just (file, position), and return the
-        pinned frame -- the change-feed writers read their pre-image
-        straight from it, so a CDF dv-delete / mor merge scans the
-        candidate files ONCE (the position harvest) instead of twice
-        (position harvest narrow + change pre-image wide)."""
+        The join against ``touch_keys`` (one row per key) keeps each
+        match's source flag ``_s``.  ``want_rows`` (change feed on)
+        pins the matched rows WIDE -- all snapshot columns plus ``_s``
+        -- and returns the pinned frame when anything matched: it is
+        the mutation's pre-image, so a change-feed dv delete / mor
+        merge scans its candidate files ONCE.  The caller owns that
+        frame and its eager release."""
         if not candidates:
             return {}, 0, None
         live = self._read_files(
             candidates, schema, dv_map, file_col="__dvf", pos_col="__dvp"
         )
         # Pinned eagerly so the cap-guard count and the grouped collect
-        # below share ONE scan+join of the candidate files (r18: the
-        # two actions otherwise each re-read every candidate -- the
-        # dominant cost of a DV mutation is exactly that scan).  The
-        # pinned frame is (file id, row position) -- plus the full row
-        # under want_rows -- bounded in the legitimate case by the
-        # delta's match count.
-        names = [f.name for f in schema.fields]
-        sel = (names if want_rows else []) + ["__dvf", "__dvp"]
+        # below share ONE scan+join of the candidate files (the two
+        # actions otherwise each re-read every candidate -- the
+        # dominant cost of a DV mutation is exactly that scan).
+        # Bounded in the legitimate case by the delta's match count.
+        sel = (
+            [f.name for f in schema.fields] + ["_s"] if want_rows else []
+        ) + ["__dvf", "__dvp"]
         matched = (
-            live.join(touch_keys, live[key] == F.col("_mk"), "left_semi")
+            live.join(touch_keys, live[key] == F.col("_mk"), "inner")
             .select(*sel)
             .localCheckpoint(eager=True)
         )
@@ -3404,317 +3247,10 @@ class CowTable:
         except Exception:
             _release_pinned(matched)
             raise
-        if not want_rows:
-            _release_pinned(matched)
-            return updates, n, None
-        # want_rows: the caller owns the pinned frame (and its eager
-        # release -- ADVICE r18 #3) until its change write has run
-        return updates, n, matched
-
-    def _finish_merge_mor(
-        self, source: DataFrame, key: str, dk_vals: list,
-        dk_df: DataFrame | None, meta: dict | None, evolve_schema: bool,
-        base_version: int, snapshot_files: list[str],
-        touch_keys: DataFrame, candidates: list[str],
-        bloom_mode: str | None, n_touch: int | None = None,
-        n_dk: int | None = None,
-    ) -> dict:
-        """Merge-on-read back half of :meth:`_merge_attempt`: instead
-        of rewriting affected files, their matched/deleted LIVE rows
-        become dead positions in the deletion-vector sidecar and every
-        source row lands in new files -- zero data files rewritten.
-        Deletes are implicit: a delete key is a touch key, so its
-        positions die, and (matching cow's contract) a key in both
-        ``deletes`` and ``source`` ends up as the source row.  With
-        the change feed on, the position harvest pins the matched rows
-        wide and the change pre-image reads from the pinned frame --
-        one candidate scan per CDF mor merge, not two (r19)."""
-        snap_schema = self._snapshot_schema(base_version)
-        base_doc = self._commit_doc(base_version)
-        dv_map = self._dv_map(base_doc)
-        feed = self._change_feed_enabled(base_version)
-        # Same projection contract as cow: strict mode demands every
-        # table column (deterministic error, names included); evolve
-        # mode NULL-fills both directions and appends source-only
-        # columns to the schema.  Snapshot columns cast to their
-        # recorded types -- the coercion cow gets implicitly from its
-        # full-outer CASE projection.
-        src_cols = set(source.columns)
-        missing = [f for f in snap_schema.fields if f.name not in src_cols]
-        if missing and not evolve_schema:
-            raise ValueError(
-                f"merge source is missing table column(s) "
-                f"{[f.name for f in missing]} of {self.path} (snapshot "
-                f"v{base_version}); pass evolve_schema=True to NULL-fill, "
-                "or align the source"
-            )
-        src_proj = source
-        for fld in missing:
-            src_proj = src_proj.withColumn(
-                fld.name, F.lit(None).cast(fld.dataType)
-            )
-        out_cols = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in snap_schema.fields
-        ]
-        if evolve_schema:
-            snap_names = {f.name for f in snap_schema.fields}
-            out_cols += [
-                F.col(f.name)
-                for f in source.schema.fields
-                if f.name not in snap_names
-            ]
-        out_df = src_proj.select(*out_cols)
-        dv_updates, rows_matched, pre_pinned = self._dv_positions_for(
-            candidates, snap_schema, dv_map, key, touch_keys,
-            want_rows=feed,
-        )
-        new_version = base_version + 1
-        chg_files: list[str] = []
-        if feed:
-            # pre-image = the matched live rows already pinned by the
-            # position harvest (delta-sized); no second candidate scan
-            pre = (
-                pre_pinned
-                if pre_pinned is not None
-                else self._read_files([], snap_schema, None)
-            )
-            try:
-                chg_files = self._write_change_files(
-                    self._change_set(
-                        pre, out_df, key, dk_vals, dk_df,
-                        small_keys=(
-                            n_touch is not None
-                            and n_touch <= _MERGE_BROADCAST_MAX_KEYS
-                        ),
-                    ),
-                    new_version,
-                )
-            finally:
-                if pre_pinned is not None:
-                    _release_pinned(pre_pinned)
-        new_files, new_stats, out_dir = self._write_data_files(
-            out_df, new_version
-        )
-        try:
-            return self._commit(
-                new_version,
-                snapshot_files + new_files,
-                "merge",
-                {
-                    "parent": base_version,
-                    "strategy": "mor",
-                    "files_kept": len(snapshot_files),
-                    "files_rewritten": 0,
-                    "files_written": len(new_files),
-                    "files_probed": len(candidates),
-                    "dv_files_updated": len(dv_updates),
-                    "rows_dv_deleted": rows_matched,
-                    **(
-                        {"change_files": chg_files} if chg_files else {}
-                    ),
-                    **(
-                        {"bloom_probe": bloom_mode}
-                        if bloom_mode is not None
-                        else {}
-                    ),
-                    "delete_keys": (
-                        n_dk
-                        if n_dk is not None
-                        else (
-                            dk_df.count()
-                            if dk_df is not None
-                            else len(dk_vals)
-                        )
-                    ),
-                    **({"app_meta": meta} if meta is not None else {}),
-                    "file_stats": {
-                        **base_doc["file_stats"],
-                        **new_stats,
-                    },
-                    "schema": out_df.schema.jsonValue(),
-                    "dv_updates": dv_updates,
-                },
-            )
-        except (ConcurrentWriteError, ValueError) as exc:
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if chg_files:
-                shutil.rmtree(
-                    os.path.dirname(chg_files[0]), ignore_errors=True
-                )
-            if isinstance(exc, ValueError):
-                # The DV accumulation guardrail refused the commit
-                # inside _commit/_maintain_dv -- nothing was linked,
-                # but this path had already written data/change files;
-                # without the cleanup above every cap refusal would
-                # leak an orphan changes/ dir into the raw
-                # committed_only=False feed (ADVICE r16).
-                raise
-            # A winner that REMOVED a file we marked positions in
-            # rewrote it -- our positions describe a dead file and its
-            # keys may overlap ours: surface, don't rebase.  Winners
-            # that only added/rewrote other files rebase fine (the
-            # retry recomputes everything from the new head).
-            head = self.version()
-            removed = {
-                os.path.basename(f)
-                for f in set(self.files(base_version)) - set(self.files(head))
-            }
-            clash = removed & set(dv_updates)
-            if clash:
-                raise ConcurrentMergeConflictError(
-                    f"concurrent commit rewrote {len(clash)} file(s) this "
-                    f"mor-merge marked rows dead in (e.g. "
-                    f"{sorted(clash)[0]}); possible write-write key "
-                    "overlap -- not rebasing"
-                ) from None
-            raise
-
-    def _change_set(
-        self,
-        pre: DataFrame,
-        src_proj: DataFrame | None,
-        key: str,
-        dk_vals: list,
-        dk_df: DataFrame | None,
-        small_keys: bool = False,
-        sk_vals: list | None = None,
-        sk_df: DataFrame | None = None,
-    ) -> DataFrame:
-        """The row-level change set of one mutation commit (Delta CDF
-        row types): ``pre`` is the affected slice's LIVE pre-image
-        rows, ``src_proj`` the source projected onto the output
-        layout (None for a pure delete).
-
-        * pre row whose key is a source key  -> ``update_preimage``
-        * pre row whose key is a delete key (and not a source key --
-          delete-then-upsert ends as an update) -> ``delete``
-        * source row whose key exists in the affected slice
-          -> ``update_postimage`` (matched keys only ever live there)
-        * any other source row -> ``insert`` (NULL keys always insert)
-
-        Untouched rows of rewritten files classify into none of these
-        and drop out -- a copy-on-write rewrite is not a logical
-        change.
-
-        Plan shape (r18): the pre-image slice is the REWRITTEN FILES'
-        live rows -- table-scale, not delta-scale -- and the r17 form
-        referenced it in four subtrees (preimage semi-join, delete
-        semi+anti, and the tk distinct twice), so one CDF merge
-        re-scanned every rewritten file four times wide.  Both sides
-        now classify in ONE pass each -- a single when()-typed
-        projection per side -- leaving one wide scan of pre and one
-        scan of the source.  Row set is identical: the key sets are
-        distinct (markers never duplicate) and the when() precedence
-        mirrors the old union semantics (a key in both source and
-        deletes feeds as an update, NULL keys match nothing and
-        classify as before).
-
-        ``sk_vals`` / ``sk_df`` (r18, opt round): the MATCHED source
-        keys -- source keys that exist among the pre-image's live rows
-        -- which the cow merge's detection collect produces for free
-        (driver literals below ``_MATCHED_INLINE_MAX``, one pinned
-        frame past it).  They replace two table-scale subtrees at
-        once: the ``_in_src`` marker only ever fires on a matched key
-        (a pre row whose key is a source key IS a match), and tk --
-        the postimage/insert classifier, pre keys ∩ source keys -- is
-        exactly this set, so the old table-scale distinct of every
-        rewritten-file key (and even the key-only pre scan) disappears
-        entirely.  With collected keys the whole change set is scan
-        -> broadcast-LocalRelation markers -> union.  ``small_keys``: the
-        caller proved the key sets broadcast-sized, so the fallback
-        marker joins carry an explicit broadcast hint and the wide pre
-        scan streams through with no exchange."""
-        ct = "_change_type"
-        if src_proj is None:
-            return pre.withColumn(ct, F.lit("delete"))
-        cols = pre.columns
-
-        def _b(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if small_keys else df
-
-        def _rel(vals: list, name: str) -> DataFrame:
-            # driver-held keys as a LocalRelation, NOT an isin()
-            # literal: a multi-thousand-literal In costs seconds of
-            # planning per action (see _finish_merge_attempt), while
-            # a broadcast join against local rows keeps the plan
-            # small and evaluates no subtree.
-            from pyspark.sql.types import StructField, StructType
-
-            return F.broadcast(
-                self.spark.createDataFrame(
-                    [(v,) for v in vals],
-                    StructType(
-                        [StructField(name, src_proj.schema[key].dataType)]
-                    ),
-                )
-            )
-
-        # pre side: carried rows classify to NULL and drop out
-        tagged = pre
-        if sk_vals is not None:
-            sk = _rel(sk_vals, "_ck").withColumn("_in_src", F.lit(True))
-        else:
-            sk = (
-                sk_df.withColumnRenamed("_sk", "_ck")
-                if sk_df is not None
-                else src_proj.select(F.col(key).alias("_ck")).distinct()
-            ).withColumn("_in_src", F.lit(True))
-            sk = _b(sk)
-        tagged = tagged.join(sk, pre[key] == F.col("_ck"), "left")
-        in_src = F.col("_in_src")
-        if dk_vals:
-            dkm = _rel(dk_vals, "_dck").withColumn("_in_del", F.lit(True))
-            tagged = tagged.join(
-                dkm, tagged[key] == F.col("_dck"), "left"
-            )
-            is_del = F.col("_in_del")
-        elif dk_df is not None:
-            dkm = dk_df.select(
-                F.col("_dk").alias("_dck")
-            ).withColumn("_in_del", F.lit(True))
-            tagged = tagged.join(
-                _b(dkm), tagged[key] == F.col("_dck"), "left"
-            )
-            is_del = F.col("_in_del")
-        else:
-            is_del = F.lit(False)
-        pre_type = (
-            F.when(in_src, F.lit("update_preimage"))
-            .when(is_del, F.lit("delete"))
-        )
-        pre_part = (
-            tagged.withColumn(ct, pre_type)
-            .filter(F.col(ct).isNotNull())
-            .select(*cols, ct)
-        )
-        # source side: _in_tbl(key) == key matched a live pre row
-        if sk_vals is not None:
-            tk = _rel(sk_vals, "_ck").withColumn("_in_tbl", F.lit(True))
-        else:
-            tk = (
-                sk_df.withColumnRenamed("_sk", "_ck")
-                if sk_df is not None
-                else pre.select(F.col(key).alias("_ck")).join(
-                    _b(src_proj.select(F.col(key).alias("_ck")).distinct()),
-                    "_ck",
-                    "left_semi",
-                ).distinct()
-            ).withColumn("_in_tbl", F.lit(True))
-            tk = _b(tk)
-        src_part = (
-            src_proj.join(tk, src_proj[key] == F.col("_ck"), "left")
-            .withColumn(
-                ct,
-                F.when(
-                    F.col("_in_tbl"), F.lit("update_postimage")
-                ).otherwise(F.lit("insert")),
-            )
-            .select(*src_proj.columns, ct)
-        )
-        return pre_part.unionByName(src_part, allowMissingColumns=True)
+        if want_rows and n:
+            return updates, n, matched
+        _release_pinned(matched)
+        return updates, n, None
 
     def read_changes(
         self, from_version: int, to_version: int | None = None
@@ -3795,6 +3331,7 @@ class CowTable:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
 
+
     def delete(
         self,
         key: str,
@@ -3807,24 +3344,25 @@ class CowTable:
     ) -> dict:
         """``DELETE FROM ... WHERE key IN (...)``: remove every row
         whose ``key`` is in ``values`` (a scalar or list) or in
-        ``deletes`` (any frame carrying a ``key`` column).
+        ``deletes`` (any frame carrying a ``key`` column).  Both modes
+        run :meth:`merge`'s one back half (:meth:`_mutate_attempt`).
 
-        ``mode="dv"`` (default, merge-on-read): NO data file is
-        rewritten -- matched rows are marked dead by row position in
-        the commit's deletion-vector sidecar, an O(batch + positions)
-        metadata commit.  At 100 TB a GDPR-style scattered delete (a
-        few thousand keys spread across thousands of files) costs
-        kilobytes of sidecar instead of rewriting terabytes; the
-        candidate scan itself is range+bloom pruned like merge's
-        (:meth:`_candidate_files`).  Dead rows stay physically present
-        until :meth:`compact` materializes the vectors; every reader
-        filters them by position meanwhile.  Bounded by
-        ``_DV_COLLECT_MAX`` positions per commit -- bulk deletes must
-        use ``mode="cow"``.
+        ``mode="dv"`` (default, merge-on-read): a mor mutation with no
+        source.  NO data file is written -- matched rows are marked
+        dead by row position in the commit's deletion-vector sidecar,
+        an O(batch + positions) metadata commit (``op: "delete"``,
+        ``strategy: "dv"``, ``files_written: 0``).  At 100 TB a
+        GDPR-style scattered delete (a few thousand keys spread across
+        thousands of files) costs kilobytes of sidecar instead of
+        rewriting terabytes; the candidate scan itself is range+bloom
+        pruned like merge's (:meth:`_candidate_files`).  Dead rows stay
+        physically present until :meth:`compact` materializes the
+        vectors; every reader filters them by position meanwhile.
+        Bounded by ``_DV_COLLECT_MAX`` positions per commit -- bulk
+        deletes must use ``mode="cow"``.
 
-        ``mode="cow"``: delegate to :meth:`merge` with an empty source
-        (rewrite the matched files without the rows -- the
-        read-optimized form).
+        ``mode="cow"``: a cow merge with an empty source (rewrite the
+        matched files without the rows -- the read-optimized form).
 
         ``retries``/``meta``/``bloom_probe``: as :meth:`merge`;
         rebase conflicts classify the same way (a concurrent rewrite
@@ -3838,28 +3376,21 @@ class CowTable:
         if head < 0:
             raise FileNotFoundError(f"no CowTable at {self.path}")
         snap_schema = self._snapshot_schema(head)
-        envelope = None
-        probe_rows = None
+        envelope = touch_rows = None
         if values is not None:
             vals = (
                 list(values)
                 if isinstance(values, (list, tuple, set))
                 else [values]
             )
-            ktype = snap_schema[key].dataType
-            from pyspark.sql.types import StructField, StructType
-
-            deletes = self.spark.createDataFrame(
-                [(v,) for v in vals],
-                StructType([StructField(key, ktype)]),
+            deletes = _key_frame(
+                self.spark, [(v,) for v in vals],
+                [(key, snap_schema[key].dataType)],
             )
             # The touch keys are IN HAND as driver literals: derive the
-            # range-prune envelope and the (bounded) bloom probe set
-            # here instead of running one agg job + one limit-collect
-            # job to re-learn them from the frame just built (r18;
-            # the GDPR point-delete shape pays two fewer jobs per
-            # commit).  NULLs never match a join, so dropping them
-            # keeps the envelope exact.
+            # range-prune envelope and the touch rows here, so the
+            # point-delete shape runs no planning job.  NULLs never
+            # match a join, so dropping them keeps the envelope exact.
             nn = [v for v in vals if v is not None]
             if nn:
                 try:
@@ -3867,135 +3398,12 @@ class CowTable:
                 except TypeError:
                     envelope = None  # mixed/unorderable: fall back
             if len(nn) <= _BLOOM_PRUNE_MAX_KEYS:
-                probe_rows = [{"_mk": v} for v in nn]
-        if mode == "cow":
-            empty = self.spark.createDataFrame([], snap_schema)
-            return self.merge(
-                empty, key, deletes=deletes, retries=retries, meta=meta,
-                bloom_probe=bloom_probe, touch_envelope=envelope,
-            )
-        dk = (
-            deletes.select(F.col(key).alias("_mk"))
-            .filter(F.col("_mk").isNotNull())
-            .distinct()
+                touch_rows = _touch_rows((v, False, True) for v in nn)
+        return self._mutate(
+            self.spark.createDataFrame([], snap_schema)
+            if mode == "cow"
+            else None,
+            key, deletes, "cow" if mode == "cow" else "mor",
+            retries=retries, meta=meta, bloom_probe=bloom_probe,
+            touch_envelope=envelope, touch_rows=touch_rows,
         )
-        attempt = 0
-        while True:
-            try:
-                return self._delete_dv_attempt(
-                    key, dk, meta, bloom_probe,
-                    touch_envelope=envelope, probe_rows=probe_rows,
-                )
-            except ConcurrentMergeConflictError:
-                raise
-            except ConcurrentWriteError:
-                if attempt >= retries:
-                    raise
-                attempt += 1
-
-    def _delete_dv_attempt(
-        self, key: str, touch_keys: DataFrame, meta: dict | None,
-        bloom_probe: str | None,
-        touch_envelope: tuple | None = None,
-        probe_rows: list | None = None,
-    ) -> dict:
-        """One optimistic attempt of a deletion-vector delete: prune
-        candidates, harvest matched live positions, commit the SAME
-        file list with an updated sidecar -- nothing is written to the
-        data plane at all (files_written = 0)."""
-        base_version = self.version()
-        snapshot_files = self.files(base_version)
-        candidates, bloom_mode, _, touch_rows = self._candidate_files(
-            touch_keys, key, base_version, bloom_probe,
-            probe_rows=probe_rows, touch_envelope=touch_envelope,
-        )
-        snap_schema = self._snapshot_schema(base_version)
-        if touch_rows is not None:
-            # bounded batch: the collected keys become a broadcast
-            # LocalRelation, so the position harvest never re-evaluates
-            # the caller's deletes plan (r19)
-            from pyspark.sql.types import StructField, StructType
-
-            touch_keys = F.broadcast(self.spark.createDataFrame(
-                [(r["_mk"],) for r in touch_rows],
-                StructType([
-                    StructField("_mk", snap_schema[key].dataType),
-                ]),
-            ))
-        base_doc = self._commit_doc(base_version)
-        dv_map = self._dv_map(base_doc)
-        feed = self._change_feed_enabled(base_version)
-        dv_updates, rows_deleted, pre_pinned = self._dv_positions_for(
-            candidates, snap_schema, dv_map, key, touch_keys,
-            want_rows=feed,
-        )
-        chg_files: list[str] = []
-        if feed:
-            # pre-image straight from the pinned matched rows: a CDF
-            # dv delete scans its candidates ONCE, not twice (r19)
-            pre = (
-                pre_pinned
-                if pre_pinned is not None
-                else self._read_files([], snap_schema, None)
-            )
-            try:
-                chg_files = self._write_change_files(
-                    self._change_set(pre, None, key, [], None),
-                    base_version + 1,
-                )
-            finally:
-                if pre_pinned is not None:
-                    _release_pinned(pre_pinned)
-        try:
-            return self._commit(
-                base_version + 1,
-                snapshot_files,
-                "delete",
-                {
-                    "parent": base_version,
-                    "strategy": "dv",
-                    "files_kept": len(snapshot_files),
-                    "files_rewritten": 0,
-                    "files_written": 0,
-                    "files_probed": len(candidates),
-                    "dv_files_updated": len(dv_updates),
-                    "rows_dv_deleted": rows_deleted,
-                    **(
-                        {"change_files": chg_files} if chg_files else {}
-                    ),
-                    **(
-                        {"bloom_probe": bloom_mode}
-                        if bloom_mode is not None
-                        else {}
-                    ),
-                    **({"app_meta": meta} if meta is not None else {}),
-                    "file_stats": base_doc["file_stats"],
-                    "schema": snap_schema.jsonValue(),
-                    "dv_updates": dv_updates,
-                },
-            )
-        except (ConcurrentWriteError, ValueError) as exc:
-            if chg_files:
-                import shutil
-
-                shutil.rmtree(
-                    os.path.dirname(chg_files[0]), ignore_errors=True
-                )
-            if isinstance(exc, ValueError):
-                # DV-cap refusal (accumulation guardrail): no commit
-                # was linked; the change files written above must not
-                # outlive it as orphans (ADVICE r16).
-                raise
-            head = self.version()
-            removed = {
-                os.path.basename(f)
-                for f in set(self.files(base_version)) - set(self.files(head))
-            }
-            clash = removed & set(dv_updates)
-            if clash:
-                raise ConcurrentMergeConflictError(
-                    f"concurrent commit rewrote {len(clash)} file(s) this "
-                    f"delete marked rows dead in (e.g. {sorted(clash)[0]}); "
-                    "possible write-write key overlap -- not rebasing"
-                ) from None
-            raise

@@ -225,3 +225,22 @@ def test_cdf_preimage_pin_released(spark, tmp_path):
     assert {r["_change_type"] for r in t.read_changes(1).collect()} == {
         "delete", "update_preimage", "update_postimage", "insert",
     }
+
+
+def test_cdf_rows_carry_only_table_columns(spark, tmp_path):
+    """Change rows of every mutation path carry the table columns plus
+    ``_change_type`` / ``_commit_version`` -- never the position
+    harvest's internal file/row-index columns (a dv delete and a mor
+    merge once leaked ``__dvf`` / ``__dvp`` into the feed)."""
+    t = _mk(spark, tmp_path, "cols")
+    t.delete("k", values=[3])
+    t.merge(
+        spark.createDataFrame([(6, 66), (200, 2000)], "k long, v long"),
+        "k",
+        strategy="mor",
+    )
+    t.merge(spark.createDataFrame([(7, 77)], "k long, v long"), "k")
+    want = ["k", "v", "_change_type", "_commit_version"]
+    for v in (1, 2, 3):
+        assert t.read_changes(v, v).columns == want, v
+    assert t.read_changes(0).columns == want

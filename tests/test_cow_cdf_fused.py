@@ -1,22 +1,22 @@
-"""The r19 FUSED change-feed write (sources/cow_table.py
-``_write_fused_cdc_files``): a change-feed cow merge reads the
-rewritten files' live rows ONCE and one partitioned staging write
+"""The change-feed write of the mutation layer (sources/cow_table.py
+``_classify`` + ``_write_data_files``): a change-feed cow merge reads
+the rewritten files' live rows ONCE and one partitioned staging write
 emits data files and change files together.  Invariants pinned here:
 
 * data files physically carry a hidden all-NULL ``_change_type``
   column, and every reader surface (snapshot read, recorded schema)
   projects it away;
-* the per-merge Spark JOB budget: the fused shape runs the whole CDF
-  merge in a bounded number of driver jobs (the pre-r19 shape ran
-  ~15 at this stage count -- VERDICT r18 next #3);
+* the per-mutation Spark JOB budget: every keyed mutation path (cow
+  and mor merge, cow and dv delete, insert-only merge) runs within its
+  job ceiling with the change feed and the bloom index each on or off,
+  and an oversized merge batch pays no discarded aggregation;
 * the bulk matched-key path (> _MATCHED_INLINE_MAX triples) pins the
   matched set as a localCheckpoint instead of driver literals, and
-  still produces the exact feed (VERDICT r18 next #7);
-* a losing racer's fused output (data dir, change dir, staging dir)
-  is cleaned up;
-* the change write's file sizing degrades to coalesce(8), not
-  shuffle-partition scatter, when a caller-built session has AQE off
-  (ADVICE r18 #4).
+  still produces the exact feed;
+* a losing racer's output (data dir, change dir, staging dir) is
+  cleaned up;
+* a dv delete's change files stay few when a caller-built session has
+  AQE off.
 """
 
 from __future__ import annotations
@@ -103,11 +103,8 @@ def test_fused_data_files_hide_change_type(spark, tmp_path):
 
 
 def test_fused_merge_job_budget(spark, tmp_path):
-    """One CDF cow merge = a bounded driver-job count (VERDICT r18
-    next #3).  The pre-r19 shape ran ~15 jobs for this mutation
-    (separate change write + data write + per-attempt envelope agg +
-    dk probe); the fused shape runs the touch probe, the detection
-    collect, and ONE staging write."""
+    """One CDF cow merge = a bounded driver-job count: the touch
+    probe, the detection collect, and ONE staging write."""
     t = _mk(spark, tmp_path, "budget")
     st = spark.sparkContext.statusTracker()
     before = set(st.getJobIdsForGroup(None))
@@ -118,6 +115,97 @@ def test_fused_merge_job_budget(spark, tmp_path):
         f"CDF merge ran {n_jobs} driver jobs -- the fused write "
         "budget (<=10, measured 8-9 incl. AQE stage jobs) regressed"
     )
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs one call runs (all of them are ungrouped here)."""
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    fn()
+    return len(set(st.getJobIdsForGroup(None)) - before)
+
+
+# Per-op job ceilings, measured at local[4] with shuffle_partitions=4
+# on the pre-unification writers (one change classifier per path):
+# (feed on + bloom, feed on, feed off + bloom, feed off).
+_JOB_CEILINGS = {
+    "cow merge": (8, 8, 7, 7),
+    "dv delete": (8, 8, 6, 6),
+    "cow delete": (10, 9, 9, 8),
+    "mor merge": (17, 18, 9, 10),
+    "insert-only merge": (7, 7, 3, 3),
+}
+_BUDGET_SETUPS = [(True, True), (True, False), (False, True), (False, False)]
+
+
+@pytest.mark.parametrize(
+    "feed,bloom",
+    _BUDGET_SETUPS,
+    ids=[f"feed{int(f)}-bloom{int(b)}" for f, b in _BUDGET_SETUPS],
+)
+def test_mutation_job_budget(spark, tmp_path, feed, bloom):
+    """Every keyed mutation path stays within its job ceiling, with the
+    change feed and the bloom index each on or off: cow merge, dv
+    delete, cow delete, mor merge and an insert-only merge, in that
+    order on one 4,000-row, 8-file table."""
+    df = (
+        spark.range(4000)
+        .selectExpr("id AS k", "id * 10 AS v")
+        .repartition(8)
+    )
+    t = CowTable.create(
+        spark, str(tmp_path / "jobs"), df,
+        bloom_col="k" if bloom else None, change_feed=feed,
+    )
+    assert len(t.files()) == 8
+    src = spark.createDataFrame([(5, 555), (100000, 1)], "k long, v long")
+    dels = spark.createDataFrame([(7,)], "k long")
+    ops = {
+        "cow merge": lambda: t.merge(src, "k", deletes=dels),
+        "dv delete": lambda: t.delete("k", values=[11, 12]),
+        "cow delete": lambda: t.delete("k", values=[21], mode="cow"),
+        "mor merge": lambda: t.merge(
+            src, "k", deletes=dels, strategy="mor"
+        ),
+        "insert-only merge": lambda: t.merge(
+            spark.createDataFrame([(200000, 2)], "k long, v long"), "k"
+        ),
+    }
+    col = _BUDGET_SETUPS.index((feed, bloom))
+    got = {name: _jobs(spark, fn) for name, fn in ops.items()}
+    over = {
+        name: (n, _JOB_CEILINGS[name][col])
+        for name, n in got.items()
+        if n > _JOB_CEILINGS[name][col]
+    }
+    assert not over, f"jobs over ceiling (got, ceiling): {over}; all: {got}"
+    live = {r["k"]: r["v"] for r in t.read().collect()}
+    assert live[5] == 555 and live[100000] == 1 and live[200000] == 2
+    assert not {7, 11, 12, 21} & set(live) and len(live) == 3998
+
+
+def test_bulk_merge_probe_skips_aggregation(spark, tmp_path, monkeypatch):
+    """A merge whose touch keys overflow the bounded probe takes the
+    oversized path straight from one raw (un-aggregated) probe job --
+    no discarded groupBy over the whole source -- and, since the
+    probe's sample already meets every file's key range, skips the
+    envelope agg that could prune nothing."""
+    monkeypatch.setattr(ct_mod, "_BLOOM_PRUNE_MAX_KEYS", 16)
+    for feed in (False, True):
+        df = (
+            spark.range(4000)
+            .selectExpr("id AS k", "id * 10 AS v")
+            .repartition(8)
+        )
+        t = CowTable.create(
+            spark, str(tmp_path / f"bulk{int(feed)}"), df, change_feed=feed
+        )
+        src = spark.range(0, 4000, 20).selectExpr("id AS k", "id * 10 + 1 AS v")
+        n = _jobs(spark, lambda: t.merge(src, "k"))
+        assert n <= 7, f"feed={feed}: bulk merge ran {n} jobs"
+        got = {r["k"]: r["v"] for r in t.read().collect()}
+        assert len(got) == 4000
+        assert all(got[k] == k * 10 + (1 if k % 20 == 0 else 0) for k in got)
 
 
 def test_bulk_matched_path_pins_not_inlines(spark, tmp_path, monkeypatch):
@@ -189,9 +277,10 @@ def test_fused_loser_cleanup(spark, tmp_path, monkeypatch):
 
 
 def test_change_write_coalesces_without_aqe(spark, tmp_path):
-    """ADVICE r18 #4: with adaptive execution off, the change write's
-    REBALANCE hint would no-op and scatter the delta over
-    shuffle-partition near-empty files; the fallback bounds it to 8."""
+    """ADVICE r18 #4: with adaptive execution off, a change write
+    must not scatter the delta over shuffle-partition near-empty
+    files; a dv delete's change files come from its pinned pre-image,
+    at most one per partition holding matched rows."""
     t = _mk(spark, tmp_path, "noaqe", n=60, parts=3)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:

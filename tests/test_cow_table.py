@@ -1551,10 +1551,10 @@ def test_bloom_merge_distributed_probe_large_batch(spark, tmp_path):
 
 
 def test_bloom_probe_paths_agree(spark, tmp_path):
-    """Forced driver vs forced distributed probing of the SAME small
-    batch prune to the same candidate set and converge to the same
-    table content (the distributed path is an execution strategy, not
-    a semantics change)."""
+    """The default probe of a small batch (driver-side) and the forced
+    distributed probe of the SAME batch prune to the same candidate
+    set and converge to the same table content (the distributed path
+    is an execution strategy, not a semantics change)."""
     df = _keyed_df(spark, n=6000)
     upd = df.filter(F.col("v").isin([7, 1717, 5005])).withColumn(
         "v", F.col("v") + 1_000_000
@@ -1564,7 +1564,9 @@ def test_bloom_probe_paths_agree(spark, tmp_path):
         t = CowTable.create(
             spark, str(tmp_path / mode), df.repartition(12), bloom_col="k"
         )
-        docs[mode] = t.merge(upd, "k", bloom_probe=mode)
+        docs[mode] = t.merge(
+            upd, "k", bloom_probe=None if mode == "driver" else mode
+        )
         docs[mode + "_rows"] = _rows(t.read())
     assert docs["driver"]["bloom_probe"] == "driver"
     assert docs["distributed"]["bloom_probe"] == "distributed"
