@@ -54,21 +54,12 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.cow_table import _BLOOM_BITS_MAX, CowTable
+from ..sources.cow_table import _BLOOM_BITS_MAX, CowTable, _probe_keys
 
 #: Cumulative document-frequency cap for probe hits -- buckets hotter
 #: than this across ALL ingests carry no near-dup signal (see
 #: plans/queries_dedup.PAIR_DF_CAP, same rationale and value).
 DEFAULT_DF_CAP = 64
-
-#: Key-count boundary between the prune's two modes (mirrors
-#: cow_table._BLOOM_PRUNE_MAX_KEYS): at or below it the probe plans
-#: the DRIVER bloom path (collect the keys, test each candidate's
-#: sidecar in-process -- no extra Spark job), above it the
-#: EXECUTOR-side path (filters broadcast to the key batch).  The two
-#: modes have very different fixed costs, so the auto decision is
-#: mode-aware (:func:`_auto_prune`).
-PROBE_DRIVER_MODE_MAX_KEYS = 10_000
 
 #: Consecutive probe() bloom-prune failures tolerated before the
 #: silent full-scan fallback stops being silent: a fallback is always
@@ -223,27 +214,14 @@ def _assert_no_shuffle_join(df: DataFrame, what: str) -> None:
             )
 
 
-def _plan_probe_mode(keys: DataFrame) -> tuple[str, list | None]:
-    """Which bloom-prune mode a batch's key count calls for: driver
-    (in-process sidecar tests, no extra Spark job) at or below
-    ``PROBE_DRIVER_MODE_MAX_KEYS`` distinct keys, executor-side
-    above.  One bounded job over the (checkpointed, delta-sized)
-    batch -- and in the driver case the COLLECTED rows come back with
-    the mode, so the prune itself never re-collects (the planning job
-    IS the driver path's fixed cost)."""
-    rows = keys.limit(PROBE_DRIVER_MODE_MAX_KEYS + 1).collect()
-    if len(rows) <= PROBE_DRIVER_MODE_MAX_KEYS:
-        return "driver", rows
-    return "distributed", None
-
-
 def _prune_files(
-    store, keys: DataFrame, col: str, version: int, all_files, mode: str,
-    probe_rows: list | None = None,
+    store, keys: DataFrame, probe: tuple, col: str, doc: dict, all_files
 ):
     """The shared prune-with-fallback step of both stores' probes:
-    try the bloom file-prune in the planned ``mode``; on failure fall
-    back to the full file list (always CORRECT -- pruning only drops
+    bloom-prune the file list through CowTable's file-skipping planner
+    (driver-side when ``probe`` -- :func:`_probe_keys` of ``keys`` --
+    held the whole batch, executor-side past it); on failure fall back
+    to the full file list (always CORRECT -- pruning only drops
     provably-unmatchable files) and count consecutive failures on
     ``store``.  At ``_PROBE_FALLBACK_MAX`` the fallback stops being
     silent -- a loud ``warnings.warn`` per call, never an exception
@@ -251,14 +229,15 @@ def _prune_files(
     correct); the running count is surfaced in
     ``last_probe["prune_fallbacks"]`` for callers that prefer to
     hard-fail."""
+    rows, bounded = probe
+    mk = [r["_mk"] for r in rows]
     try:
-        files, got_mode, _ = store.table._candidate_files(
-            keys, col, version,
-            "distributed" if mode == "distributed" else None,
-            probe_rows=probe_rows,
+        files, scan = store.table._candidate_files(
+            doc, col, keys=mk if bounded else None, frame=keys,
+            sample=None if bounded else mk,
         )
         store._probe_fallbacks = 0
-        return files, got_mode
+        return files, scan["bloom_probe"]
     except Exception as exc:
         store._probe_fallbacks += 1
         if store._probe_fallbacks >= _PROBE_FALLBACK_MAX:
@@ -659,10 +638,10 @@ class LshBucketStore:
 
         ``prune`` -- whether the scan's file list is bloom-pruned
         first: the batch's distinct ``band|bucket`` keys probe each
-        delta file's bk2 filter through the shared mutation-skipping
-        front-end (CowTable._candidate_files; driver-side for
+        delta file's bk2 filter through the shared file-skipping
+        planner (CowTable._candidate_files; driver-side for
         delta-sized key batches, executor-side past
-        ``PROBE_DRIVER_MODE_MAX_KEYS``), so a delta holding none of
+        ``_BLOOM_PRUNE_MAX_KEYS``), so a delta holding none of
         the batch's buckets is never read.  No false negatives:
         pruning can only ADD files, the SUM(df) cap arithmetic is
         unchanged.  Default None = auto: the measured cost model
@@ -693,14 +672,14 @@ class LshBucketStore:
             keys = batch_bands.select(
                 self._bk2(F.col("band_idx"), F.col("bucket")).alias("_mk")
             ).distinct()
-            kmode, krows = _plan_probe_mode(keys)
+            probe = _probe_keys(keys)
             # re-check the economics under the ACTUAL mode (a batch
             # too big for the driver path pays the executor-side
             # fixed job, which may not repay on this store)
+            kmode = "driver" if probe[1] else "distributed"
             if not auto or _auto_prune(doc, len(all_files), cal, kmode):
                 files, mode = _prune_files(
-                    self, keys, "bk2", v, all_files, kmode,
-                    probe_rows=krows,
+                    self, keys, probe, "bk2", doc, all_files
                 )
         self.last_probe = {
             "files_total": len(all_files),
@@ -859,11 +838,11 @@ class FingerprintStore:
         files, mode = all_files, None
         if prune:
             keys = batch_fps.select(F.col("fp").alias("_mk")).distinct()
-            kmode, krows = _plan_probe_mode(keys)
+            probe = _probe_keys(keys)
+            kmode = "driver" if probe[1] else "distributed"
             if not auto or _auto_prune(doc, len(all_files), cal, kmode):
                 files, mode = _prune_files(
-                    self, keys, "fp", v, all_files, kmode,
-                    probe_rows=krows,
+                    self, keys, probe, "fp", doc, all_files
                 )
         self.last_probe = {
             "files_total": len(all_files),

@@ -62,6 +62,26 @@ so the engine's upsert path runs end-to-end in any environment:
   writers' not-yet-committed files; commit metadata is never
   rewritten, so history stays auditable past the horizon.
 
+File skipping: one planner, :meth:`CowTable._candidate_files`, picks
+the files every read (:meth:`read_range`, :meth:`read_ranges`,
+:meth:`read_point`), keyed mutation (:meth:`merge`, :meth:`delete`) and
+dedup-store probe (operators/lsh_store) opens; every other file is
+skipped unread.  Its range test (:func:`_range_slice`) checks each key
+against each file's footer ``[min, max]`` by bisecting the sorted keys,
+so a file costs O(log keys); files without stats, stats of another type
+or tz-awareness (:func:`_stat_cmp_ok`), and NaN or unencodable keys
+never narrow the kept set.  Its bloom test (:func:`_bloom_any_hit`)
+then asks the file's bloom sidecar about the keys that survived the
+range test: on the driver up to ``_BLOOM_PRUNE_MAX_KEYS`` keys,
+executor-side past them (:meth:`CowTable._bloom_prune_distributed`);
+a file without a sidecar entry is kept, and an unhashable key turns the
+bloom step off.  A key batch too large to hold on the driver is
+range-tested by its envelope -- a caller's covering bound, else one agg
+job.  The one evidence record lands in ``last_scan`` (reads), the
+commit doc's ``files_probed``/``bloom_probe`` (mutations) and the
+store's ``last_probe``.  Skipping is never a semantics change: kept
+files are re-filtered exactly.
+
 On-disk format: every commit doc is written by :meth:`CowTable._commit`
 and carries ``format_version`` (:data:`FORMAT_VERSION`), the snapshot's
 ``files``, their footer ``file_stats``, the table ``schema`` and the
@@ -80,7 +100,9 @@ statement instead.
 
 from __future__ import annotations
 
+import bisect
 import contextlib
+import itertools
 import json
 import os
 import re as _re
@@ -245,6 +267,42 @@ def _stat_cmp_ok(a, b) -> bool:
     return False
 
 
+def _stat_class(e):
+    """Comparability class of an encoded value: two values of one class
+    compare against any footer stat alike under :func:`_stat_cmp_ok`,
+    so one representative stands for the class.  None for NaN and
+    unencodable values -- they never narrow a range test."""
+    if isinstance(e, bool):
+        return "bool"
+    if isinstance(e, (int, float)):
+        return "num" if e == e else None
+    if isinstance(e, str):
+        if _ISO_DT_RE.match(e):
+            return "aware" if _ISO_TZ_RE.search(e) else "naive"
+        return "str"
+    return None
+
+
+def _range_slice(s: dict | None, los: list, his: list) -> tuple[int, int]:
+    """THE range test of file skipping.  ``los``/``his`` are the sorted
+    bounds of disjoint closed intervals of one :func:`_stat_class`: a
+    key batch passes its sorted keys as both, a one-sided bound passes
+    one value and an empty list for the open side.  Returns the slice
+    ``[i, j)`` of intervals that may meet the file's recorded ``[min,
+    max]`` ``s`` (``i < j``: the file is kept) -- all of them when the
+    file has no stats or its stats do not compare with the class."""
+    n = max(len(los), len(his))
+    rep = (los or his)[0]
+    if s is None or not (
+        _stat_cmp_ok(s["min"], rep) and _stat_cmp_ok(s["max"], rep)
+    ):
+        return 0, n
+    return (
+        bisect.bisect_left(his, s["min"]) if his else 0,
+        bisect.bisect_right(los, s["max"]) if los else n,
+    )
+
+
 def _file_footer_stats(path: str) -> dict:
     """Per-file stats from the parquet FOOTER only (no data read):
     ``{"rows": N, "cols": {name: {"min":..,"max":..,"nulls":..}}}``.
@@ -311,11 +369,11 @@ _BLOOM_K_DEFAULT = 5
 _BLOOM_BITS_PER_KEY = 10  # fpp ~1% at k=5
 _BLOOM_BITS_MAX = 1 << 23
 
-# Above this many distinct merge keys, merge() stops collecting them
-# for DRIVER-side bloom probing (same hazard class as
-# _DELETE_INLINE_MAX) and probes EXECUTOR-side instead: the per-file
-# filters broadcast to the key batch and only the O(files) hit set
-# returns to the driver (see _bloom_prune_distributed).
+# The file-skipping planner's driver-or-executor gate: above this many
+# keys a batch is not held on the driver (same hazard class as
+# _DELETE_INLINE_MAX) and its bloom test runs EXECUTOR-side instead:
+# the per-file filters broadcast to the key batch and only the
+# O(files) hit set returns to the driver (see _bloom_prune_distributed).
 _BLOOM_PRUNE_MAX_KEYS = 10_000
 
 # Column dtypes create() accepts for bloom_col: exactly the types
@@ -491,17 +549,28 @@ def _file_bloom(path: str, col: str, conf: dict) -> dict:
 _BLOOM_BUF_CACHE: dict = {}
 _BLOOM_BUF_CACHE_MAX_BYTES = 128 << 20
 _BLOOM_BUF_CACHE_BYTES = [0]  # running total (1-elem list: mutable)
+#: Lookup, evict and put run under this lock (decoding does not), as
+#: for ``_DOC_CACHE``: probes from several threads share the cache.
+_BLOOM_BUF_CACHE_LOCK = threading.Lock()
 
 
 def _bloom_buf_cache_put(key, buf) -> None:
-    while (
-        _BLOOM_BUF_CACHE
-        and _BLOOM_BUF_CACHE_BYTES[0] + len(buf[0]) > _BLOOM_BUF_CACHE_MAX_BYTES
-    ):
-        old = _BLOOM_BUF_CACHE.pop(next(iter(_BLOOM_BUF_CACHE)))
-        _BLOOM_BUF_CACHE_BYTES[0] -= len(old[0])
-    _BLOOM_BUF_CACHE[key] = buf
-    _BLOOM_BUF_CACHE_BYTES[0] += len(buf[0])
+    """Cache a decoded ``(buf, m, k)``.  Two threads that both missed
+    put the same key: the second put replaces the first, so the byte
+    total counts every cached buffer once."""
+    with _BLOOM_BUF_CACHE_LOCK:
+        old = _BLOOM_BUF_CACHE.pop(key, None)
+        if old is not None:
+            _BLOOM_BUF_CACHE_BYTES[0] -= len(old[0])
+        while (
+            _BLOOM_BUF_CACHE
+            and _BLOOM_BUF_CACHE_BYTES[0] + len(buf[0])
+            > _BLOOM_BUF_CACHE_MAX_BYTES
+        ):
+            old = _BLOOM_BUF_CACHE.pop(next(iter(_BLOOM_BUF_CACHE)))
+            _BLOOM_BUF_CACHE_BYTES[0] -= len(old[0])
+        _BLOOM_BUF_CACHE[key] = buf
+        _BLOOM_BUF_CACHE_BYTES[0] += len(buf[0])
 
 
 class _BloomIndex:
@@ -529,7 +598,8 @@ class _BloomIndex:
         name = self._names.get(basename)
         if name:
             ck = (self._log_dir, name)
-            out = _BLOOM_BUF_CACHE.get(ck)
+            with _BLOOM_BUF_CACHE_LOCK:
+                out = _BLOOM_BUF_CACHE.get(ck)
             if out is None:
                 try:
                     with open(os.path.join(self._log_dir, name)) as f:
@@ -564,10 +634,7 @@ def _bloom_maybe_contains(hex_bits: str, value, m: int, k: int, tz=None) -> bool
         buf = _bloom_buf(hex_bits, m)
     except ValueError:
         return True  # corrupt entry: maybe-present, file is scanned
-    return all(
-        buf[p >> 3] >> (p & 7) & 1
-        for p in _bloom_positions(value, m, k, tz)
-    )
+    return _bloom_any_hit(buf, m, k, [_bloom_hashes(value, tz)])
 
 
 def _normalize_probe(v):
@@ -860,6 +927,18 @@ def _key_frame(spark: SparkSession, rows, fields) -> DataFrame:
     return F.broadcast(spark.createDataFrame(
         list(rows), StructType([StructField(n, t) for n, t in fields])
     ))
+
+
+def _probe_keys(keys: DataFrame) -> tuple[list, bool]:
+    """The one bounded probe of a key batch: at most
+    ``_BLOOM_PRUNE_MAX_KEYS + 1`` raw rows, and whether that is all of
+    them -- the file-skipping planner's driver-or-executor gate
+    (:meth:`CowTable._candidate_files`).  Every partition stops at
+    cap + 1 rows and one exchange gathers them: two jobs whatever the
+    batch's partition count, the batch evaluated in parallel (a plain
+    ``take()`` re-runs in rounds over more and more partitions)."""
+    rows = keys.limit(_BLOOM_PRUNE_MAX_KEYS + 1).coalesce(1).collect()
+    return rows, len(rows) <= _BLOOM_PRUNE_MAX_KEYS
 
 
 def _touch_rows(rows) -> list[dict] | None:
@@ -1673,64 +1752,27 @@ class CowTable:
         hi=None,
         version: int | None = None,
     ) -> DataFrame:
-        """Read with FILE SKIPPING: open only the files whose commit-log
-        ``[min, max]`` for ``col`` intersects ``[lo, hi]`` (inclusive;
-        either bound may be None), then apply the exact filter to the
-        survivors.  Files without usable stats are scanned -- skipping
-        is an optimization, never a semantics change; range predicates
+        """Rows with ``lo <= col <= hi`` (either bound None), opening
+        only the files whose recorded ``[min, max]`` for ``col`` meets
+        the range (module docstring, "File skipping"); range predicates
         never match NULL, so null rows in skipped files cannot be
-        answers.  Evidence lands in ``self.last_scan``
-        (files_total/files_scanned/files_skipped).  This is the
-        table-format half of predicate pushdown: at 100 TB the commit
-        log prunes whole files before Spark ever lists them, on top of
-        parquet's own row-group pruning inside the survivors."""
+        answers.  Evidence in ``self.last_scan``."""
         return self.read_ranges({col: (lo, hi)}, version=version)
 
     def read_ranges(
         self, preds: dict, version: int | None = None
     ) -> DataFrame:
-        """Multi-column file skipping: ``preds`` maps column ->
-        ``(lo, hi)`` (inclusive; either bound None), the predicates
-        AND together, and a file is skipped as soon as ANY column's
-        recorded range proves its predicate cannot match there.  On a
-        Z-order-compacted layout (``compact(cluster_by=[a, b])``)
-        every queried dimension prunes at once -- the multi-column
-        payoff single-column range clustering cannot give (clustering
-        on ``a`` leaves every file's ``b`` range full-width).  Same
-        contract as :meth:`read_range`: survivors are exactly
-        re-filtered, stat-less columns never skip, evidence in
-        ``self.last_scan``."""
+        """:meth:`read_range` over several columns: ``preds`` maps column
+        -> ``(lo, hi)``, the predicates AND together, and a file is
+        skipped as soon as ANY column's recorded range refutes its
+        predicate -- on a Z-order-compacted layout
+        (``compact(cluster_by=[a, b])``) every queried dimension prunes
+        at once."""
         v = self.version() if version is None else version
-        files = self.files(v)
         doc = self._commit_doc(v)
-        stats = doc.get("file_stats", {})
-        enc = {
-            col: (
-                _enc_stat(lo) if lo is not None else None,
-                _enc_stat(hi) if hi is not None else None,
-            )
-            for col, (lo, hi) in preds.items()
-        }
-        scan: list[str] = []
-        for f in files:
-            cols = stats.get(os.path.basename(f), {}).get("cols", {})
-            skip = False
-            for col, (lo_e, hi_e) in enc.items():
-                s = cols.get(col)
-                if s is None:
-                    continue
-                if lo_e is not None and _stat_cmp_ok(s["max"], lo_e):
-                    skip = skip or s["max"] < lo_e
-                if hi_e is not None and _stat_cmp_ok(s["min"], hi_e):
-                    skip = skip or s["min"] > hi_e
-                if skip:
-                    break
-            if not skip:
-                scan.append(f)
+        scan, ev = self._candidate_files(doc, ranges=preds)
         self.last_scan = {
-            "files_total": len(files),
-            "files_scanned": len(scan),
-            "files_skipped": len(files) - len(scan),
+            k: ev[k] for k in ("files_total", "files_scanned", "files_skipped")
         }
         df = self._read_files(
             scan, self._snapshot_schema(v), self._dv_map(doc)
@@ -1743,38 +1785,20 @@ class CowTable:
         return df
 
     def read_point(self, col: str, values, version: int | None = None) -> DataFrame:
-        """Point lookup (``col = v`` / ``col IN (...)``) with BLOOM
-        file skipping on top of range stats.  Range pruning is useless
-        exactly where point lookups live -- high-cardinality keys
-        (UUIDs, content hashes) whose per-file [min, max] spans the
-        whole key space after any non-key clustering -- so tables
-        created with ``bloom_col`` carry a per-file Bloom filter in
-        per-file sidecars, and a file is opened only when (a) some probe
-        value sits inside its recorded range AND (b) the filter says
-        maybe-present.  No false negatives by construction (pinned in
-        pytest: every present key survives pruning); false positives
-        only cost a scan.  Survivors are exactly re-filtered --
-        skipping is never a semantics change.  Evidence in
-        ``self.last_scan`` incl. ``files_skipped_bloom`` (files range
-        stats admitted but the bloom refuted -- the index's marginal
-        value).  At 100 TB this is the difference between a point
-        lookup scanning every file of a compacted table and touching
-        one.
-
-        Probe-cardinality contract: the per-value driver loop is
-        O(files x probes) pure-Python -- sized for point lookups (a
-        handful to a few thousand values).  Past
-        ``_BLOOM_PRUNE_MAX_KEYS`` probes the lookup automatically
-        switches to the merge-style EXECUTOR-side path: envelope
-        range prune, distributed bloom probe
-        (:meth:`_bloom_prune_distributed`), and a broadcast semi-join
-        instead of an ``isin()`` literal (which at that size is a
-        Catalyst-plan hazard of its own).  Naive datetime probes are
+        """Point lookup (``col = v`` / ``col IN (...)``): a file is
+        opened only when some probe value sits inside its recorded
+        range AND, on a table created with ``bloom_col``, its bloom
+        filter says maybe-present (module docstring, "File skipping").
+        Evidence in ``self.last_scan``, incl. ``files_skipped_bloom``
+        (files the range test kept but the bloom refuted).  Past
+        ``_BLOOM_PRUNE_MAX_KEYS`` probes the survivors are filtered by
+        a broadcast semi-join instead of an ``isin()`` literal (a
+        Catalyst-plan hazard at that size).  Naive datetime probes are
         interpreted in the DRIVER's local timezone -- exactly the
         convention plain ``collect()`` and ``F.lit`` use, so a
-        collected value round-trips -- then normalized to UTC
-        instants before range comparison, bloom hashing, and the
-        final filter; pass tz-aware values to be explicit."""
+        collected value round-trips -- then normalized to UTC instants
+        before range comparison, bloom hashing, and the final filter;
+        pass tz-aware values to be explicit."""
         vals = (
             list(values)
             if isinstance(values, (list, tuple, set))
@@ -1785,130 +1809,45 @@ class CowTable:
         vals = [_normalize_probe(x) for x in vals]
         v = self.version() if version is None else version
         doc = self._commit_doc(v)
-        files = doc["files"]
-        stats = doc.get("file_stats", {})
-        bidx = self._bloom_index(doc, col)
+        schema = self._snapshot_schema(v)
+        probe_df = None
         if len(vals) > _BLOOM_PRUNE_MAX_KEYS:
-            return self._read_point_large(
-                col, vals, v, files, stats, bidx, self._dv_map(doc)
+            probe_df = _key_frame(
+                self.spark, [(x,) for x in vals],
+                [("_mk", schema[col].dataType)],
             )
-        enc_vals = [_enc_stat(x) for x in vals]
-        hashes: list = []
-        for x in vals:
-            try:
-                hashes.append(_bloom_hashes(x))
-            except TypeError:
-                # unhashable probe type: the bloom cannot refute this
-                # value -- same maybe-present fallback merge uses.
-                hashes.append(None)
-        scan: list[str] = []
-        skipped_bloom = 0
-        for f in files:
-            base = os.path.basename(f)
-            s = stats.get(base, {}).get("cols", {}).get(col)
-            in_range = [True] * len(vals)
-            if s is not None:
-                for i, e in enumerate(enc_vals):
-                    if e is None:
-                        continue
-                    if _stat_cmp_ok(s["min"], e) and _stat_cmp_ok(s["max"], e):
-                        in_range[i] = s["min"] <= e <= s["max"]
-            if not any(in_range):
-                continue
-            entry = bidx.entry(base) if bidx is not None else None
-            if entry is not None:
-                live = [h for ok, h in zip(in_range, hashes) if ok]
-                if all(h is not None for h in live):
-                    buf, m, k = entry
-                    if not _bloom_any_hit(buf, m, k, live):
-                        skipped_bloom += 1
-                        continue
-            scan.append(f)
+        scan, ev = self._candidate_files(doc, col, keys=vals, frame=probe_df)
         self.last_scan = {
-            "files_total": len(files),
-            "files_scanned": len(scan),
-            "files_skipped": len(files) - len(scan),
-            "files_skipped_bloom": skipped_bloom,
+            k: ev[k]
+            for k in (
+                "files_total", "files_scanned", "files_skipped",
+                "files_skipped_bloom",
+            )
         }
-        df = self._read_files(
-            scan, self._snapshot_schema(v), self._dv_map(doc)
-        )
+        df = self._read_files(scan, schema, self._dv_map(doc))
+        if probe_df is not None:
+            return df.join(
+                probe_df.withColumnRenamed("_mk", "__probe_k"),
+                df[col] == F.col("__probe_k"),
+                "left_semi",
+            )
         if len(vals) == 1:
             return df.filter(F.col(col) == F.lit(vals[0]))
         return df.filter(F.col(col).isin(vals))
-
-    def _read_point_large(
-        self, col: str, vals: list, v: int, files: list[str],
-        stats: dict, bidx: "_BloomIndex | None", dv_map: dict | None = None,
-    ) -> DataFrame:
-        """:meth:`read_point` past ``_BLOOM_PRUNE_MAX_KEYS`` probes:
-        range-prunes by the batch's [min, max] ENVELOPE only (one
-        driver pass over the values, O(files) comparisons), bloom-
-        probes executor-side, and filters survivors with a broadcast
-        left-semi join -- the same shape :meth:`merge` uses for large
-        key batches, so a 100k-value IN-list costs O(files) driver
-        work, not O(files x probes)."""
-        enc = []
-        for x in vals:
-            e = _enc_stat(x)
-            if e is None:
-                enc = None  # unencodable value: no range prune at all
-                break
-            enc.append(e)
-        scan0 = []
-        if enc:
-            lo_e, hi_e = min(enc), max(enc)
-            for f in files:
-                s = stats.get(os.path.basename(f), {}).get("cols", {}).get(col)
-                skip = False
-                if s is not None:
-                    if _stat_cmp_ok(s["max"], lo_e):
-                        skip = skip or s["max"] < lo_e
-                    if _stat_cmp_ok(s["min"], hi_e):
-                        skip = skip or s["min"] > hi_e
-                if not skip:
-                    scan0.append(f)
-        else:
-            scan0 = list(files)
-        schema = self._snapshot_schema(v)
-        ktype = schema[col].dataType
-        probe_df = _key_frame(self.spark, [(x,) for x in vals], [("_mk", ktype)])
-        scan = self._bloom_prune_distributed(probe_df, scan0, bidx)
-        self.last_scan = {
-            "files_total": len(files),
-            "files_scanned": len(scan),
-            "files_skipped": len(files) - len(scan),
-            "files_skipped_bloom": len(scan0) - len(scan),
-        }
-        df = self._read_files(scan, schema, dv_map)
-        return df.join(
-            probe_df.withColumnRenamed("_mk", "__probe_k"),
-            df[col] == F.col("__probe_k"),
-            "left_semi",
-        )
 
     def _bloom_prune_distributed(
         self, touch_keys: DataFrame, candidates: list[str],
         bidx: "_BloomIndex | None",
     ) -> list[str]:
-        """Bloom candidate pruning for key batches TOO BIG to collect:
-        the per-file filters (the sidecar entries for ``candidates``
-        only) broadcast to the executors holding the key batch, each
-        partition tests its keys against the filters with per-file
-        early exit (a file one key hits stops being tested), and only
-        the O(files) set of HIT basenames returns to the driver -- the
-        keys themselves never leave the cluster.  This is what keeps
-        bloom pruning engaged for the 100k-key delta merges that are
-        the normal case at 100 TB, where the driver-side probe's
-        ``_BLOOM_PRUNE_MAX_KEYS`` cap would otherwise silently fall
-        back to range-envelope pruning (useless on hash keys).  Work
-        is O(keys/partition x unhit files) per partition, numpy-free
-        on purpose: position arithmetic is exact Python-int modular
-        math, bit-identical to the write side.  Files without a
-        sidecar entry are kept unread (never refuted); an unhashable
-        key type conservatively keeps everything.  No false negatives:
-        a file is dropped only when EVERY key's filter test refutes
-        it."""
+        """The planner's bloom test for key batches past
+        ``_BLOOM_PRUNE_MAX_KEYS``: the filters of ``candidates``
+        broadcast to the executors holding the batch, each partition
+        tests its keys with per-file early exit (a file one key hits
+        stops being tested), and only the O(files) set of hit basenames
+        returns -- the keys never leave the cluster.  Position
+        arithmetic is exact Python-int modular math, bit-identical to
+        the write side.  Files without a sidecar entry are kept; an
+        unhashable key keeps everything."""
         entries: dict[str, tuple[bytes, int, int]] = {}
         for f in candidates:
             b = os.path.basename(f)
@@ -1933,8 +1872,11 @@ class CowTable:
                 if give_up or not active:
                     break
                 for raw in pdf["_mk"]:
+                    # a float NaN is probed like any key (Spark joins
+                    # NaN to NaN), even where it stands for a null
                     if raw is None or (
-                        not isinstance(raw, (str, bytes)) and pd.isna(raw)
+                        not isinstance(raw, (str, bytes, float))
+                        and pd.isna(raw)
                     ):
                         continue
                     try:
@@ -2416,9 +2358,9 @@ class CowTable:
 
         Every keyed mutation -- both merge strategies and both
         :meth:`delete` modes -- runs one back half
-        (:meth:`_mutate_attempt`): candidate files (range + bloom
-        pruned by the commit log, so files whose key range or filter
-        refutes the batch are never READ) -> matched keys, each with
+        (:meth:`_mutate_attempt`): candidate files (the file-skipping
+        planner: files whose ranges or filters refute every key are
+        never READ) -> matched keys, each with
         its source flag -> one change classifier (:meth:`_classify`)
         -> one writer (:meth:`_write_data_files`) -> one
         commit-and-cleanup (:meth:`_commit_attempt`).  Only files
@@ -2507,29 +2449,28 @@ class CowTable:
         deletion-vector delete (a mor mutation with no source).
 
         Touch keys are the source keys (flag ``_s``) plus the non-null
-        delete keys (flag ``_d``).  A batch of at most
-        ``_BLOOM_PRUNE_MAX_KEYS`` of them is collected by one raw
-        ``limit`` probe and grouped on the driver
-        (:func:`_touch_rows`); the rows hand every attempt its touch
-        set as a broadcast LocalRelation, its range envelope and its
-        bloom probe, so no attempt re-evaluates the batch plans (touch
-        keys are snapshot-independent: reuse across rebase attempts is
-        exact).  A raw probe past the cap takes the oversized path
-        directly -- a duplicate-heavy batch with more rows than the cap
-        but fewer distinct keys just takes it too, which is correct
-        either way -- and its rows ride along as a SAMPLE of the touch
-        keys (see :meth:`_candidate_files`); its delete keys stay
-        inline up to ``_DELETE_INLINE_MAX``, else pin once (the
-        attempts traverse them repeatedly).  The probe is skipped when
-        the caller holds the rows already (``delete(values=)``),
-        supplied a covering ``touch_envelope`` (LSH appends: zero
-        planning jobs stays zero) or forced the distributed bloom
-        probe."""
+        delete keys (flag ``_d``).  One bounded probe
+        (:func:`_probe_keys`) collects them; a batch within the cap is
+        grouped on the driver (:func:`_touch_rows`) and hands every
+        attempt its touch set as a broadcast LocalRelation and its keys
+        for the file-skipping planner, so no attempt re-evaluates the
+        batch plans (touch keys are snapshot-independent: reuse across
+        rebase attempts is exact).  A probe past the cap takes the
+        oversized path directly -- a duplicate-heavy batch with more
+        rows than the cap but fewer distinct keys just takes it too,
+        which is correct either way -- and its rows ride along as a
+        SAMPLE of the touch keys; its delete keys stay inline up to
+        ``_DELETE_INLINE_MAX``, else pin once (the attempts traverse
+        them repeatedly).  The probe is skipped when the caller holds
+        the rows already (``delete(values=)``), supplied a covering
+        ``touch_envelope`` (LSH appends: zero planning jobs stays zero)
+        or forced the distributed bloom probe."""
         if bloom_probe not in (None, "distributed"):
             raise ValueError(
                 f"bloom_probe must be None or 'distributed', got "
                 f"{bloom_probe!r}"
             )
+        sample = None
         if (
             touch_rows is None
             and touch_envelope is None
@@ -2551,24 +2492,14 @@ class CowTable:
             flagged = sides[0]
             for s in sides[1:]:
                 flagged = flagged.unionByName(s)
-            # every partition stops at cap + 1 rows and one exchange
-            # gathers them: two jobs whatever the batch's partition
-            # count, the batch evaluated in parallel (a plain take()
-            # re-runs in rounds over more and more partitions)
-            touch_rows = (
-                flagged.limit(_BLOOM_PRUNE_MAX_KEYS + 1)
-                .coalesce(1)
-                .collect()
-            )
-            if len(touch_rows) <= _BLOOM_PRUNE_MAX_KEYS:
-                touch_rows = _touch_rows(touch_rows)
-        bounded = (
-            touch_rows is not None
-            and len(touch_rows) <= _BLOOM_PRUNE_MAX_KEYS
-        )
+            rows, bounded = _probe_keys(flagged)
+            if bounded:
+                touch_rows = _touch_rows(rows)
+            else:
+                sample = [r["_mk"] for r in rows if r["_mk"] is not None]
         dk_vals: list = []
         dk_df: DataFrame | None = None
-        if bounded:
+        if touch_rows is not None:
             n_dk = sum(1 for r in touch_rows if r["_d"])
         elif deletes is not None:
             # NULL keys never match a join; dropping them keeps the
@@ -2593,8 +2524,8 @@ class CowTable:
                 try:
                     return self._mutate_attempt(
                         source, key, strategy, dk_vals, dk_df, n_dk,
-                        touch_rows, meta, evolve_schema, bloom_probe,
-                        touch_envelope,
+                        touch_rows, sample, meta, evolve_schema,
+                        bloom_probe, touch_envelope,
                     )
                 except ConcurrentMergeConflictError:
                     raise
@@ -2615,6 +2546,7 @@ class CowTable:
         dk_df: DataFrame | None,
         n_dk: int,
         touch_rows: list | None,
+        sample: list | None,
         meta: dict | None,
         evolve_schema: bool,
         bloom_probe: str | None,
@@ -2638,10 +2570,9 @@ class CowTable:
            change files when the feed is on, in one write.
         5. :meth:`_commit_attempt` commits or cleans up.
 
-        ``touch_rows``: the front half's grouped touch rows, its
-        overflowed raw probe (more than ``_BLOOM_PRUNE_MAX_KEYS`` rows:
-        a sample only), or None.  A dv delete (``source`` None) writes
-        no data file at all."""
+        ``touch_rows``: the front half's grouped touch rows, or None;
+        ``sample``: the keys of its overflowed probe, or None.  A dv
+        delete (``source`` None) writes no data file at all."""
         from pyspark.sql.types import BooleanType, StructType
 
         base_version = self.version()
@@ -2700,9 +2631,7 @@ class CowTable:
             source.schema if source is not None else snap_schema
         )[key].dataType
         flags = [("_mk", ktype), ("_s", BooleanType())]
-        if touch_rows is not None and len(touch_rows) <= (
-            _BLOOM_PRUNE_MAX_KEYS
-        ):
+        if touch_rows is not None:
             touch_keys = _key_frame(
                 self.spark, [(r["_mk"], r["_s"]) for r in touch_rows], flags
             )
@@ -2730,10 +2659,15 @@ class CowTable:
             elif source is not None:
                 touch_keys = touch_keys.distinct()
 
-        candidates, bloom_mode, n_touch = self._candidate_files(
-            touch_keys, key, base_version, bloom_probe,
-            probe_rows=touch_rows, touch_envelope=touch_envelope,
+        candidates, scan = self._candidate_files(
+            base_doc, key,
+            keys=None if touch_rows is None else [
+                r["_mk"] for r in touch_rows if r["_mk"] is not None
+            ],
+            frame=touch_keys, envelope=touch_envelope, sample=sample,
+            bloom_probe=bloom_probe,
         )
+        n_touch = scan["keys"]
         # Broadcast gate for key sets that are frames, not driver rows:
         # a count bound AND a byte estimate (wide string keys could
         # push a count-gated build side past driver/broadcast limits);
@@ -2861,7 +2795,10 @@ class CowTable:
             # skipping evidence: candidate files the mutation actually
             # READ (vs len(files) total), and which bloom path pruned
             "files_probed": len(candidates),
-            **({"bloom_probe": bloom_mode} if bloom_mode else {}),
+            **(
+                {"bloom_probe": scan["bloom_probe"]}
+                if scan["bloom_probe"] else {}
+            ),
             **({"delete_keys": n_dk} if op == "merge" else {}),
             **({"app_meta": meta} if meta is not None else {}),
             "file_stats": {
@@ -3006,182 +2943,149 @@ class CowTable:
 
     def _candidate_files(
         self,
-        touch_keys: DataFrame,
-        key: str,
-        base_version: int,
+        doc: dict,
+        col: str | None = None,
+        keys: list | None = None,
+        frame: DataFrame | None = None,
+        envelope: tuple | None = None,
+        sample: list | None = None,
         bloom_probe: str | None = None,
-        probe_rows: list | None = None,
-        touch_envelope: tuple | None = None,
-    ) -> tuple[list[str], str | None, int | None]:
-        """Files of snapshot ``base_version`` that MAY contain a key of
-        ``touch_keys`` -- the shared skipping front-end of every keyed
-        mutation (:meth:`merge` both strategies, :meth:`delete`) and of
-        the LSH store probes.  Returns ``(candidate files, bloom probe
-        mode or None, distinct non-null touch-key count or None when
-        not cheaply known)`` -- the count falls out of work this
-        planner does anyway (the bounded key rows, or a count() column
-        added to the envelope agg at zero extra jobs) and lets the
-        mutation decide whether its key sets are provably
-        broadcast-sized.  ``probe_rows`` are touch rows the caller
-        collected (each has ``_mk``): all of them when at most
-        ``_BLOOM_PRUNE_MAX_KEYS``, else an overflowed probe's sample.
+        ranges: dict | None = None,
+    ) -> tuple[list[str], dict]:
+        """The file-skipping planner of every read, keyed mutation and
+        store probe (module docstring, "File skipping"): the files of
+        snapshot ``doc`` that may hold a wanted row, and one evidence
+        record -- ``files_total``, ``files_scanned``, ``files_skipped``,
+        ``files_skipped_bloom``, ``bloom_probe`` ("driver",
+        "distributed" or None) and ``keys`` (the non-null key count
+        when known without a job of its own, else None).
 
-        File-level prune BEFORE any data scan (Delta-style skipping
-        applied to the MERGE condition): every touch key lies inside
-        [min, max] of the batch's keys, so a file whose commit-log key
-        range does not intersect that envelope provably contains no
-        touch key -- it is kept by reference WITHOUT being read.  A
-        bounded batch derives the envelope from its rows (Python
-        min/max, the same comparison _stat_cmp_ok applies later,
-        restricted to str/int keys so float-NaN ordering quirks can
-        never narrow it); otherwise one agg job computes it -- unless
-        an overflowed sample's own envelope already meets every file:
-        the batch's envelope contains the sample's, so the agg could
-        prune nothing.  On a range-clustered layout (compact
-        cluster_by) this turns the per-mutation candidate scan from
-        O(table) to O(touched range); on a hash layout every file
-        intersects and nothing is lost.  Files without usable stats
-        are always candidates -- pruning is never a semantics change.
+        The input is either ``ranges`` (column -> inclusive ``(lo,
+        hi)``, either bound None, ANDed) or a key batch on ``col``:
 
-        ``touch_envelope``: a caller-supplied ``(lo, hi)`` bound that
-        COVERS every source and delete key (a superset range).  When
-        given, the envelope agg job is skipped -- the range prune is
-        sound under any covering bound (a wider envelope only keeps
-        more candidates).  Callers must NOT pass a bound any touch key
-        can fall outside: an undersized envelope could skip a file
-        that holds a matched key.  Used by provably-disjoint appends
-        (operators/lsh_store: the ingest prefix is checked monotone
-        pre-commit, so the key range is known analytically) to save
-        one Spark job per commit (guide §2.4)."""
-        snapshot_files = self.files(base_version)
-        stats = self._commit_doc(base_version).get("file_stats", {})
+        * ``keys``: the batch's non-null keys in driver hand.  Every
+          key is range-tested against every file; at most
+          ``_BLOOM_PRUNE_MAX_KEYS`` keys, the driver then bloom-tests
+          each file's in-range keys.  Past the cap, or with
+          ``bloom_probe="distributed"``, the bloom test runs
+          executor-side over ``frame``.
+        * ``frame`` alone (column ``_mk``): a batch too big to hold.
+          Its range test uses the caller's ``envelope`` ``(lo, hi)``,
+          which must cover every key (a wider bound only keeps more
+          files); else none when the ``sample`` keys alone keep every
+          file; else the ``[min, max]`` and count of one agg job.  The
+          bloom test runs executor-side."""
+        files = doc["files"]
+        stats = doc.get("file_stats", {})
 
-        def meeting(lo, hi) -> list[str]:
-            # files whose recorded key range may hold a key in [lo, hi]
-            if lo is None:
-                # no non-null touch key (empty, or all-null keys, which
-                # never join-match): nothing can be affected;
-                # null-keyed source rows still insert
-                return []
-            lo_e, hi_e = _enc_stat(lo), _enc_stat(hi)
-            if lo_e is None or hi_e is None:
-                return list(snapshot_files)
-            out = []
-            for f in snapshot_files:
-                s = stats.get(os.path.basename(f), {}).get("cols", {}).get(key)
-                skip = False
-                if s is not None:
-                    if _stat_cmp_ok(s["max"], lo_e):
-                        skip = skip or s["max"] < lo_e
-                    if _stat_cmp_ok(s["min"], hi_e):
-                        skip = skip or s["min"] > hi_e
-                if not skip:
-                    out.append(f)
-            return out
+        def stat(f: str, c: str):
+            return stats.get(os.path.basename(f), {}).get("cols", {}).get(c)
 
-        n_touch: int | None = None
-        bounded = (
-            probe_rows is not None
-            and len(probe_rows) <= _BLOOM_PRUNE_MAX_KEYS
-        )
-        candidates = None
-        if touch_envelope is not None:
-            candidates = meeting(*touch_envelope)
-        if probe_rows is not None:
-            nn = [r["_mk"] for r in probe_rows if r["_mk"] is not None]
-            if bounded:
-                n_touch = len(nn)
-            if candidates is None and bounded and not nn:
-                candidates = []
-            elif candidates is None and nn and all(
-                isinstance(v, (str, int)) for v in nn
-            ):
-                candidates = meeting(min(nn), max(nn))
-                if not bounded and len(candidates) < len(snapshot_files):
-                    candidates = None  # the sample proves nothing here
-        if candidates is None:
-            # count("_mk") counts the distinct non-null touch keys in
-            # the SAME job as the envelope agg (touch_keys is already
-            # distinct) -- no extra action for the broadcast decision.
-            b = touch_keys.agg(
-                F.min("_mk").alias("lo"), F.max("_mk").alias("hi"),
-                F.count("_mk").alias("n"),
-            ).collect()[0]
-            n_touch = int(b["n"])
-            candidates = meeting(b["lo"], b["hi"])
+        def by_bounds(bounds: dict) -> list[str]:
+            # each bound is a one-sided test; a file must pass them all
+            tests = []
+            for c, (lo, hi) in bounds.items():
+                for b, below in ((lo, True), (hi, False)):
+                    e = None if b is None else _enc_stat(b)
+                    if _stat_class(e) is not None:
+                        tests.append((c, [e], []) if below else (c, [], [e]))
+            return [
+                f for f in files
+                if all(i < j for i, j in (
+                    _range_slice(stat(f, c), los, his)
+                    for c, los, his in tests
+                ))
+            ]
 
-        # Second prune, where range stats go blind: on a
-        # high-cardinality hash key every file's [min, max] spans the
-        # whole key space, so the envelope above keeps EVERYTHING and
-        # each delta merge pays an O(table) candidate scan.  If the
-        # table carries a bloom index on the merge key, probe every
-        # candidate's filter: a file none of the touch keys maybe-hits
-        # provably contains no match (no false negatives) and is kept
-        # by reference unread.  Driver-sized batches (at most
-        # _BLOOM_PRUNE_MAX_KEYS distinct keys) hash once per key and
-        # test per file -- all metadata-plane.  BIGGER batches -- the
-        # normal delta size at 100 TB -- do NOT lose the prune: the
-        # probe goes executor-side (_bloom_prune_distributed), keeping
-        # the driver at O(files).  Any hiccup (unhashable key type,
-        # missing entries) just leaves the candidate list as-is.
-        bloom_mode = None
-        if candidates:
-            try:
-                bidx = self._bloom_index(
-                    self._commit_doc(base_version), key
+        def by_keys(vals: list, hashes: list | None = None):
+            # hashes: the keys' bloom hashes, None for no bloom step
+            classes: dict = {}
+            wild = []  # keys no range test can refute
+            for i, x in enumerate(vals):
+                e = _enc_stat(x)
+                c = _stat_class(e)
+                if c is None:
+                    wild.append(i)
+                else:
+                    classes.setdefault(c, []).append((e, i))
+            groups = []
+            for pairs in classes.values():
+                pairs.sort(key=lambda p: p[0])
+                groups.append(([e for e, _ in pairs], [i for _, i in pairs]))
+            kept, refuted = [], 0
+            for f in files:
+                hit = [
+                    (idx, *_range_slice(stat(f, col), es, es))
+                    for es, idx in groups
+                ]
+                if not wild and all(i >= j for _, i, j in hit):
+                    continue
+                entry = (
+                    bidx.entry(os.path.basename(f))
+                    if hashes is not None else None
                 )
-                if bidx is not None:
-                    probe = None
-                    if bloom_probe != "distributed":
-                        # the caller's collected rows save one job; an
-                        # overflowed sample goes straight to the
-                        # distributed path
-                        probe = (
-                            probe_rows
-                            if probe_rows is not None
-                            else touch_keys.limit(
-                                _BLOOM_PRUNE_MAX_KEYS + 1
-                            ).collect()
-                        )
-                        if len(probe) > _BLOOM_PRUNE_MAX_KEYS:
-                            probe = None
-                    if probe is None:
-                        candidates = self._bloom_prune_distributed(
-                            touch_keys, candidates, bidx
-                        )
-                        bloom_mode = "distributed"
-                    else:
-                        if n_touch is None:
-                            n_touch = sum(
-                                1 for r in probe if r["_mk"] is not None
-                            )
-                        hashes = []
-                        hashable = True
-                        for r in probe:
-                            if r["_mk"] is None:
-                                continue
-                            try:
-                                hashes.append(_bloom_hashes(
-                                    _normalize_probe(r["_mk"])
-                                ))
-                            except TypeError:
-                                hashable = False
-                                break
-                        if hashable:
-                            kept_cand = []
-                            for f in candidates:
-                                e = bidx.entry(os.path.basename(f))
-                                if e is None:
-                                    kept_cand.append(f)
-                                    continue
-                                buf, m_b, k_b = e
-                                if _bloom_any_hit(buf, m_b, k_b, hashes):
-                                    kept_cand.append(f)
-                            candidates = kept_cand
-                            bloom_mode = "driver"
-            except TypeError:
-                pass
-        return candidates, bloom_mode, n_touch
+                if entry is not None and not _bloom_any_hit(*entry, (
+                    hashes[x]
+                    for x in itertools.chain(
+                        wild, *(idx[i:j] for idx, i, j in hit)
+                    )
+                )):
+                    refuted += 1
+                    continue
+                kept.append(f)
+            return kept, refuted
+
+        ev = {
+            "files_total": len(files), "files_skipped_bloom": 0,
+            "bloom_probe": None, "keys": None,
+        }
+        if ranges is not None:
+            kept = by_bounds(ranges)
+        else:
+            bidx = self._bloom_index(doc, col)
+            driver = (
+                keys is not None
+                and len(keys) <= _BLOOM_PRUNE_MAX_KEYS
+                and bloom_probe != "distributed"
+            )
+            if keys is not None:
+                keys = [_normalize_probe(x) for x in keys]
+                hashes = None
+                if driver and bidx is not None:
+                    try:
+                        hashes = [_bloom_hashes(x) for x in keys]
+                        ev["bloom_probe"] = "driver"
+                    except TypeError:
+                        pass  # an unhashable key: no bloom step at all
+                ev["keys"] = len(keys)
+                kept, ev["files_skipped_bloom"] = by_keys(keys, hashes)
+            else:
+                kept = None
+                if envelope is None and sample:
+                    kept = by_keys(list(map(_normalize_probe, sample)))[0]
+                    if len(kept) < len(files):
+                        kept = None  # the sample proves nothing here
+                if kept is None:
+                    if envelope is None:
+                        b = frame.agg(
+                            F.min("_mk").alias("lo"),
+                            F.max("_mk").alias("hi"),
+                            F.count("_mk").alias("n"),
+                        ).collect()[0]
+                        envelope, ev["keys"] = (b["lo"], b["hi"]), int(b["n"])
+                    # no non-null key (an empty or all-null batch, which
+                    # never join-matches): nothing can be touched
+                    kept = [] if envelope[0] is None else by_bounds(
+                        {col: tuple(map(_normalize_probe, envelope))}
+                    )
+            if bidx is not None and kept and not driver:
+                n = len(kept)
+                kept = self._bloom_prune_distributed(frame, kept, bidx)
+                ev["files_skipped_bloom"] = n - len(kept)
+                ev["bloom_probe"] = "distributed"
+        ev["files_scanned"] = len(kept)
+        ev["files_skipped"] = len(files) - len(kept)
+        return kept, ev
 
     def _dv_positions_for(
         self,
@@ -3387,18 +3291,18 @@ class CowTable:
                 self.spark, [(v,) for v in vals],
                 [(key, snap_schema[key].dataType)],
             )
-            # The touch keys are IN HAND as driver literals: derive the
-            # range-prune envelope and the touch rows here, so the
-            # point-delete shape runs no planning job.  NULLs never
-            # match a join, so dropping them keeps the envelope exact.
+            # The touch keys are IN HAND as driver literals: within the
+            # cap they are the touch rows, past it their envelope, so
+            # the point-delete shape runs no planning job.  NULLs never
+            # match a join, so dropping them keeps both exact.
             nn = [v for v in vals if v is not None]
-            if nn:
+            if len(nn) <= _BLOOM_PRUNE_MAX_KEYS:
+                touch_rows = _touch_rows((v, False, True) for v in nn)
+            if touch_rows is None and nn:
                 try:
                     envelope = (min(nn), max(nn))
                 except TypeError:
-                    envelope = None  # mixed/unorderable: fall back
-            if len(nn) <= _BLOOM_PRUNE_MAX_KEYS:
-                touch_rows = _touch_rows((v, False, True) for v in nn)
+                    pass  # mixed/unorderable: the probe plans the batch
         return self._mutate(
             self.spark.createDataFrame([], snap_schema)
             if mode == "cow"

@@ -7,24 +7,22 @@ path here is :func:`materialize_raw`: parse the XML exactly ONCE
 RAW_ELEMENT_SCHEMA parquet table bucketed by element id, then run
 everything downstream columnar and exchange-free.
 
-Two parsers back it:
+One production reader and one oracle twin:
 
+* :func:`read_osm_elements_split` -- the reader :func:`materialize_raw`
+  runs: a byte-range-splittable streaming parse.  The driver plans
+  (file, offset, length) splits exactly like ``FileSourceScanExec``
+  does for parquet, each task seeks to its offset, resyncs to the next
+  top-level element boundary, and parses just its range.  Genuinely
+  single-pass AND split-parallel: per-task memory is bounded by
+  ``split_bytes`` (not file size) and a single huge file fans out
+  across the cluster.  When no file exceeds one split it parses whole
+  files instead (:func:`_read_whole_files`), which skips the range
+  machinery's fixed costs.
 * :func:`read_osm_elements` -- Spark's built-in XML source, one scan
-  per rowTag (node/way/relation).  JVM-fast (~100 MB/s steady at 32
-  threads) but reads the same bytes three times: fine on cached local
-  storage, 300 TB of I/O against a 100 TB extract on an object store.
-* :func:`read_osm_elements_split` -- byte-range-splittable streaming
-  expat parse: the driver plans (file, offset, length) splits exactly
-  like ``FileSourceScanExec`` does for parquet, each task seeks to its
-  offset, resyncs to the next top-level element boundary, and parses
-  just its range.  Genuinely single-pass AND split-parallel: per-task
-  memory is bounded by ``split_bytes`` (not file size) and a single
-  huge file fans out across the cluster.  Default parser for
-  :func:`materialize_raw`.
-* :func:`read_osm_elements_iterparse` -- the earlier file-granular
-  variant (one task per file, whole file in memory); kept as the
-  simplest single-pass path and as the differential-test twin for the
-  split reader.
+  per rowTag (node/way/relation): the test oracle every parse path is
+  checked against.  It reads the same bytes three times, so it stays
+  off the production path.
 """
 
 from __future__ import annotations
@@ -54,8 +52,8 @@ _TOP_ELEMENT_RE = re.compile(rb"<(?:node|way|relation)[\s/>]")
 # declaration, so expat decodes them as UTF-8 unconditionally.  OSM
 # extracts are UTF-8 by spec; a file DECLARING anything else (or
 # carrying a UTF-16/32 BOM) must fail fast here rather than silently
-# mis-decode -- route such inputs through the iterparse/rowTag readers,
-# which see the declaration.
+# mis-decode -- route such inputs through the rowTag reader, which sees
+# the declaration.
 _ENC_DECL_RE = re.compile(
     rb"^\xef?\xbb?\xbf?\s*<\?xml[^>]*?encoding\s*=\s*[\"']([A-Za-z0-9._-]+)[\"']"
 )
@@ -73,16 +71,16 @@ def _check_split_encoding(head: bytes, fpath: str) -> None:
             raise ValueError(
                 f"read_osm_elements_split: {fpath} has a UTF-16/32 BOM; "
                 "split slices assume UTF-8 -- use "
-                "read_osm_elements_iterparse or the rowTag reader"
+                "the rowTag reader (read_osm_elements)"
             )
     m = _ENC_DECL_RE.match(head)
     if m:
-        enc = m.group(1).decode("ascii").lower()
-        if enc not in _UTF8_COMPATIBLE:
+        enc = m.group(1).decode("ascii")
+        if enc.lower() not in _UTF8_COMPATIBLE:
             raise ValueError(
                 f"read_osm_elements_split: {fpath} declares "
                 f"encoding={enc}; split slices assume UTF-8 -- use "
-                "read_osm_elements_iterparse or the rowTag reader"
+                "the rowTag reader (read_osm_elements)"
             )
 
 
@@ -164,19 +162,13 @@ def read_osm_elements(spark: SparkSession, path: str) -> DataFrame:
     """Read an OSM XML file into the unioned RAW_ELEMENT_SCHEMA frame."""
     frames: list[DataFrame] = []
     for kind in ("node", "way", "relation"):
-        try:
-            raw = (
-                spark.read.format("xml")
-                .option("rowTag", kind)
-                .option("attributePrefix", "_")
-                .schema(_xml_schema(kind))
-                .load(path)
-            )
-        except Exception:
-            continue
-        if not raw.columns:
-            continue
-
+        raw = (
+            spark.read.format("xml")
+            .option("rowTag", kind)
+            .option("attributePrefix", "_")
+            .schema(_xml_schema(kind))
+            .load(path)
+        )
         cols = [
             F.lit(kind).alias("doc_type"),
             _attr(raw, "id").cast("string").alias("_id"),
@@ -216,8 +208,6 @@ def read_osm_elements(spark: SparkSession, path: str) -> DataFrame:
         cols.append(_tags_array(raw))
         frames.append(raw.select(*cols))
 
-    if not frames:
-        return spark.createDataFrame([], RAW_ELEMENT_SCHEMA)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
@@ -750,12 +740,12 @@ def read_osm_elements_split(
     another encoding (or carrying a UTF-16/32 BOM) FAILS FAST: the
     task owning each file's first split sniffs the declaration
     (``_check_split_encoding``) and raises with a pointer to the
-    iterparse/rowTag readers, which do honor declarations.  This
+    rowTag reader, which does honor declarations.  This
     caveat shares a paragraph with the comment/CDATA false-sync one on
     ``_TOP_ELEMENT_RE``.
 
-    This removes the file-granularity bound of
-    :func:`read_osm_elements_iterparse`: per-task memory is
+    This removes the file-granularity bound of a whole-file parse
+    (:func:`_read_whole_files`): per-task memory is
     ~``split_bytes`` regardless of file layout, and a single 100 GB
     file fans out across ``size/split_bytes`` tasks instead of
     serializing on one.  It keeps the single-pass I/O profile (each
@@ -782,14 +772,14 @@ def read_osm_elements_split(
     # -- while still paying its fixed costs (a driver metadata job, a
     # split-row shuffle, Python-side open/seek per file instead of the
     # JVM's binaryFile read).  Measured on the 77 MB / 32-shard bench
-    # input that overhead is ~1.7x wall (tools/ab_ingest.py), so the
+    # input that overhead is ~1.7x wall (PERF.md), so the
     # many-small-files layout takes the file-granular single-pass path;
     # any file larger than split_bytes engages the range path it
     # exists for.
     if all(start == 0 and nbytes == size for _, start, nbytes, size in splits):
-        return read_osm_elements_iterparse(
-            spark, path, batch_rows=batch_rows, chunk_bytes=chunk_bytes,
-            counters=counters,
+        return _read_whole_files(
+            spark, path, len(splits), batch_rows=batch_rows,
+            chunk_bytes=chunk_bytes, counters=counters,
         )
     # One task per split up to 4x the cluster's core count; past that,
     # tasks consume several split rows sequentially (per-task memory
@@ -859,26 +849,20 @@ def read_osm_elements_split(
     return sdf.mapInArrow(parse, RAW_ELEMENT_SCHEMA)
 
 
-def read_osm_elements_iterparse(
+def _read_whole_files(
     spark: SparkSession,
     path: str,
+    n_files: int,
     batch_rows: int = 50_000,
     chunk_bytes: int = 4 << 20,
     counters=None,
 ) -> DataFrame:
-    """Single-pass scan, file-granular: streaming expat parse of each
-    whole file via ``mapInArrow`` over ``binaryFile`` rows.
-
-    Simplest single-pass path and the differential-test twin of
-    :func:`read_osm_elements_split`.  Parallelism = file count and
-    per-task memory ~= largest file (``binaryFile`` is unsplittable),
-    so :func:`materialize_raw` defaults to the split reader; this one
-    remains for small/sharded inputs and test cross-checks.
-    """
+    """:func:`read_osm_elements_split`'s branch for inputs whose every
+    file fits one split: a single-pass parse of each whole file via
+    ``mapInArrow`` over ``binaryFile`` rows.  ``n_files`` is the split
+    plan's file count; fewer files than cores spread one per task."""
     files = spark.read.format("binaryFile").load(path).select("content")
-    n_files = files.count()
-    sc = spark.sparkContext
-    if n_files < sc.defaultParallelism:
+    if n_files < spark.sparkContext.defaultParallelism:
         files = files.repartition(max(n_files, 1))
 
     def parse(batches):
@@ -899,11 +883,7 @@ def materialize_raw(
     out_path: str,
     table: str = "osm_raw_bronze",
     buckets: int = 32,
-    single_pass: bool = True,
-    split_bytes: int = 128 << 20,
-    parser: str | None = None,
     counters=None,
-    batch_rows: int = 50_000,
 ) -> DataFrame:
     """One-time raw-ingest materialization: OSM XML -> bronze parquet
     bucketed by ``_id``.  Returns the bronze table's DataFrame.
@@ -926,28 +906,13 @@ def materialize_raw(
     write task holds exactly one bucket -> one file per bucket, no
     small-file explosion.
 
-    ``parser`` selects the parse path explicitly ("split",
-    "iterparse", or "xml"); when None it derives from ``single_pass``
-    (True -> "split", False -> "xml" -- the per-rowTag JVM source:
-    ~1.4x faster parse locally, but it scans the input three times,
-    only sensible when the input sits on cheap page-cached storage).
-    Bucketed metadata lives in the session catalog (``saveAsTable``);
-    on a real cluster this is the Hive/Unity metastore and the layout
-    amortizes across every downstream job.
+    The parse is :func:`read_osm_elements_split`; ``counters`` passes
+    through to it (see :func:`_parse_slice`).  Bucketed metadata lives
+    in the session catalog (``saveAsTable``); on a real cluster this is
+    the Hive/Unity metastore and the layout amortizes across every
+    downstream job.
     """
-    if parser is None:
-        parser = "split" if single_pass else "xml"
-    if parser == "split":
-        raw = read_osm_elements_split(
-            spark, xml_path, split_bytes=split_bytes, counters=counters,
-            batch_rows=batch_rows,
-        )
-    elif parser == "iterparse":
-        raw = read_osm_elements_iterparse(spark, xml_path, batch_rows=batch_rows)
-    elif parser == "xml":
-        raw = read_osm_elements(spark, xml_path)
-    else:
-        raise ValueError(f"unknown parser {parser!r}")
+    raw = read_osm_elements_split(spark, xml_path, counters=counters)
     (
         raw.repartition(buckets, "_id")
         .write.mode("overwrite")

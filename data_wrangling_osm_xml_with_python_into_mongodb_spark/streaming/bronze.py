@@ -6,7 +6,7 @@ stream -> cleaned dicts -> JSON file -> mongoimport).  At production
 scale the same pipeline is continuous: extracts land in a directory as
 they arrive and must flow into the bronze table incrementally without
 re-parsing old files.  This module runs the SAME parser
-(`sources.osm_xml._expat_batches`) under Structured Streaming's file
+(`sources.osm_xml._parse_slice`) under Structured Streaming's file
 source, so batch bronze and streaming bronze are mutually checking
 twins (tests assert stream == batch on the fixture).
 
@@ -14,14 +14,14 @@ Design:
 
 * ``readStream.format("binaryFile")`` is the streaming file source:
   Spark's generic ``FileStreamSource`` drives any FileFormat, so the
-  same whole-file binary rows the batch iterparse reader consumes
+  same whole-file binary rows the batch whole-file reader consumes
   arrive incrementally here (the text source is line-granular under
   streaming -- its ``wholetext`` option is ignored -- so binary rows
   are also the only way to keep byte-exact XML).  The source
   checkpoints which files it has consumed: each XML file is parsed
   exactly once across restarts, the incremental version of
   ``materialize_raw``'s parse-once contract.
-* ``mapInArrow`` with the shared expat core parses each file's text
+* ``mapInArrow`` with the shared parse core parses each file's text
   in one stateless pass -- legal under streaming (no aggregation
   state), so the whole plan stays incremental.
 * ``Trigger.AvailableNow`` drains everything currently in the
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schema import RAW_ELEMENT_SCHEMA
-from ..sources.osm_xml import _expat_batches
+from ..sources.osm_xml import _parse_slice
 
 # binaryFile's fixed schema; streaming sources require it stated
 # explicitly (no inference pass on an unbounded input).
@@ -71,13 +71,10 @@ def read_osm_element_stream(
     def parse(batches):
         for rb in batches:
             for content_scalar in rb.column(0):
-                content = content_scalar.as_py()
-
-                def feed():
-                    for pos in range(0, len(content), chunk_bytes):
-                        yield content[pos : pos + chunk_bytes]
-
-                yield from _expat_batches(feed(), batch_rows)
+                yield from _parse_slice(
+                    content_scalar.as_py(), batch_rows, chunk_bytes,
+                    wrap=False,
+                )
 
     return files.mapInArrow(parse, RAW_ELEMENT_SCHEMA)
 

@@ -126,7 +126,8 @@ def _jobs(spark, fn) -> int:
 
 
 # Per-op job ceilings, measured at local[4] with shuffle_partitions=4
-# on the pre-unification writers (one change classifier per path):
+# on the pre-unification writers (one change classifier per path), and
+# for the reads (plan + collect) before the file-skipping planner:
 # (feed on + bloom, feed on, feed off + bloom, feed off).
 _JOB_CEILINGS = {
     "cow merge": (8, 8, 7, 7),
@@ -134,6 +135,9 @@ _JOB_CEILINGS = {
     "cow delete": (10, 9, 9, 8),
     "mor merge": (17, 18, 9, 10),
     "insert-only merge": (7, 7, 3, 3),
+    "read_point": (2, 2, 2, 2),
+    "read_point over cap": (5, 3, 5, 3),
+    "read_ranges": (2, 2, 2, 2),
 }
 _BUDGET_SETUPS = [(True, True), (True, False), (False, True), (False, False)]
 
@@ -143,11 +147,13 @@ _BUDGET_SETUPS = [(True, True), (True, False), (False, True), (False, False)]
     _BUDGET_SETUPS,
     ids=[f"feed{int(f)}-bloom{int(b)}" for f, b in _BUDGET_SETUPS],
 )
-def test_mutation_job_budget(spark, tmp_path, feed, bloom):
+def test_mutation_job_budget(spark, tmp_path, monkeypatch, feed, bloom):
     """Every keyed mutation path stays within its job ceiling, with the
     change feed and the bloom index each on or off: cow merge, dv
     delete, cow delete, mor merge and an insert-only merge, in that
-    order on one 4,000-row, 8-file table."""
+    order on one 4,000-row, 8-file table; then the reads that share
+    their file-skipping planner -- a point lookup within and past the
+    driver-probe cap, and a range read."""
     df = (
         spark.range(4000)
         .selectExpr("id AS k", "id * 10 AS v")
@@ -170,7 +176,16 @@ def test_mutation_job_budget(spark, tmp_path, feed, bloom):
         "insert-only merge": lambda: t.merge(
             spark.createDataFrame([(200000, 2)], "k long, v long"), "k"
         ),
+        "read_point": lambda: t.read_point("k", [5, 3000, 9]).collect(),
+        "read_point over cap": lambda: read_point_over_cap(),
+        "read_ranges": lambda: t.read_ranges({"k": (10, 400)}).collect(),
     }
+
+    def read_point_over_cap():
+        with monkeypatch.context() as m:
+            m.setattr(ct_mod, "_BLOOM_PRUNE_MAX_KEYS", 2)
+            return t.read_point("k", [5, 3000, 9]).collect()
+
     col = _BUDGET_SETUPS.index((feed, bloom))
     got = {name: _jobs(spark, fn) for name, fn in ops.items()}
     over = {

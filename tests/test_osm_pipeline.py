@@ -154,14 +154,14 @@ def test_ref_docs_index(spark):
 
 
 def test_iterparse_fallback_matches_xml_source(spark):
-    """The last-resort Python iterparse source must yield exactly the
+    """The split reader's whole-file branch must yield exactly the
     rows the rowTag XML source yields (same schema, same values)."""
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.osm_xml import (
-        read_osm_elements_iterparse,
+        _read_whole_files,
     )
 
     a = read_osm_elements(spark, FIXTURE)
-    b = read_osm_elements_iterparse(spark, FIXTURE)
+    b = _read_whole_files(spark, FIXTURE, 1)
     # simpleString ignores nullability flags (the union relaxes them).
     assert a.schema.simpleString() == b.schema.simpleString()
     key = lambda r: r["_id"]  # noqa: E731
@@ -175,15 +175,51 @@ def test_iterparse_chunked_flush_boundaries(spark):
     mid-flush: a pathological 64-byte chunk size with a 3-row batch
     cap must yield exactly the rows the default path yields."""
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.osm_xml import (
-        read_osm_elements_iterparse,
+        _read_whole_files,
     )
 
     a = read_osm_elements(spark, FIXTURE)
-    b = read_osm_elements_iterparse(spark, FIXTURE, batch_rows=3, chunk_bytes=64)
+    b = _read_whole_files(spark, FIXTURE, 1, batch_rows=3, chunk_bytes=64)
     key = lambda r: r["_id"]  # noqa: E731
     rows_a = sorted((r.asDict(recursive=True) for r in a.collect()), key=key)
     rows_b = sorted((r.asDict(recursive=True) for r in b.collect()), key=key)
     assert rows_a == rows_b
+
+
+def test_rowtag_reader_missing_path_raises(spark, tmp_path):
+    """A missing input is an error, not an empty frame: the rowTag
+    reader raises Spark's PATH_NOT_FOUND, as the split reader does."""
+    from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.osm_xml import (
+        read_osm_elements_split,
+    )
+
+    missing = str(tmp_path / "no_such.osm")
+    for read in (read_osm_elements, read_osm_elements_split):
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            read(spark, missing).count()
+
+
+def test_rowtag_reader_reads_relationless_file(spark, tmp_path):
+    """A file without a relation still yields its nodes and ways: an
+    absent rowTag reads as zero rows under the explicit schema."""
+    f = tmp_path / "no_relations.osm"
+    f.write_text(
+        '<?xml version="1.0" encoding="UTF-8"?>\n<osm>\n'
+        ' <node id="1" lat="1.0" lon="2.0" version="1"/>\n'
+        ' <node id="2" lat="3.0" lon="4.0" version="1"/>\n'
+        ' <way id="10" version="1"><nd ref="1"/><nd ref="2"/>'
+        '<tag k="highway" v="residential"/></way>\n'
+        '</osm>\n'
+    )
+    got = {
+        r["_id"]: (r["doc_type"], r["nds"])
+        for r in read_osm_elements(spark, str(f)).collect()
+    }
+    assert got == {
+        "1": ("node", None),
+        "2": ("node", None),
+        "10": ("way", ["1", "2"]),
+    }
 
 
 def test_split_reader_matches_xml_source_multi_split(spark):
