@@ -1627,10 +1627,13 @@ def _bench_etl(spark, target_mb: float = 77.0) -> dict:
         }
 
         # Pass 0: planning + codegen warm-up for both stages.  Bucket
-        # count: 96 buckets shave the shape stage (2.87s -> 2.57s,
-        # finer-task balance) but cost more at ingest (+0.8s: 3x the
-        # bucket files per write task) -- 32 wins end-to-end; on a
-        # cluster you'd size bucket count by target bucket bytes.
+        # count: materialize_raw's derived default (one per 128 MB of
+        # XML, at least one per core).  On a 32-thread session 96
+        # buckets shaved the shape stage (2.87s -> 2.57s) but cost more
+        # at ingest (+0.8s: 3x the bucket files per write task), so 32
+        # won end-to-end among counts >= 32; fewer buckets than cores
+        # was not measured here (PERF.md round-10 addendum covers a
+        # 4-core session, where 4 buckets beat 32).
         t0 = time.time()
         bronze = materialize_raw(
             spark, xml_path, bronze_path, table=table, counters=counters

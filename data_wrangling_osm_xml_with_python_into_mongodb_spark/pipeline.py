@@ -41,7 +41,7 @@ def run_pipeline(
     out_dir: str,
     write_json_sink: bool = False,
     ref_docs_cap: int = 100,
-    buckets: int = 32,
+    buckets: int | None = None,
 ) -> PipelineResult:
     """Run the full ETL; returns the three output frames plus counts.
 
@@ -51,6 +51,11 @@ def run_pipeline(
     reference prints these; at scale an auditable table is the
     equivalent), ``ref_docs.parquet`` (capped posting lists), and
     optionally ``documents.json/`` (mongoimport format).
+
+    ``buckets`` is the bronze bucket count, one task per bucket in every
+    stage that reads the bronze.  ``None`` derives it from the input
+    (``materialize_raw``): one bucket per 128 MB of XML, at least one
+    per core, at most ``spark.sql.sources.bucketing.maxBuckets``.
     """
     # Per-out_dir bronze table name: a fixed name would collide across
     # concurrent/successive runs in one catalog (the overwrite would

@@ -597,7 +597,7 @@ def q_wide_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 768 doubles (~6 KB) per candidate cross once, ~10x less
     # transfer.  Measured same-JVM at sf1 (where the transfer
     # dominates): 2.001 s -> 0.675 s min-of-4, 2.96x
-    # (tools/ab_v7_pairship_r19.py); top-k hashes bit-identical at
+    # (OPTIMIZATION_r19.md); top-k hashes bit-identical at
     # sf0.001/0.01/0.1/sf1.  Numeric identity, not just closeness:
     # the kernel runs the SAME einsum signature ("ij,ij->i") over the
     # same float64 rows -- the query side a broadcast_to view, an
@@ -964,8 +964,8 @@ def _kmeans_argmin(v_col: str, cents: list[list[int]]) -> F.Column:
 # K=4096+ a production IVF trains.  The broadcast-centroid assignment
 # (centroids ride as ONE broadcast row holding an array<struct<cid,v>>,
 # argmin is a transform+array_min over it) has a plan O(1) in K with
-# identical per-row work -- and the A/B (tools/ab_kmeans_broadcast.py,
-# PERF.md round-14 addendum) found NO crossover: broadcast wins at
+# identical per-row work -- and the A/B (PERF.md round-14 addendum)
+# found NO crossover: broadcast wins at
 # EVERY measured K (sf0.1 full train tmean, literal vs broadcast:
 # K=8 3.5s vs 1.2s, K=64 23.6s vs 1.3s, K=512 155s vs 2.4s), because
 # the literal plan's K*dim expression nodes cost analyzer/codegen time

@@ -1844,10 +1844,9 @@ class CowTable:
         broadcast to the executors holding the batch, each partition
         tests its keys with per-file early exit (a file one key hits
         stops being tested), and only the O(files) set of hit basenames
-        returns -- the keys never leave the cluster.  Position
-        arithmetic is exact Python-int modular math, bit-identical to
-        the write side.  Files without a sidecar entry are kept; an
-        unhashable key keeps everything."""
+        returns -- the keys never leave the cluster.  The bit test is
+        :func:`_bloom_any_hit`, the driver side's own.  Files without a
+        sidecar entry are kept; an unhashable key keeps everything."""
         entries: dict[str, tuple[bytes, int, int]] = {}
         for f in candidates:
             b = os.path.basename(f)
@@ -1880,22 +1879,18 @@ class CowTable:
                     ):
                         continue
                     try:
-                        h1, h2 = _bloom_hashes(_probe_to_py(raw, tzi))
+                        hashes = [_bloom_hashes(_probe_to_py(raw, tzi))]
                     except TypeError:
                         # unhashable key type: this partition cannot
                         # refute ANY file -- keep them all.
                         hits.update(bc.value)
                         give_up = True
                         break
-                    dead = []
-                    for b, (buf, m, k) in active.items():
-                        for i in range(k):
-                            p = (h1 + i * h2) % m
-                            if not buf[p >> 3] >> (p & 7) & 1:
-                                break
-                        else:
-                            hits.add(b)
-                            dead.append(b)
+                    dead = [
+                        b for b, (buf, m, k) in active.items()
+                        if _bloom_any_hit(buf, m, k, hashes)
+                    ]
+                    hits.update(dead)
                     for b in dead:
                         del active[b]
                     if not active:

@@ -660,6 +660,12 @@ def _parse_slice(
     yield from _expat_batches(feed(), batch_rows)
 
 
+# The split reader's target byte range per task -- the same 128 MB as
+# Spark's own ``spark.sql.files.maxPartitionBytes`` default.
+# :func:`materialize_raw` sizes the bronze bucket count by it too.
+_SPLIT_BYTES = 128 << 20
+
+
 def plan_osm_splits(
     spark: SparkSession, path: str, split_bytes: int
 ) -> list[tuple[str, int, int, int]]:
@@ -721,7 +727,7 @@ def _open_range(path: str):
 def read_osm_elements_split(
     spark: SparkSession,
     path: str,
-    split_bytes: int = 128 << 20,
+    split_bytes: int = _SPLIT_BYTES,
     batch_rows: int = 50_000,
     chunk_bytes: int = 4 << 20,
     tail_bytes: int = 1 << 20,
@@ -763,7 +769,25 @@ def read_osm_elements_split(
     a synthetic ``<osm>`` root, so expat sees a well-formed document;
     slices always cut at ASCII '<', never mid-multibyte-char.
     """
-    splits = plan_osm_splits(spark, path, split_bytes)
+    return _read_splits(
+        spark, path, plan_osm_splits(spark, path, split_bytes),
+        batch_rows=batch_rows, chunk_bytes=chunk_bytes,
+        tail_bytes=tail_bytes, counters=counters,
+    )
+
+
+def _read_splits(
+    spark: SparkSession,
+    path: str,
+    splits: list[tuple[str, int, int, int]],
+    batch_rows: int = 50_000,
+    chunk_bytes: int = 4 << 20,
+    tail_bytes: int = 1 << 20,
+    counters=None,
+) -> DataFrame:
+    """:func:`read_osm_elements_split` over a split plan already built
+    by :func:`plan_osm_splits` (:func:`materialize_raw` also sizes its
+    buckets from that plan, so the input is listed once)."""
     if not splits:
         return spark.createDataFrame([], RAW_ELEMENT_SCHEMA)
     # Layout dispatch: when every planned split covers a whole file
@@ -877,12 +901,22 @@ def _read_whole_files(
     return files.mapInArrow(parse, RAW_ELEMENT_SCHEMA)
 
 
+def _bronze_buckets(
+    xml_bytes: int, split_bytes: int, parallelism: int, max_buckets: int
+) -> int:
+    """The bronze bucket count for ``xml_bytes`` of XML: one bucket per
+    ``split_bytes`` (rounded up) and at least one per core
+    (``parallelism``), capped at ``max_buckets`` -- Spark's own
+    file-split sizing rule with ``defaultParallelism`` as the floor."""
+    return min(max(parallelism, -(-xml_bytes // split_bytes)), max_buckets)
+
+
 def materialize_raw(
     spark: SparkSession,
     xml_path: str,
     out_path: str,
     table: str = "osm_raw_bronze",
-    buckets: int = 32,
+    buckets: int | None = None,
     counters=None,
 ) -> DataFrame:
     """One-time raw-ingest materialization: OSM XML -> bronze parquet
@@ -906,13 +940,31 @@ def materialize_raw(
     write task holds exactly one bucket -> one file per bucket, no
     small-file explosion.
 
+    Bucket count: an explicit ``buckets`` is used as given.  ``None``
+    derives it from the input (:func:`_bronze_buckets`): one bucket per
+    128 MB of XML (the split reader's ``split_bytes``), at least
+    ``sparkContext.defaultParallelism``, at most
+    ``spark.sql.sources.bucketing.maxBuckets``.  Every bucket-wide stage
+    downstream runs one task per bucket, so a small input on few cores
+    gets one wave per stage instead of many near-empty ones (PERF.md,
+    round-10 addendum).  The byte count comes from the reader's own
+    split plan, so sizing costs no extra job.
+
     The parse is :func:`read_osm_elements_split`; ``counters`` passes
     through to it (see :func:`_parse_slice`).  Bucketed metadata lives
     in the session catalog (``saveAsTable``); on a real cluster this is
     the Hive/Unity metastore and the layout amortizes across every
     downstream job.
     """
-    raw = read_osm_elements_split(spark, xml_path, counters=counters)
+    splits = plan_osm_splits(spark, xml_path, _SPLIT_BYTES)
+    if buckets is None:
+        buckets = _bronze_buckets(
+            sum(nbytes for _, _, nbytes, _ in splits),
+            _SPLIT_BYTES,
+            spark.sparkContext.defaultParallelism,
+            int(spark.conf.get("spark.sql.sources.bucketing.maxBuckets")),
+        )
+    raw = _read_splits(spark, xml_path, splits, counters=counters)
     (
         raw.repartition(buckets, "_id")
         .write.mode("overwrite")

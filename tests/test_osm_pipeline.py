@@ -258,13 +258,13 @@ def test_materialize_raw_bronze_roundtrip_and_no_exchange(spark, tmp_path):
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.osm_xml import materialize_raw
 
     bronze = materialize_raw(
-        spark,
-        FIXTURE,
-        str(tmp_path / "bronze"),
-        table="test_bronze",
-        buckets=4,
+        spark, FIXTURE, str(tmp_path / "bronze"), table="test_bronze"
     )
     try:
+        # the derived default: a tiny input gets one bucket per core
+        assert _num_buckets(spark, "test_bronze") == (
+            spark.sparkContext.defaultParallelism
+        )
         key = lambda r: r["_id"]  # noqa: E731
         rows_a = sorted(
             (r.asDict(recursive=True) for r in read_osm_elements(spark, FIXTURE).collect()),
@@ -279,6 +279,69 @@ def test_materialize_raw_bronze_roundtrip_and_no_exchange(spark, tmp_path):
         assert docs.count() == 8
     finally:
         spark.sql("DROP TABLE IF EXISTS test_bronze")
+
+
+def _num_buckets(spark, table: str) -> int:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return int(next(r["data_type"] for r in rows if r["col_name"] == "Num Buckets"))
+
+
+def test_bronze_buckets_rule():
+    """One bucket per split's worth of XML, at least one per core, at
+    most the session's bucket cap."""
+    from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.osm_xml import (
+        _bronze_buckets,
+    )
+
+    split = 128 << 20
+    assert _bronze_buckets(2_400_000, split, 4, 100_000) == 4
+    assert _bronze_buckets(10 * split, split, 4, 100_000) == 10
+    assert _bronze_buckets(10 * split + 1, split, 4, 100_000) == 11
+    assert _bronze_buckets(10 * split, split, 32, 100_000) == 32
+    assert _bronze_buckets(10 * split, split, 4, 6) == 6
+    assert _bronze_buckets(0, split, 4, 100_000) == 4
+
+
+def test_materialize_raw_keeps_explicit_buckets(spark, tmp_path):
+    from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.osm_xml import materialize_raw
+
+    materialize_raw(
+        spark, FIXTURE, str(tmp_path / "bronze"), table="test_bronze_3", buckets=3
+    )
+    try:
+        assert _num_buckets(spark, "test_bronze_3") == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS test_bronze_3")
+
+
+def test_run_pipeline_bucket_count_invariant(spark, tmp_path):
+    """The bronze bucket count is a layout choice only: the derived
+    default and a fixed 32 write the same rows to every sink."""
+    import json as _json
+
+    from data_wrangling_osm_xml_with_python_into_mongodb_spark.pipeline import run_pipeline
+
+    def rows(df):
+        return sorted(
+            (r.asDict(recursive=True) for r in df.collect()),
+            key=lambda d: _json.dumps(d, sort_keys=True, default=str),
+        )
+
+    def json_lines(out):
+        n = 0
+        for f in (out / "documents.json").glob("part-*"):
+            with open(f) as fh:
+                n += sum(1 for ln in fh if ln.strip())
+        return n
+
+    a = run_pipeline(spark, FIXTURE, str(tmp_path / "a"), write_json_sink=True)
+    b = run_pipeline(
+        spark, FIXTURE, str(tmp_path / "b"), write_json_sink=True, buckets=32
+    )
+    for name in ("documents", "quarantine", "ref_docs"):
+        assert rows(getattr(a, name)) == rows(getattr(b, name)), name
+    assert a.counts == b.counts
+    assert json_lines(tmp_path / "a") == json_lines(tmp_path / "b") > 0
 
 
 def test_run_pipeline_end_to_end(spark, tmp_path):
