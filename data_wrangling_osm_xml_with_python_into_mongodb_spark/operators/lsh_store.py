@@ -46,7 +46,6 @@ is signed once, on the ingest that first sees it.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import warnings
@@ -54,7 +53,13 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.cow_table import _BLOOM_BITS_MAX, CowTable, _probe_keys
+from ..sources.cow_table import (
+    _BLOOM_BITS_MAX,
+    CowTable,
+    _probe_keys,
+    _read_json,
+    _write_json,
+)
 
 #: Cumulative document-frequency cap for probe hits -- buckets hotter
 #: than this across ALL ingests carry no near-dup signal (see
@@ -260,26 +265,13 @@ def _load_cal(store_path: str) -> dict | None:
     """The store's deployment-measured prune calibration sidecar, or
     None.  Derived metadata like bloom sidecars: unreadable/absent
     just means the module constants decide."""
-    try:
-        with open(_cal_path(store_path)) as f:
-            cal = json.load(f)
-        return cal if isinstance(cal, dict) else None
-    except (OSError, ValueError):
-        return None
+    cal = _read_json(_cal_path(store_path))
+    return cal if isinstance(cal, dict) else None
 
 
 def _write_cal(store_path: str, cal: dict) -> None:
-    """Atomic write (tmp + rename), same protocol as every sidecar."""
-    import uuid
-
-    log_dir = os.path.join(store_path, "_log")
-    os.makedirs(log_dir, exist_ok=True)
-    tmp = os.path.join(log_dir, f"_tmp_cal_{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(cal, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _cal_path(store_path))
+    """Durable write through the one writer of every log file."""
+    _write_json(_cal_path(store_path), cal)
 
 
 def _snapshot_rows(doc: dict) -> int:

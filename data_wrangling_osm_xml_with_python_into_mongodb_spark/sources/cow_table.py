@@ -57,9 +57,12 @@ so the engine's upsert path runs end-to-end in any environment:
   ``update_preimage`` / ``update_postimage`` / ``delete``) in
   commit-referenced change files, so incremental consumers tail
   O(changes) per poll instead of diffing snapshots;
-* :meth:`vacuum` deletes files no retained snapshot references (the
-  ``VACUUM`` analogue), with a grace window shielding in-flight
-  writers' not-yet-committed files; commit metadata is never
+* :meth:`vacuum` is the ``VACUUM`` analogue, one rule over every file
+  class it owns (data and change files, staging dirs, bloom and DV
+  sidecars, ``_tmp_*`` leftovers): keep what a retained commit
+  references, delete now what only expired commits reference, delete
+  anything else once it is past a grace window that shields in-flight
+  writers' not-yet-committed files.  Commit metadata is never
   rewritten, so history stays auditable past the horizon.
 
 File skipping: one planner, :meth:`CowTable._candidate_files`, picks
@@ -82,7 +85,10 @@ commit doc's ``files_probed``/``bloom_probe`` (mutations) and the
 store's ``last_probe``.  Skipping is never a semantics change: kept
 files are re-filtered exactly.
 
-On-disk format: every commit doc is written by :meth:`CowTable._commit`
+On-disk format: every log file (commit doc, checkpoint manifest,
+sidecar) is written by :func:`_write_json` -- a fsynced ``_tmp_*``
+sibling, then renamed or, for a commit, hard-linked into place.  Every
+commit doc is written by :meth:`CowTable._commit`
 and carries ``format_version`` (:data:`FORMAT_VERSION`), the snapshot's
 ``files``, their footer ``file_stats``, the table ``schema`` and the
 cumulative per-app ``txn`` high-water map, so any one doc answers
@@ -106,6 +112,7 @@ import itertools
 import json
 import os
 import re as _re
+import shutil
 import threading
 import time
 import uuid
@@ -206,7 +213,7 @@ _MERGE_BROADCAST_MAX_KEYS = 1_000_000
 _MERGE_BROADCAST_MAX_BYTES = 64 << 20
 
 # A checkpoint manifest is written every this-many commits (Delta's
-# _last_checkpoint analogue), bounding vacuum's ever-referenced walk
+# checkpoint analogue), bounding vacuum's ever-referenced walk
 # to O(interval) commit reads instead of O(versions).  At one commit
 # per streaming micro-batch a table accrues versions forever; every
 # other metadata question is one commit-doc read.
@@ -601,9 +608,8 @@ class _BloomIndex:
             with _BLOOM_BUF_CACHE_LOCK:
                 out = _BLOOM_BUF_CACHE.get(ck)
             if out is None:
+                e = _read_json(os.path.join(self._log_dir, name)) or {}
                 try:
-                    with open(os.path.join(self._log_dir, name)) as f:
-                        e = json.load(f)
                     if e.get("col") in (None, self.col):
                         m, k = int(e["m"]), int(e["k"])
                         out = (_bloom_buf(e["h"], m), m, k)
@@ -987,6 +993,70 @@ def _checkpoint_path(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"{version:08d}.checkpoint.json")
 
 
+def _write_json(path: str, obj, exclusive: bool = False) -> None:
+    """THE durable writer of every log file: a fsynced ``_tmp_*`` sibling
+    renamed over ``path`` (readers see the old or the new file, never a
+    splice) or, with ``exclusive``, hard-linked to it: create-or-EEXIST,
+    so a racing writer gets :class:`FileExistsError` (the commit race).
+    Only a killed writer leaves its tmp file, for vacuum to remove."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f"_tmp_{uuid.uuid4().hex}")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+            f.flush()
+            os.fsync(f.fileno())
+        (os.link if exclusive else os.replace)(tmp, path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+
+
+def _read_json(path: str):
+    """A log file's parsed JSON; None when it is absent or unreadable
+    (derived metadata: a lost sidecar or checkpoint only costs work)."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def _ls(d: str) -> list[str]:
+    """Full paths of ``d``'s entries, sorted; [] when ``d`` is absent."""
+    try:
+        return [os.path.join(d, n) for n in sorted(os.listdir(d))]
+    except FileNotFoundError:
+        return []
+
+
+def _sweep(
+    paths, keep: set, expired, grace_s: float, now: float
+) -> tuple[list[str], int]:
+    """THE retention rule of :meth:`CowTable.vacuum`: a path in ``keep``
+    stays; one ``expired(path)`` holds for is deleted now; any other is
+    deleted once its mtime is ``grace_s`` old.  Returns ``(deleted
+    paths, count kept by the grace window)``; a path that vanishes
+    meanwhile counts as neither."""
+    deleted, in_grace = [], 0
+    for p in paths:
+        if p in keep:
+            continue
+        try:
+            if not expired(p) and now - os.path.getmtime(p) < grace_s:
+                in_grace += 1
+                continue
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.unlink(p)
+        except FileNotFoundError:
+            continue
+        deleted.append(p)
+    return deleted, in_grace
+
+
 class CowTable:
     def __init__(
         self,
@@ -1057,31 +1127,23 @@ class CowTable:
         rows_hint: dict | None = None,
     ) -> dict:
         """Compute a bloom filter per NEW data file and write each as
-        its OWN sidecar ``{version}-{token}.bf.json`` (atomic tmp +
-        rename, written before the commit link like every sidecar).
+        its OWN sidecar ``{version}-{token}.bf.json`` before the commit
+        link, like every sidecar.
         Returns {basename: sidecar name} for the commit doc.
 
         This is the structure that keeps bloom maintenance O(delta) at
         100 TB: a commit writes only the new files' filters, and probes
         load them per candidate, never the whole index.
-        Same driver/executor split as :meth:`_harvest_file_stats`
-        (column-pruned read; large commits fan out, and the WRITE
-        happens executor-side too, so neither compute nor filter bytes
-        ever funnel through the driver)."""
+        Large commits fan out (:meth:`_map_files`), the column-pruned
+        read and the WRITE alike, so no filter byte funnels through the
+        driver."""
         col = conf["col"]
         log_dir = _log_dir(self.path)
-        os.makedirs(log_dir, exist_ok=True)
 
         def build_one(path: str) -> tuple[str, str]:
-            entry = _file_bloom(path, col, conf)
-            entry["col"] = col
             name = f"{version:08d}-{uuid.uuid4().hex[:8]}.bf.json"
-            tmp = os.path.join(log_dir, f"_tmp_bf_{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(log_dir, name))
+            entry = {**_file_bloom(path, col, conf), "col": col}
+            _write_json(os.path.join(log_dir, name), entry)
             return os.path.basename(path), name
 
         total_bytes = 0
@@ -1107,19 +1169,16 @@ class CowTable:
             ]
             if all(r is not None for r in known):
                 total_rows = sum(int(r) for r in known)
-        if (
+        return self._map_files(
+            build_one,
+            files,
             len(files) <= _DRIVER_STATS_MAX
             and total_bytes <= _BLOOM_BUILD_DRIVER_MAX_BYTES
             and (
                 total_rows is None
                 or total_rows <= _BLOOM_BUILD_DRIVER_MAX_ROWS
-            )
-        ):
-            return dict(build_one(f) for f in files)
-        sc = self.spark.sparkContext
-        slices = min(len(files), sc.defaultParallelism)
-        pairs = sc.parallelize(sorted(files), slices).map(build_one).collect()
-        return dict(pairs)
+            ),
+        )
 
     def _maintain_bloom(
         self, version: int, files: list[str], stats: dict, pdoc: dict
@@ -1166,13 +1225,8 @@ class CowTable:
         CREATED dead rows always links its sidecar before the commit
         itself (same write order as blooms/checkpoints)."""
         name = doc.get("dv_sidecar")
-        if not name:
-            return None
-        try:
-            with open(os.path.join(_log_dir(self.path), name)) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        if name:
+            return _read_json(os.path.join(_log_dir(self.path), name))
 
     def _dv_map(self, doc: dict) -> dict:
         """basename -> sidecar entry of every file with dead rows in
@@ -1246,13 +1300,8 @@ class CowTable:
             # by pointer, like blooms on an unchanged file set.
             return {**stats, "dv_sidecar": pdoc["dv_sidecar"]}
         name = f"{version:08d}-{uuid.uuid4().hex[:8]}.dv.json"
-        os.makedirs(_log_dir(self.path), exist_ok=True)
-        tmp = os.path.join(_log_dir(self.path), f"_tmp_dv_{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"files": filemap}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(_log_dir(self.path), name))
+        path = os.path.join(_log_dir(self.path), name)
+        _write_json(path, {"files": filemap})
         return {**stats, "dv_sidecar": name}
 
     def _commit(self, version: int, files: list[str], op: str, stats: dict) -> dict:
@@ -1295,22 +1344,14 @@ class CowTable:
             **stats,
             "txn": txn,
         }
-        os.makedirs(_log_dir(self.path), exist_ok=True)
-        tmp = os.path.join(_log_dir(self.path), f"_tmp_{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            # Atomic fail-if-exists: rename() would silently overwrite a
-            # racing writer's commit; link() is create-or-EEXIST.
-            os.link(tmp, _commit_path(self.path, version))
+            # Atomic fail-if-exists: a rename would silently overwrite a
+            # racing writer's commit.
+            _write_json(_commit_path(self.path, version), doc, exclusive=True)
         except FileExistsError as e:
             raise ConcurrentWriteError(
                 f"version {version} of {self.path} was committed concurrently"
             ) from e
-        finally:
-            os.unlink(tmp)
         # Auto-checkpoint every N commits.  Best-effort by design: the
         # commit IS durable at this point, and a checkpoint is pure
         # derived metadata any later writer can regenerate -- a failure
@@ -1320,85 +1361,60 @@ class CowTable:
             and version > 0
             and version % self.checkpoint_interval == 0
         ):
-            try:
+            with contextlib.suppress(Exception):
                 self.checkpoint(version)
-            except Exception:
-                pass
         return doc
 
-    # -- checkpoints (Delta's _last_checkpoint analogue) ---------------
+    # -- checkpoints (Delta's checkpoint analogue) --------------------
+
+    def _checkpoint_versions(self) -> list[int]:
+        """Versions of the checkpoint manifests in ``_log/``, ascending."""
+        names = map(os.path.basename, _ls(_log_dir(self.path)))
+        ck = ".checkpoint.json"
+        return sorted(int(n[:8]) for n in names if n.endswith(ck))
 
     def _read_last_checkpoint(self) -> dict | None:
-        """Latest checkpoint manifest, or None.  The ``_last_checkpoint``
-        pointer is advisory (last-writer-wins rename); a stale or
-        corrupt pointer falls back to scanning the log dir for
-        checkpoint files, and no checkpoint at all just means full
-        walks -- checkpoints are an optimization, never load-bearing
-        for correctness."""
-        ld = _log_dir(self.path)
-        try:
-            with open(os.path.join(ld, "_last_checkpoint")) as f:
-                v = int(json.load(f)["version"])
-            with open(_checkpoint_path(self.path, v)) as f:
-                return json.load(f)
-        except (OSError, ValueError, KeyError):
-            pass
-        try:
-            vs = [
-                int(n[:8])
-                for n in os.listdir(ld)
-                if n.endswith(".checkpoint.json")
-            ]
-        except FileNotFoundError:
-            return None
-        if not vs:
-            return None
-        try:
-            with open(_checkpoint_path(self.path, max(vs))) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        """The newest checkpoint manifest, found by listing ``_log/`` the
+        way :meth:`version` finds the head; None when there is none or it
+        is unreadable.  Checkpoints are an optimization, never
+        load-bearing for correctness: without one, walks are full."""
+        vs = self._checkpoint_versions()
+        return _read_json(_checkpoint_path(self.path, vs[-1])) if vs else None
+
+    def _ever_referenced(self, ck: dict | None, version: int) -> set[str]:
+        """Every data file any commit up to ``version`` referenced: the
+        checkpoint ``ck``'s ``all_files`` (unless past ``version``) plus
+        the commits after it -- O(interval) commit reads, not
+        O(versions), on a table accruing a commit per micro-batch."""
+        start, ever = 0, set()
+        if ck is not None and ck["version"] <= version:
+            start, ever = ck["version"] + 1, set(ck["all_files"])
+        for v in range(start, version + 1):
+            ever.update(self._commit_doc(v)["files"])
+        return ever
+
+    def _write_checkpoint(self, version: int, all_files) -> dict:
+        """Write the checkpoint manifest of ``version``.  Racing writers
+        of one version (vacuum rewrites the head's pruned) are safe: each
+        variant is valid, differing only by files all agree are deleted,
+        and :func:`_write_json` swaps whole files."""
+        ck = {"version": version, "all_files": sorted(all_files)}
+        _write_json(_checkpoint_path(self.path, version), ck)
+        return ck
 
     def checkpoint(self, version: int | None = None) -> dict:
         """Write a checkpoint manifest at ``version`` (default: head):
         ``all_files``, every data file ANY commit up to ``version`` ever
-        referenced -- what vacuum needs.  Built incrementally from the
-        previous checkpoint plus the commits after it, so writing one
-        costs O(interval) metadata reads and vacuum's ever-referenced
-        walk drops from O(versions) to O(interval).  Commit docs are
-        never rewritten -- history stays auditable; the checkpoint is
-        derived metadata."""
+        referenced -- what vacuum needs -- built by
+        :meth:`_ever_referenced` in O(interval) metadata reads.  Commit
+        docs are never rewritten; the checkpoint is derived metadata."""
         v = self.version() if version is None else version
         if v < 0:
             raise FileNotFoundError(f"no CowTable at {self.path}")
         prev = self._read_last_checkpoint()
         if prev is not None and prev["version"] >= v:
-            return prev  # never regress the pointer
-        start = prev["version"] + 1 if prev is not None else 0
-        all_files = set(prev["all_files"]) if prev is not None else set()
-        for cv in range(start, v + 1):
-            all_files.update(self._commit_doc(cv)["files"])
-        ck = {"version": v, "all_files": sorted(all_files)}
-        tmp = os.path.join(_log_dir(self.path), f"_tmp_ck_{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(ck, f)
-            f.flush()
-            os.fsync(f.fileno())
-        # Atomic-replace safety does NOT rest on byte determinism (vacuum
-        # later rewrites the same version's file with a pruned
-        # all_files): it rests on every racing writer of this version
-        # producing a semantically valid manifest for it -- all_files
-        # differing only by files every variant agrees are deleted -- and
-        # os.replace swapping whole files atomically, so readers see one
-        # valid variant, never a splice.
-        os.replace(tmp, _checkpoint_path(self.path, v))
-        tmp2 = os.path.join(_log_dir(self.path), f"_tmp_lc_{uuid.uuid4().hex}")
-        with open(tmp2, "w") as f:
-            json.dump({"version": v}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp2, os.path.join(_log_dir(self.path), "_last_checkpoint"))
-        return ck
+            return prev  # never regress the newest checkpoint
+        return self._write_checkpoint(v, self._ever_referenced(prev, v))
 
     def txn_version(self, app_id: str) -> int:
         """Largest batch/txn id committed for ``app_id``; -1 if none.
@@ -1445,8 +1461,6 @@ class CowTable:
         Returns ``(data files, their stats, change files, dirs
         written)`` -- the dirs so a refused commit removes exactly what
         it wrote."""
-        import shutil
-
         token = uuid.uuid4().hex[:8]
         out = os.path.join(self.path, "data", f"v{version}-{token}")
         chg = os.path.join(self.path, "changes", f"v{version}-{token}")
@@ -1534,16 +1548,22 @@ class CowTable:
         scheduling overhead and read the footers in-process; both
         paths run the same :func:`_file_footer_stats` (pinned equal
         by pytest)."""
-        if len(files) <= _DRIVER_STATS_MAX:
-            return {os.path.basename(f): _file_footer_stats(f) for f in files}
+        return self._map_files(
+            lambda f: (os.path.basename(f), _file_footer_stats(f)),
+            files,
+            len(files) <= _DRIVER_STATS_MAX,
+        )
+
+    def _map_files(self, fn, files: list[str], on_driver: bool) -> dict:
+        """``dict(map(fn, files))`` for a per-file ``fn`` returning a
+        ``(key, value)`` pair: in-process when ``on_driver`` (each caller
+        keeps its own gate), else one executor-side Spark job over the
+        sorted file list, a slice per core."""
+        if on_driver:
+            return dict(map(fn, files))
         sc = self.spark.sparkContext
         slices = min(len(files), sc.defaultParallelism)
-        pairs = (
-            sc.parallelize(sorted(files), slices)
-            .map(lambda f: (os.path.basename(f), _file_footer_stats(f)))
-            .collect()
-        )
-        return dict(pairs)
+        return dict(sc.parallelize(sorted(files), slices).map(fn).collect())
 
     # -- operations --------------------------------------------------
 
@@ -2073,7 +2093,7 @@ class CowTable:
     def vacuum(
         self, retain_last: int = 1, orphan_grace_s: float = 86400.0
     ) -> dict:
-        """``VACUUM`` analogue: physically delete data files no retained
+        """``VACUUM`` analogue: physically delete the files no retained
         snapshot references.  The last ``retain_last`` versions stay
         fully readable; older versions keep their commit METADATA (the
         log is never rewritten -- history/audit survives) but their
@@ -2092,242 +2112,102 @@ class CowTable:
         ``retain_last`` to cover the longest-running reader, exactly
         Delta's retention guidance.
 
-        Two file classes are deleted:
-
-        * files referenced only by expired commits -- deleted
-          immediately (new commits can only carry files forward from
-          the latest snapshot, so nothing can re-reference them);
-        * files referenced by NO commit (the orphaned output of a
-          writer that lost the optimistic-concurrency race, or of one
-          still mid-write) -- deleted only when older than
-          ``orphan_grace_s``, Delta's retention-window defence against
-          vacuuming an in-flight writer's files out from under it.
-
-        Only ``*.parquet`` files are touched; a version dir whose
-        parquets are all gone is removed wholesale (taking Spark's
-        ``_SUCCESS``/``.crc`` sidecars with it).  Nothing is committed
-        to the log; returns a summary dict."""
-        import shutil
-
+        One rule (:func:`_sweep`) covers the ``*.parquet`` files under
+        ``data/`` and ``changes/``, the dirs under ``_stage/``, and the
+        bloom (``*.bf.json``) and DV (``*.dv.json``) sidecars and
+        ``_tmp_*`` leftovers in ``_log/``: keep what a retained commit
+        references; delete now what only expired commits reference
+        (data files some commit listed, change files below the retained
+        floor: new commits only carry files forward from the head);
+        delete anything else -- a losing racer's or in-flight writer's
+        output -- once older than ``orphan_grace_s`` (Delta's retention
+        window).  A version dir left without parquet files goes
+        wholesale; checkpoints below the newest one at or under the
+        floor are expired; no other ``_log/`` name (commit docs,
+        operators/lsh_store's ``prune_cal.json``) is touched.  Nothing
+        is committed; returns a summary dict."""
         latest = self.version()
         if latest < 0:
             raise FileNotFoundError(f"no CowTable at {self.path}")
         lo = max(0, latest - retain_last + 1)
-        retained: set[str] = set()
+        ld = _log_dir(self.path)
+        keep: set[str] = set()
         for v in range(lo, latest + 1):
-            retained.update(os.path.abspath(f) for f in self.files(v))
-        # Ever-referenced set, checkpoint-anchored: the manifest's
-        # ``all_files`` summarizes every commit at or below it, so this
-        # walk reads O(interval) commit docs, not O(versions) -- the
-        # difference between a bounded maintenance op and one that
-        # creeps linearly on a stream-maintained table accruing commits
-        # per micro-batch forever.
+            doc = self._commit_doc(v)
+            refs = doc["files"] + (doc.get("change_files") or [])
+            keep.update(map(os.path.abspath, refs))
+            side = (doc.get("bloom_files") or {}).values()
+            keep.update(os.path.join(ld, n) for n in side)
+            if doc.get("dv_sidecar"):
+                keep.add(os.path.join(ld, doc["dv_sidecar"]))
         ck = self._read_last_checkpoint()
-        ever: set[str] = set()
-        start = 0
-        if ck is not None and ck["version"] <= latest:
-            ever.update(os.path.abspath(f) for f in ck["all_files"])
-            start = ck["version"] + 1
-        for v in range(start, latest + 1):
-            ever.update(
-                os.path.abspath(f) for f in self._commit_doc(v)["files"]
-            )
-        data_root = os.path.join(self.path, "data")
+        ever = self._ever_referenced(ck, latest)
+        ever_abs = set(map(os.path.abspath, ever))
         now = time.time()
-        deleted = orphans_kept = 0
-        deleted_paths: set[str] = set()
-        for d in sorted(os.listdir(data_root)):
-            vdir = os.path.join(data_root, d)
-            if not os.path.isdir(vdir):
-                continue
-            live = 0
-            for n in os.listdir(vdir):
-                if not n.endswith(".parquet"):
-                    continue
-                f = os.path.abspath(os.path.join(vdir, n))
-                if f in retained:
-                    live += 1
-                    continue
-                if f not in ever:
-                    try:
-                        age = now - os.path.getmtime(f)
-                    except FileNotFoundError:
-                        continue
-                    if age < orphan_grace_s:
-                        orphans_kept += 1
-                        live += 1
-                        continue
-                try:
-                    os.unlink(f)
-                    deleted += 1
-                    deleted_paths.add(f)
-                except FileNotFoundError:
-                    pass
-            if live == 0:
-                shutil.rmtree(vdir, ignore_errors=True)
-        # Prune just-deleted files out of the head checkpoint's
-        # ``all_files`` -- otherwise the manifest grows O(files ever)
-        # as a maintained table ages, the one remaining unbounded
-        # metadata series.  Safe by monotonicity: a STALE (superset)
-        # all_files is always harmless (entries for absent files are
-        # never reached -- the deletion loop iterates disk files), and
-        # pruning only removes files that no longer exist; later
-        # checkpoints build from the pruned list, so the bound is
-        # O(live + since-last-vacuum) by induction.  Best-effort like
-        # every checkpoint write.
-        try:
-            ck = self.checkpoint(latest)
-            if deleted_paths:
-                pruned = [
-                    f
-                    for f in ck["all_files"]
-                    if os.path.abspath(f) not in deleted_paths
-                ]
-                if len(pruned) < len(ck["all_files"]):
-                    ck2 = {**ck, "all_files": pruned}
-                    tmp = os.path.join(
-                        _log_dir(self.path), f"_tmp_ck_{uuid.uuid4().hex}"
-                    )
-                    with open(tmp, "w") as fh:
-                        json.dump(ck2, fh)
-                        fh.flush()
-                        os.fsync(fh.fileno())
-                    os.replace(
-                        tmp, _checkpoint_path(self.path, ck["version"])
-                    )
-        except Exception:
-            pass
-        # Checkpoint-file GC (Delta keeps the last N checkpoints; a
-        # maintained table otherwise accrues one NNNNNNNN.checkpoint
-        # .json per interval FOREVER -- the last unbounded metadata
-        # file series).  Retention anchor: the newest checkpoint
-        # at-or-below the retained-snapshot floor ``lo``; everything
-        # strictly below it goes.  Checkpoints are an optimization of
-        # vacuum's own walk, never load-bearing for correctness.
-        # Best-effort like every metadata-plane op.
-        ckpts_deleted = 0
-        try:
-            ld = _log_dir(self.path)
-            cks = sorted(
-                int(n[:8])
-                for n in os.listdir(ld)
-                if n.endswith(".checkpoint.json")
-            )
-            anchors = [v for v in cks if v <= lo]
-            if anchors:
-                anchor = max(anchors)
-                for v in cks:
-                    if v < anchor:
-                        try:
-                            os.unlink(_checkpoint_path(self.path, v))
-                            ckpts_deleted += 1
-                        except FileNotFoundError:
-                            pass
-        except Exception:
-            pass
-        # Change-feed GC: change files are referenced only by their own
-        # commit, so the keep rule is simply "referenced by a RETAINED
-        # commit"; an expired commit's change files delete immediately
-        # (its snapshot is already unreadable), and unreferenced files
-        # at retained versions (losing racers / in-flight writers) get
-        # the same grace window as orphaned data files.
-        changes_deleted = 0
-        chg_root = os.path.join(self.path, "changes")
-        if os.path.isdir(chg_root):
-            ref_chg = set()
-            for v in range(lo, latest + 1):
-                for f in self._commit_doc(v).get("change_files", []) or []:
-                    ref_chg.add(os.path.abspath(f))
-            for d in sorted(os.listdir(chg_root)):
-                vdir = os.path.join(chg_root, d)
-                if not os.path.isdir(vdir):
-                    continue
-                m = _re.match(r"v(\d+)-", d)
-                dir_v = int(m.group(1)) if m else -1
-                live = 0
-                for n in os.listdir(vdir):
-                    if not n.endswith(".parquet"):
-                        continue
-                    f = os.path.abspath(os.path.join(vdir, n))
-                    if f in ref_chg:
-                        live += 1
-                        continue
-                    if dir_v >= lo:
-                        try:
-                            if now - os.path.getmtime(f) < orphan_grace_s:
-                                live += 1
-                                continue
-                        except FileNotFoundError:
-                            continue
-                    try:
-                        os.unlink(f)
-                        changes_deleted += 1
-                    except FileNotFoundError:
-                        pass
-                if live == 0:
-                    shutil.rmtree(vdir, ignore_errors=True)
-        # Staging GC: _write_data_files renames a change-feed write's
-        # output out of <path>/_stage/ before committing, so any
-        # dir still there belongs to a dead or in-flight writer --
-        # remove it once past the same grace window that shields
-        # in-flight data files.  Committed files are never under
-        # _stage/, so this can only ever delete never-referenced
-        # output.
-        stage_root = os.path.join(self.path, "_stage")
-        if os.path.isdir(stage_root):
-            for d in sorted(os.listdir(stage_root)):
-                sdir = os.path.join(stage_root, d)
-                try:
-                    if now - os.path.getmtime(sdir) >= orphan_grace_s:
-                        shutil.rmtree(sdir, ignore_errors=True)
-                except FileNotFoundError:
-                    continue
-        # Bloom- and deletion-vector-sidecar GC: keep every sidecar a
-        # RETAINED commit references (a no-new-files commit points at
-        # its parent's, so the referenced set, not version arithmetic,
-        # is the keep rule); everything else is either a losing
-        # racer's orphan or an expired snapshot's index -- derived
-        # metadata, deleted once past the same grace window that
-        # shields an in-flight writer's just-written sidecar whose
-        # commit has not linked yet.  Best-effort like every
-        # metadata-plane op.
-        blooms_deleted = dvs_deleted = 0
-        try:
-            ld = _log_dir(self.path)
-            keep = set()
-            for v in range(lo, latest + 1):
-                doc = self._commit_doc(v)
-                keep.add(doc.get("dv_sidecar"))
-                keep.update((doc.get("bloom_files") or {}).values())
-            for n in os.listdir(ld):
-                is_bloom = n.endswith(".bf.json")
-                is_dv = n.endswith(".dv.json")
-                if not (is_bloom or is_dv) or n in keep:
-                    continue
-                p = os.path.join(ld, n)
-                try:
-                    if now - os.path.getmtime(p) < orphan_grace_s:
-                        continue
-                    os.unlink(p)
-                    if is_bloom:
-                        blooms_deleted += 1
-                    else:
-                        dvs_deleted += 1
-                except FileNotFoundError:
-                    pass
-        except Exception:
-            pass
+
+        def sweep(paths, expired=lambda p: False):
+            return _sweep(paths, keep, expired, orphan_grace_s, now)
+
+        def sweep_tree(root, expired):
+            vdirs = list(filter(os.path.isdir, _ls(root)))
+            files = [f for d in vdirs for f in _ls(d) if f.endswith(".parquet")]
+            out = sweep(files, expired)
+            for d in vdirs:
+                if not any(f.endswith(".parquet") for f in _ls(d)):
+                    shutil.rmtree(d, ignore_errors=True)
+            return out
+
+        def below_floor(f: str) -> bool:  # its dir names its version
+            m = _re.match(r"v(\d+)-", os.path.basename(os.path.dirname(f)))
+            return (int(m.group(1)) if m else -1) < lo
+
+        data, changes, stage = (
+            os.path.join(self.path, d) for d in ("data", "changes", "_stage")
+        )
+        deleted, orphans_kept = sweep_tree(data, lambda f: f in ever_abs)
+        changes_deleted = sweep_tree(changes, below_floor)[0]
+        sweep(_ls(stage))
+        ckpts_deleted = blooms_deleted = dvs_deleted = 0
+        # Rewrite the head checkpoint without the data files just
+        # deleted -- otherwise ``all_files`` grows O(files ever) as a
+        # maintained table ages.  Safe by monotonicity: a STALE
+        # (superset) all_files is always harmless (the sweep iterates
+        # disk files), and pruning only removes files that no longer
+        # exist; later checkpoints build from the pruned list, so the
+        # bound is O(live + since-last-vacuum) by induction.  Then the
+        # checkpoint-file GC (Delta keeps the last N): the newest
+        # checkpoint at or below ``lo`` anchors every retained-window
+        # walk, so everything strictly below it is expired.  Both are
+        # best-effort like every metadata-plane op.
+        with contextlib.suppress(Exception):
+            gone = ever_abs.intersection(deleted)
+            if gone or ck is None or ck["version"] < latest:
+                self._write_checkpoint(
+                    latest, [f for f in ever if os.path.abspath(f) not in gone]
+                )
+        with contextlib.suppress(Exception):
+            cks = self._checkpoint_versions()
+            anchor = max((v for v in cks if v <= lo), default=-1)
+            old = [_checkpoint_path(self.path, v) for v in cks if v < anchor]
+            ckpts_deleted = len(sweep(old, lambda p: True)[0])
+        with contextlib.suppress(Exception):
+            logs = sweep(
+                p for p in _ls(ld)
+                if p.endswith((".bf.json", ".dv.json"))
+                or os.path.basename(p).startswith("_tmp_")
+            )[0]
+            blooms_deleted = sum(p.endswith(".bf.json") for p in logs)
+            dvs_deleted = sum(p.endswith(".dv.json") for p in logs)
         return {
             "op": "vacuum",
             "retained_versions": [lo, latest],
-            "files_deleted": deleted,
+            "files_deleted": len(deleted),
             "orphans_in_grace": orphans_kept,
             "checkpoints_deleted": ckpts_deleted,
             "blooms_deleted": blooms_deleted,
             "dvs_deleted": dvs_deleted,
-            "changes_deleted": changes_deleted,
+            "changes_deleted": len(changes_deleted),
         }
-
 
     def merge(
         self,
@@ -2912,8 +2792,6 @@ class CowTable:
         overlap and :class:`ConcurrentMergeConflictError` is raised;
         otherwise the plain retryable :class:`ConcurrentWriteError`
         (the retry recomputes everything from the new head)."""
-        import shutil
-
         try:
             return self._commit(base_doc["version"] + 1, files, op, stats)
         except (ConcurrentWriteError, ValueError) as exc:

@@ -18,6 +18,10 @@ After every step:
   per-version diff, or raises the documented error (a mutation commit
   on a feed-less table, or :class:`ChangesVacuumedError` for a range
   ``vacuum`` reached);
+* after a ``vacuum(orphan_grace_s=0)`` (a rule, and the last step of
+  every sequence), no file outside the log is left: every parquet and
+  sidecar on disk is referenced by a retained commit, ``_stage/`` is
+  empty and no ``_tmp_*`` file remains;
 * the session holds no persistent RDD it did not hold before the
   sequence started (no leaked pins; RDDs other tests left behind may
   be released meanwhile by Spark's cleaner).
@@ -172,6 +176,7 @@ class CowTableMachine(RuleBasedStateMachine):
     def vacuum(self, retain):
         self.t.vacuum(retain_last=retain, orphan_grace_s=0)
         self.floor = max(self.floor, self.head - retain + 1)
+        self._check_swept(max(0, self.head - retain + 1))
 
     @rule(data=st.data())
     def read_version(self, data):
@@ -185,7 +190,37 @@ class CowTableMachine(RuleBasedStateMachine):
             data.draw(st.integers(min_value=0, max_value=self.head))
         )
 
+    def teardown(self):
+        # The fixed seeds below never draw the vacuum rule, so every
+        # sequence ends with one: the swept layout and the reads after
+        # it are checked at least once per example.
+        self.vacuum(1)
+        self.agrees_with_model()
+
     # -- checks ---------------------------------------------------------
+
+    def _check_swept(self, lo: int):
+        """After ``vacuum(orphan_grace_s=0)`` with retained floor ``lo``
+        no file outside the log is left: every parquet under ``data/``
+        and ``changes/`` and every bloom or DV sidecar is referenced by
+        a commit in ``[lo, head]``, ``_stage/`` is empty or absent, and
+        no ``_tmp_*`` file remains.  Directory listings only."""
+        ld = os.path.join(self.t.path, "_log")
+        refs = set()
+        for v in range(lo, self.head + 1):
+            doc = self.t._commit_doc(v)
+            refs.update(doc["files"], doc.get("change_files") or [])
+            side = [doc.get("dv_sidecar"), *(doc.get("bloom_files") or {}).values()]
+            refs.update(os.path.join(ld, n) for n in side if n)
+        refs = set(map(os.path.abspath, refs))
+        swept = (".parquet", ".bf.json", ".dv.json")
+        for root, _, names in os.walk(self.t.path):
+            for n in names:
+                p = os.path.abspath(os.path.join(root, n))
+                assert not n.startswith("_tmp_"), p
+                assert not n.endswith(swept) or p in refs, p
+        stage = os.path.join(self.t.path, "_stage")
+        assert not os.path.isdir(stage) or not os.listdir(stage)
 
     def _check_changes(self, lo: int):
         """``read_changes(lo)`` against the model.  A range holding a

@@ -306,6 +306,29 @@ def test_vacuum_orphan_grace(spark, table, tmp_path):
     assert table.read().count() == 40
 
 
+def test_vacuum_removes_tmp_leftovers(table):
+    """A log writer killed between writing its ``_tmp_*`` file and the
+    rename or link leaves that file in ``_log/``: vacuum removes it
+    once past the grace window, and leaves every other name alone --
+    the dedup store's ``prune_cal.json`` in the same directory too."""
+    ld = os.path.join(table.path, "_log")
+    old = [os.path.join(ld, n) for n in ("_tmp_" + "a" * 32, "_tmp_bf_" + "b" * 32)]
+    fresh = os.path.join(ld, "_tmp_" + "c" * 32)
+    cal = os.path.join(ld, "prune_cal.json")
+    for p in old + [fresh, cal]:
+        with open(p, "w") as f:
+            f.write("{}")
+    for p in old + [cal]:
+        os.utime(p, (1, 1))
+    table.vacuum(retain_last=1, orphan_grace_s=3600.0)
+    assert not any(map(os.path.exists, old))
+    assert os.path.exists(fresh)  # in grace
+    assert os.path.exists(cal)  # never swept
+    table.vacuum(retain_last=1, orphan_grace_s=0.0)
+    assert not os.path.exists(fresh) and os.path.exists(cal)
+    assert table.read().count() == 40
+
+
 def test_compact_cluster_by_enables_skipping(spark, tmp_path):
     """OPTIMIZE-with-clustering: a hash-fragmented layout (every file
     spans the whole key range -> skipping useless) compacts into
