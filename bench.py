@@ -508,7 +508,6 @@ def _incr_maintenance_stats(spark, n_ways: int = 400_000) -> dict:
 
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.operators.shape import (
         apply_ref_docs_delta,
-        apply_ref_docs_delta_capped,
         build_ref_docs,
     )
 
@@ -573,8 +572,8 @@ def _incr_maintenance_stats(spark, n_ways: int = 400_000) -> dict:
             ("rebuild_capped",
              lambda: build_ref_docs(after, cap=100).count()),
             ("delta_capped",
-             lambda: apply_ref_docs_delta_capped(
-                 idxc, ins, dele, after, cap=100
+             lambda: apply_ref_docs_delta(
+                 idxc, ins, dele, cap=100, corpus_after=after
              ).count()),
         ]:
             w, inp = best(fn)

@@ -570,7 +570,8 @@ def q_ref_docs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only files containing touched refs are rewritten, untouched "
     "files carry into the new snapshot by reference, and emptied "
     "postings are removed via whenMatchedDelete semantics.  Closes "
-    "the O(index) output cost the full-output maintainers keep.  "
+    "the O(index) output cost of the full-output form "
+    "(apply_ref_docs_delta).  "
     "Oracle: reading the post-merge table must equal a full rebuild "
     "over (base - deletes) + inserts.",
     _M9_ORACLE,
@@ -659,10 +660,10 @@ GROUP BY ref
     tags=("mview", "incremental", "osm"),
 )
 def q_ref_docs_incremental_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators/shape.apply_ref_docs_delta_capped does the
+    """operators/shape.apply_ref_docs_delta with ``cap`` does the
     maintenance; base/batch staging mirrors m9 (in production the old
     index is a table read)."""
-    from ..operators.shape import apply_ref_docs_delta_capped, build_ref_docs
+    from ..operators.shape import apply_ref_docs_delta, build_ref_docs
 
     raw = spark.read.schema(RAW_ELEMENT_SCHEMA).parquet(FIXTURE_PARQUET)
     docs = shape_documents(raw)
@@ -674,8 +675,8 @@ def q_ref_docs_incremental_capped(spark: SparkSession, sf_dir: str) -> DataFrame
         (id_l % 7 == 0) | ((id_l % 7 != 0) & (id_l % 11 != 0))
     )
     old_index = build_ref_docs(base, cap=1)
-    new_index = apply_ref_docs_delta_capped(
-        old_index, inserted, deleted, corpus_after, cap=1
+    new_index = apply_ref_docs_delta(
+        old_index, inserted, deleted, cap=1, corpus_after=corpus_after
     )
     return new_index.select(
         "_id",
@@ -692,7 +693,7 @@ def q_ref_docs_incremental_capped(spark: SparkSession, sf_dir: str) -> DataFrame
     "files (full doc payloads tagged _op), a foreachBatch query "
     "consumes them one micro-batch each, MERGEs the documents "
     "CowTable then lands the changes-only capped index delta "
-    "(ref_docs_delta_capped_changes) into the index CowTable with "
+    "(ref_docs_delta_changes with cap) into the index CowTable with "
     "batchId-keyed idempotence.  Oracle: the post-stream index table "
     "must equal a capped full rebuild over (base - deletes) + "
     "inserts -- the exact m10 oracle.",
@@ -1022,7 +1023,7 @@ def q_ref_docs_stream_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "m24_ref_docs_cdf_maintained",
     "The capped ref_docs index maintained FROM THE CORPUS TABLE'S OWN "
     "CHANGE FEED (streaming/change_feed + operators/shape."
-    "apply_ref_docs_delta_capped) -- incremental view maintenance "
+    "apply_ref_docs_delta with cap) -- incremental view maintenance "
     "with NO external CDC feed and NO pre-image corpus read: the "
     "documents CowTable is created with change_feed=True, the m15 "
     "insert/delete batch lands as two MERGE commits (one copy-on-"
@@ -1049,7 +1050,7 @@ def q_ref_docs_cdf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..operators.shape import apply_ref_docs_delta_capped, build_ref_docs
+    from ..operators.shape import apply_ref_docs_delta, build_ref_docs
     from ..sources.cow_table import CowTable
     from ..streaming.change_feed import stream_changes
 
@@ -1105,8 +1106,9 @@ def q_ref_docs_cdf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     removes = feed.filter(
         F.col("_change_type").isin("delete", "update_preimage")
     ).drop("_change_type")
-    maintained = apply_ref_docs_delta_capped(
-        build_ref_docs(base, cap=1), adds, removes, corpus.read(), cap=1
+    maintained = apply_ref_docs_delta(
+        build_ref_docs(base, cap=1), adds, removes,
+        cap=1, corpus_after=corpus.read(),
     )
     return maintained.select(
         "_id",

@@ -2121,11 +2121,14 @@ class CowTable:
         floor: new commits only carry files forward from the head);
         delete anything else -- a losing racer's or in-flight writer's
         output -- once older than ``orphan_grace_s`` (Delta's retention
-        window).  A version dir left without parquet files goes
-        wholesale; checkpoints below the newest one at or under the
-        floor are expired; no other ``_log/`` name (commit docs,
-        operators/lsh_store's ``prune_cal.json``) is touched.  Nothing
-        is committed; returns a summary dict."""
+        window).  A version dir this vacuum left without parquet files
+        goes wholesale; any other parquet-less version dir (an in-flight
+        writer's, whose output is still under ``_temporary/``) waits out
+        the same grace window by its mtime.  Checkpoints below the
+        newest one at or under the floor are expired; no other
+        ``_log/`` name (commit docs, operators/lsh_store's
+        ``prune_cal.json``) is touched.  Nothing is committed; returns
+        a summary dict."""
         latest = self.version()
         if latest < 0:
             raise FileNotFoundError(f"no CowTable at {self.path}")
@@ -2152,9 +2155,15 @@ class CowTable:
             vdirs = list(filter(os.path.isdir, _ls(root)))
             files = [f for d in vdirs for f in _ls(d) if f.endswith(".parquet")]
             out = sweep(files, expired)
-            for d in vdirs:
-                if not any(f.endswith(".parquet") for f in _ls(d)):
-                    shutil.rmtree(d, ignore_errors=True)
+            # A dir this sweep emptied goes now; any other parquet-less
+            # dir (an in-flight writer's, its output still under
+            # _temporary/) waits out the grace window like a file.
+            emptied = {os.path.dirname(f) for f in out[0]}
+            bare = [
+                d for d in vdirs
+                if not any(f.endswith(".parquet") for f in _ls(d))
+            ]
+            sweep(bare, emptied.__contains__)
             return out
 
         def below_floor(f: str) -> bool:  # its dir names its version

@@ -1,9 +1,9 @@
 """Streaming maintenance of the capped ref_docs index on mutable
 storage -- the production shape of m10/m11 (VERDICT r10 #2).
 
-The batch maintainers (operators/shape.apply_ref_docs_delta_capped,
-m10) and the mutable-storage landing (CowTable MERGE, m11) compose
-here into a continuously-maintained index: a document CDC stream
+The batch maintainer (operators/shape.apply_ref_docs_delta with
+``cap``, m10) and the mutable-storage landing (CowTable MERGE, m11)
+compose here into a continuously-maintained index: a document CDC stream
 (full doc payloads tagged ``_op`` = insert|delete, exactly what any
 CDC feed carries at delete time) drives ``foreachBatch``; each
 micro-batch
@@ -11,8 +11,8 @@ micro-batch
 1. MERGEs the document batch into the mutable ``documents`` CowTable
    (the corpus the capped refill path reads), then
 2. computes the changes-only capped index delta
-   (ref_docs_delta_capped_changes: upserts + emptied-posting delete
-   keys) against the index table's CURRENT snapshot, and
+   (ref_docs_delta_changes with ``cap``: upserts + emptied-posting
+   delete keys) against the index table's CURRENT snapshot, and
 3. MERGEs that delta into the index CowTable -- only files containing
    touched refs rewrite.
 
@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.shape import ref_docs_delta_capped_changes
+from ..operators.shape import ref_docs_delta_changes
 from ..sources.cow_table import CowTable
 
 _DOC_CDC_COLS = (
@@ -289,8 +289,8 @@ def ref_docs_maintenance_batch_applier(
                 F.min("ref").alias("lo"), F.max("ref").alias("hi")
             ).collect()[0]
             index_view = index.read_range("_id", renv["lo"], renv["hi"])
-            ups, del_keys = ref_docs_delta_capped_changes(
-                index_view, ins, old_docs, corpus.read(), cap
+            ups, del_keys = ref_docs_delta_changes(
+                index_view, ins, old_docs, cap=cap, corpus_after=corpus.read()
             )
             index.merge(ups, "_id", deletes=del_keys, retries=2, meta=meta)
         if maintain_every and (batch_id + 1) % maintain_every == 0:

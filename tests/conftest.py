@@ -11,6 +11,11 @@ if REPO not in sys.path:
 
 from data_wrangling_osm_xml_with_python_into_mongodb_spark.session import get_spark  # noqa: E402
 
+# The session factory pins -Xms to this (default 8g).  The suite's
+# fixtures are small, and a 4g heap leaves room on a shared box for a
+# second Spark process (an oracle or benchmark run) beside the tests.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 SF_SMOKE = "/root/testdata/sf0.001"
 
 

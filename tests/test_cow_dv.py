@@ -417,8 +417,8 @@ def test_dv_accumulation_guardrail(spark, tmp_path):
 def test_dv_cap_refusal_leaves_no_orphans(spark, tmp_path):
     """ADVICE r16: the cap refusal raises inside _commit AFTER the
     change files (dv delete) / change+data files (mor merge) were
-    written; the refusal path must remove those orphans so the raw
-    committed_only=False feed and the data dir stay clean."""
+    written; the refusal path must remove those orphans so the
+    changes and data dirs stay clean."""
     import os
 
     df = spark.range(60).selectExpr("id AS k", "id AS v").repartition(2)

@@ -306,6 +306,29 @@ def test_vacuum_orphan_grace(spark, table, tmp_path):
     assert table.read().count() == 40
 
 
+def test_vacuum_keeps_inflight_writer_output_in_grace(table):
+    """A writer still in flight keeps its output under its version
+    dir's ``_temporary/``, so the dir has no top-level parquet file
+    yet: vacuum must hold it for the grace window, not remove it as
+    an emptied dir, under ``data/`` and ``changes/`` alike."""
+    dirs = [
+        os.path.join(table.path, sub, "v1-abcd1234") for sub in ("data", "changes")
+    ]
+    for d in dirs:
+        part = os.path.join(
+            d, "_temporary", "0", "_temporary", "attempt_0",
+            "part-00000.snappy.parquet",
+        )
+        os.makedirs(os.path.dirname(part))
+        with open(part, "wb") as f:
+            f.write(b"not really parquet")
+    table.vacuum(retain_last=1, orphan_grace_s=86400.0)
+    assert all(map(os.path.isdir, dirs))
+    table.vacuum(retain_last=1, orphan_grace_s=0.0)
+    assert not any(map(os.path.exists, dirs))
+    assert table.read().count() == 40
+
+
 def test_vacuum_removes_tmp_leftovers(table):
     """A log writer killed between writing its ``_tmp_*`` file and the
     rename or link leaves that file in ``_log/``: vacuum removes it

@@ -149,15 +149,11 @@ def capped_corpus(spark):
 
 
 def test_capped_delta_equals_capped_rebuild(spark, capped_corpus):
-    from data_wrangling_osm_xml_with_python_into_mongodb_spark.operators.shape import (
-        apply_ref_docs_delta_capped,
-    )
-
     base, ins, del_ids = capped_corpus
     deleted = base.filter(F.col("_id").isin(del_ids))
     after = base.filter(~F.col("_id").isin(del_ids)).unionByName(ins)
-    out = apply_ref_docs_delta_capped(
-        build_ref_docs(base, cap=2), ins, deleted, after, cap=2
+    out = apply_ref_docs_delta(
+        build_ref_docs(base, cap=2), ins, deleted, cap=2, corpus_after=after
     )
     assert _canon_capped(out) == _canon_capped(build_ref_docs(after, cap=2))
     # n1's refill must pull the batch-inserted w0 into the prefix
@@ -170,10 +166,6 @@ def test_capped_delta_equals_capped_rebuild(spark, capped_corpus):
 
 
 def test_capped_delta_batch_order_invariance(spark, capped_corpus):
-    from data_wrangling_osm_xml_with_python_into_mongodb_spark.operators.shape import (
-        apply_ref_docs_delta_capped,
-    )
-
     base, ins, del_ids = capped_corpus
     deleted = base.filter(F.col("_id").isin(del_ids))
     survivors = base.filter(~F.col("_id").isin(del_ids))
@@ -181,16 +173,18 @@ def test_capped_delta_batch_order_invariance(spark, capped_corpus):
     empty = base.filter(F.lit(False))
     idx0 = build_ref_docs(base, cap=2)
 
-    combined = apply_ref_docs_delta_capped(idx0, ins, deleted, after, cap=2)
+    combined = apply_ref_docs_delta(
+        idx0, ins, deleted, cap=2, corpus_after=after
+    )
     mid_i = base.unionByName(ins)  # corpus after inserts-only batch
-    i_then_d = apply_ref_docs_delta_capped(
-        apply_ref_docs_delta_capped(idx0, ins, empty, mid_i, cap=2),
-        empty, deleted, after, cap=2,
+    i_then_d = apply_ref_docs_delta(
+        apply_ref_docs_delta(idx0, ins, empty, cap=2, corpus_after=mid_i),
+        empty, deleted, cap=2, corpus_after=after,
     )
     mid_d = survivors  # corpus after deletes-only batch
-    d_then_i = apply_ref_docs_delta_capped(
-        apply_ref_docs_delta_capped(idx0, empty, deleted, mid_d, cap=2),
-        ins, empty, after, cap=2,
+    d_then_i = apply_ref_docs_delta(
+        apply_ref_docs_delta(idx0, empty, deleted, cap=2, corpus_after=mid_d),
+        ins, empty, cap=2, corpus_after=after,
     )
     want = _canon_capped(build_ref_docs(after, cap=2))
     assert _canon_capped(combined) == want
@@ -198,11 +192,14 @@ def test_capped_delta_batch_order_invariance(spark, capped_corpus):
     assert _canon_capped(d_then_i) == want
 
 
-def test_cow_maintenance_equals_rebuild(spark, corpus, tmp_path):
+@pytest.mark.parametrize("cap", [None, 1], ids=["uncapped", "capped"])
+def test_cow_maintenance_equals_rebuild(spark, corpus, tmp_path, cap):
     """End-to-end mutable-storage maintenance: changes-only delta
     (upserts + emptied-posting delete keys) through CowTable.merge
     must leave the table equal to a full rebuild, with untouched
-    files carried by reference (files_kept > 0)."""
+    files carried by reference (files_kept > 0).  Capped at 1, n3's
+    stored prefix [w2] loses its only entry while wh0/wh1 still refer
+    to it, so the exact refill from ``corpus_after`` binds."""
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.operators.shape import (
         ref_docs_delta_changes,
     )
@@ -214,20 +211,29 @@ def test_cow_maintenance_equals_rebuild(spark, corpus, tmp_path):
     # Pad with ways whose refs the batch never touches, spread over 8
     # files: the batch touches ≤4 refs (n2, n3, n5, n9), so at most 4
     # files can be rewritten and files_kept ≥ 4 DETERMINISTICALLY.
+    # wh0/wh1 add referrers to n3 only, so no new ref appears.
     pad = _docs(
-        spark, [(f"wp{i}", "way", [f"np{i}"], None) for i in range(32)]
+        spark,
+        [(f"wp{i}", "way", [f"np{i}"], None) for i in range(32)]
+        + [(f"wh{i}", "way", ["n3"], None) for i in range(2)],
     )
     base = base.unionByName(pad)
     deleted = base.filter(F.col("_id").isin(del_b_ids))
     survivors = base.filter(~F.col("_id").isin(del_b_ids))
+    after = survivors.unionByName(ins_a)
     table = CowTable.create(
         spark, str(tmp_path / "ref_docs"),
-        build_ref_docs(base).repartition(8, "_id"),
+        build_ref_docs(base, cap=cap).repartition(8, "_id"),
     )
-    ups, dels = ref_docs_delta_changes(table.read(), ins_a, deleted)
+    if cap is not None:
+        with pytest.raises(ValueError, match="corpus_after"):
+            ref_docs_delta_changes(table.read(), ins_a, deleted, cap=cap)
+    ups, dels = ref_docs_delta_changes(
+        table.read(), ins_a, deleted, cap=cap, corpus_after=after
+    )
     stats = table.merge(ups, "_id", deletes=dels)
-    want = _canon(build_ref_docs(survivors.unionByName(ins_a)))
-    assert _canon(table.read()) == want
+    canon = _canon if cap is None else _canon_capped
+    assert canon(table.read()) == canon(build_ref_docs(after, cap=cap))
     # n9 empties out (sole referrer w9 deleted) -> a real delete key
     assert stats["delete_keys"] >= 1
     assert stats["files_kept"] >= 4

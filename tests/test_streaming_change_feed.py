@@ -6,8 +6,8 @@ downstream consumer the table's row-level mutations live.  Pinned:
   ``read_changes(1, head)`` returns, types and versions included;
 * incrementality: a second drain over the same checkpoint delivers
   ONLY commits that landed in between;
-* committed-only validation: a losing racer's orphaned change dir is
-  dropped by ``committed_changes`` while real rows survive;
+* committed-only validation: the stream drops a losing racer's
+  orphaned change dirs executor-side while real rows survive;
 * the feed-disabled table is rejected at stream construction.
 """
 
@@ -26,7 +26,6 @@ from data_wrangling_osm_xml_with_python_into_mongodb_spark.sources.cow_table imp
     CowTable,
 )
 from data_wrangling_osm_xml_with_python_into_mongodb_spark.streaming.change_feed import (  # noqa: E402
-    committed_changes,
     stream_changes,
 )
 
@@ -97,47 +96,10 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     ]
 
 
-def test_committed_changes_drops_orphan_racer_files(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.merge(spark.createDataFrame([(1, -1)], "k long, v long"), "k")
-    # stage a losing racer's orphan: a change dir no commit references
-    orphan = os.path.join(t.path, "changes", "v1-deadbeef")
-    spark.createDataFrame(
-        [(999, 999, "insert")], "k long, v long, _change_type string"
-    ).coalesce(1).write.parquet(orphan)
-
-    raw_rows: list = []
-    kept_rows: list = []
-
-    def absorb(batch_df, _bid):
-        raw_rows.extend(
-            tuple(r) for r in batch_df.select("k", "_change_type").collect()
-        )
-        kept_rows.extend(
-            tuple(r)
-            for r in committed_changes(batch_df, t)
-            .select("k", "_change_type")
-            .collect()
-        )
-
-    q = (
-        stream_changes(spark, t.path, committed_only=False)
-        .writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert (999, "insert") in raw_rows  # the raw feed DID win the race
-    assert (999, "insert") not in kept_rows  # ...and validation drops it
-    assert (1, "update_preimage") in kept_rows
-    assert (1, "update_postimage") in kept_rows
-
-
 def test_default_stream_is_committed_only(spark, tmp_path):
     """VERDICT r15 missing #4: the multi-writer race window closes
-    WITHOUT the consumer calling committed_changes -- the default
-    stream validates against the log executor-side."""
+    without any consumer-side filter -- the stream validates against
+    the log executor-side."""
     t = _mk(spark, tmp_path)
     t.merge(spark.createDataFrame([(1, -1)], "k long, v long"), "k")
     # a losing racer's orphan under the COMMITTED version's number:

@@ -3,7 +3,7 @@
 A document CDC stream (full payloads tagged _op=insert|delete) drives
 foreachBatch: each micro-batch MERGEs into the mutable documents
 CowTable, then lands the changes-only capped index delta
-(ref_docs_delta_capped_changes) into the index CowTable.  Pinned here:
+(ref_docs_delta_changes with ``cap``) into the index CowTable.  Pinned here:
 
 * stream result == capped full rebuild (m10's oracle shape) after
   every batch is consumed;
@@ -536,7 +536,7 @@ def test_foreign_commit_mid_batch_forces_rebase_and_converges(spark, staged):
 
 def test_feed_driven_maintenance_streamed(spark, tmp_path):
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.operators.shape import (
-        apply_ref_docs_delta_capped,
+        apply_ref_docs_delta,
     )
     from data_wrangling_osm_xml_with_python_into_mongodb_spark.streaming.change_feed import (
         stream_changes,
@@ -613,8 +613,9 @@ def test_feed_driven_maintenance_streamed(spark, tmp_path):
             # refill corpus = the snapshot AS OF this commit (time
             # travel), so delivery applies each commit against
             # exactly the state it produced.
-            state["idx"] = apply_ref_docs_delta_capped(
-                state["idx"], adds, rems, corpus.read(version=v), cap=CAP
+            state["idx"] = apply_ref_docs_delta(
+                state["idx"], adds, rems,
+                cap=CAP, corpus_after=corpus.read(version=v),
             ).localCheckpoint(eager=True)
             state["versions"].append(v)
 
